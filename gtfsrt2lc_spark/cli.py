@@ -41,7 +41,7 @@ import time
 import zipfile
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 STATIC_TABLES = ["stops", "routes", "trips", "stop_times", "calendar"]
@@ -217,32 +217,42 @@ def run_rt2lc(args: argparse.Namespace, spark: SparkSession) -> int:
     t1 = time.monotonic()
     conns = pipe.connections(updates)
 
+    store = fresh = None
     if args.history:
+        # persisted: both the output write and the history commit read it
         store = HistoryStore(spark, args.history)
-        fresh = store.filter_new(conns).persist()
-        fresh.count()
-        store.commit(fresh)
-        conns = fresh
+        fresh = conns = store.filter_new(conns).persist()
+        emitted = Observation()
+        conns = conns.observe(emitted, F.count(F.lit(1)).alias("rows"))
 
     out = args.output
     fmt = args.format
-    if fmt == "json":
-        _write_json(conns, out)
-    elif fmt == "jsonld":
-        write_connections_jsonld(conns, uris, out)
-    elif fmt == "csv":
-        _write_csv(conns, out)
-    elif fmt in ("turtle", "ntriples"):
-        quads = connections_to_quads(conns, uris)
-        if fmt == "turtle":
-            write_turtle(quads, out, obj_datatype="obj_datatype")
+    try:
+        if fmt == "json":
+            _write_json(conns, out)
+        elif fmt == "jsonld":
+            write_connections_jsonld(conns, uris, out)
+        elif fmt == "csv":
+            _write_csv(conns, out)
+        elif fmt in ("turtle", "ntriples"):
+            quads = connections_to_quads(conns, uris)
+            if fmt == "turtle":
+                write_turtle(quads, out, obj_datatype="obj_datatype")
+            else:
+                to_nquads_lines(
+                    quads, graph=None, obj_datatype="obj_datatype"
+                ).write.mode("overwrite").text(out)
         else:
-            to_nquads_lines(
-                quads, graph=None, obj_datatype="obj_datatype"
-            ).write.mode("overwrite").text(out)
-    else:
-        print(f"unknown format: {fmt}", file=sys.stderr)
-        return 2
+            print(f"unknown format: {fmt}", file=sys.stderr)
+            return 2
+        # the output lands BEFORE the commit: a crash in the write leaves the
+        # history untouched, so a re-poll re-emits the full set. A poll that
+        # emitted nothing commits nothing.
+        if store is not None and emitted.get["rows"]:
+            store.commit(fresh)
+    finally:
+        if fresh is not None:
+            fresh.unpersist()
     t_conv = time.monotonic() - t1
     print(
         f"Linked Connections conversion process took {t_conv * 1000:.0f} ms",

@@ -11,13 +11,13 @@ here), re-expressed as DataFrame plans:
   service day / start (F3/F4)   lib/Gtfsrt2LC.js:113-142      Column exprs; findTripStartDate takes explicit as_of
   dim joins (J1-J4, P3)         lib/Gtfsrt2LC.js:98-111       broadcast hash joins, inner (silent drop)
   repair + pairing (W1-W10,P6)  lib/Gtfsrt2LC.js:438-665      one Arrow mapInPandas pass per update row
-  history dedup (J6/T3)         lib/Gtfsrt2LC.js:667-751      keyed parquet store + anti-join + upsert
+  history dedup (J6/T3)         lib/Gtfsrt2LC.js:667-751      parquet delta log (LSM-style) + left join, latest gen wins
   12-quad explode (S10)         lib/Connections2Triples.js    sources/gtfs_serializers.py
 
 Scale notes: dimensions broadcast (they are the reference's in-heap Maps);
 the only wide operations are the updates-side shuffle for deduction
 (keyed by route_id — AQE skew-join splits hot routes) and the history
-anti-join (keyed by connection rule). The repair pass is Arrow-batched and
+join (keyed by connection rule). The repair pass is Arrow-batched and
 embarrassingly parallel across update rows.
 """
 
@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 from datetime import datetime, timezone
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -539,47 +540,67 @@ class Gtfsrt2LCPipeline:
         return out
 
 
+# A commit compacts the store into one generation once this many are live.
+# Compaction rewrites the whole store, so its cost is spread over the delta
+# commits before it; a read resolves at most this many generations.
+MAX_GENERATIONS = 8
+
+
 class HistoryStore:
     """J6/T3: differential connection store (ref lib/Gtfsrt2LC.js:667-751).
 
     Parquet-backed key/value state: key = the 9-part connection rule
     (ref :686-696), sub-key = service date, value = (depDelay, arrDelay,
-    type). ``filter_new`` anti-joins unchanged connections; ``commit``
-    upserts the new states. Second identical run emits 0 (ref test :156).
+    type). ``filter_new`` keeps the connections whose state differs from
+    the stored one; ``commit`` records the new states. Second identical run
+    emits 0 (ref test :156).
 
-    Layout — bucketed generations committed by monotonically-named manifests
-    (the reference does LevelDB point upserts; the Spark-native analog is
-    bucket-granular rewrite instead of full-store rewrite):
+    Layout — an append-only log of generations, the Spark-native analog of
+    the reference's LevelDB (an LSM store, where a write touches only what
+    changed):
 
     .. code-block:: text
 
-        <path>/manifest-<seq>.json      # {"n_buckets", "seq", "gens": {gen: [buckets]}}
-        <path>/data/gen-<seq>/bucket=N/ # parquet, partitioned by bucket
+        <path>/manifest-<seq>.json  # {"seq": N, "generations": [oldest, ..., newest]}
+        <path>/data/gen-<seq>/      # parquet, unpartitioned, one row per key
 
-    ``commit`` rewrites ONLY buckets containing fresh keys (O(changed
-    buckets), not O(total history) — each key's bucket is
-    ``pmod(xxhash64(rule_key), n_buckets)``), writes them to generation dir
-    ``gen-<seq+1>`` FIRST (``mode("overwrite")`` so a crashed attempt's
-    orphan at the same name never blocks the retry), then writes
-    ``manifest-<seq+1>.json`` — the COMMIT POINT. The manifest lands via
-    tmp + rename to a name that never pre-exists, so it is all-or-nothing;
-    readers resolve the highest manifest sequence, which means there is no
-    mutable pointer file and no delete-before-rename crash window (a commit
-    either fully happened — its manifest is complete and its data was
-    written before it — or left only orphans the next commit overwrites and
-    vacuums). All path operations go through the Hadoop FileSystem API so
-    the protocol works on HDFS/S3A, not just the local filesystem.
+    A generation holds one state per ``(rule_key, service_day)``; a key's
+    live state is its row in the newest generation that holds it. ``commit``
+    writes only the delta — the fresh states — as generation ``gen-<seq+1>``,
+    so its cost follows the change, not the store. Compaction: once
+    ``MAX_GENERATIONS`` generations are live, the commit instead writes the
+    resolved state of all of them plus the delta as the one live
+    generation. Reads therefore resolve at most ``MAX_GENERATIONS``
+    generations, and the store holds that many directories however many
+    polls ran.
+
+    Commit point: the generation data is written FIRST (``mode("overwrite")``
+    so a crashed attempt's orphan at the same name never blocks the retry),
+    then ``manifest-<seq+1>.json`` LAST. The manifest lands via tmp + rename
+    to a name that never pre-exists, so it is all-or-nothing; readers
+    resolve the highest manifest sequence, which means there is no mutable
+    pointer file and no delete-before-rename crash window. A commit either
+    fully happened or left only orphans that readers ignore and the next
+    commit overwrites or vacuums. An empty delta commits nothing: no
+    generation, no manifest. All path operations go through the Hadoop
+    FileSystem API so the protocol works on HDFS/S3A, not just the local
+    filesystem.
+
+    A store in the retired bucketed layout (its manifest has ``n_buckets``
+    and per-generation bucket lists) raises ``ValueError``: reading it as
+    empty would re-emit every connection. There is no migration; delete the
+    store to re-seed it.
     """
 
     _SCHEMA = (
         "rule_key string, service_day string, departure_delay bigint, "
         "arrival_delay bigint, type string"
     )
+    _COLS = ["rule_key", "service_day", "departure_delay", "arrival_delay", "type"]
 
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64) -> None:
+    def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path.rstrip("/")
-        self.n_buckets = n_buckets
 
     @staticmethod
     def rule_key(conns: DataFrame) -> DataFrame:
@@ -607,18 +628,15 @@ class HistoryStore:
         )
         return conns.withColumn("rule_key", key)
 
-    def _bucket(self, rule_key):
-        return F.pmod(F.xxhash64(rule_key), F.lit(self.n_buckets)).cast("int")
-
     def _manifest(self) -> dict:
         """Live manifest = the highest ``manifest-<seq>.json`` present, or a
         fresh empty one when none exists. Manifests appear atomically under
         never-reused names, so the highest sequence is always a completed
         commit (its generation data is written before it). Any read failure
-        past this point (unreadable manifest, missing data it references)
-        raises — a corrupted store must surface, not silently reset all
-        differential history (every connection would re-emit on the next
-        poll)."""
+        past this point (unreadable or old-layout manifest, missing data it
+        references) raises — a corrupted store must surface, not silently
+        reset all differential history (every connection would re-emit on
+        the next poll)."""
         from gtfsrt2lc_spark.functions import hadoop_fs as hfs
 
         names = [
@@ -627,46 +645,56 @@ class HistoryStore:
             if n.endswith(".json")  # skip a crashed write's partial .tmp
         ]
         if not names:
-            return {"n_buckets": self.n_buckets, "seq": 0, "gens": {}}
+            return {"seq": 0, "generations": []}
         # max by PARSED sequence: %06d stops zero-padding past 999999, so a
         # lexicographic max would pick manifest-999999 over manifest-1000000
         live = max(names, key=lambda n: int(n[len("manifest-"):-len(".json")]))
         m = json.loads(hfs.read_text(self.spark, f"{self.path}/{live}"))
-        self.n_buckets = int(m["n_buckets"])  # stay consistent across commits
+        if "n_buckets" in m or not isinstance(m.get("generations"), list):
+            raise ValueError(
+                f"history store {self.path}: {live} is not a delta-log "
+                "manifest (the retired bucketed layout has 'n_buckets' and "
+                "per-generation bucket lists). It is not read as empty, "
+                "because that would re-emit every connection; delete the "
+                "store to re-seed it."
+            )
         return m
 
-    def _read(self, manifest: dict | None = None, buckets: list[int] | None = None) -> DataFrame:
-        """Current state, optionally restricted to a bucket subset (bucket is
-        a partition column, so the restriction prunes files, not just rows)."""
-        m = manifest if manifest is not None else self._manifest()
-        schema = self._SCHEMA + ", bucket int"
-        parts = []
-        for gen, live in m["gens"].items():
-            want = live if buckets is None else sorted(set(live) & set(buckets))
-            if not want:
-                continue
-            df = self.spark.read.schema(schema).parquet(f"{self.path}/data/{gen}")
-            parts.append(df.where(F.col("bucket").isin(want)))
-        if not parts:
-            return self.spark.createDataFrame([], schema)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def _generation(self, gen: str) -> DataFrame:
+        return self.spark.read.schema(self._SCHEMA).parquet(f"{self.path}/data/{gen}")
+
+    @staticmethod
+    def _latest(gens: list[DataFrame]) -> DataFrame:
+        """Latest state per key across generations listed oldest first: a
+        key's row in a later generation wins. Each generation holds one row
+        per key, so a single generation needs no resolution."""
+        if len(gens) == 1:
+            return gens[0]
+        tagged = reduce(
+            DataFrame.unionByName,
+            [g.withColumn("_gen", F.lit(i)) for i, g in enumerate(gens)],
+        )
+        state = F.struct("departure_delay", "arrival_delay", "type")
+        return (
+            tagged.groupBy("rule_key", "service_day")
+            .agg(F.max_by(state, "_gen").alias("_s"))
+            .select("rule_key", "service_day", "_s.*")
+        )
 
     def state(self) -> DataFrame:
         """Current committed state: one row per (rule_key, service_day) with
         (departure_delay, arrival_delay, type) — the baseline a differential
         pass compares against (public accessor for the streaming one-pass
         micro-batch, streaming/gtfs.py)."""
-        return self._read().select(
-            "rule_key", "service_day", "departure_delay", "arrival_delay", "type"
-        )
+        gens = self._manifest()["generations"]
+        if not gens:
+            return self.spark.createDataFrame([], self._SCHEMA)
+        return self._latest([self._generation(g) for g in gens])
 
     def filter_new(self, conns: DataFrame) -> DataFrame:
         """Keep connections that are new or changed vs the store."""
         keyed = self.rule_key(conns)
-        hist = self._read().select(
+        hist = self.state().select(
             "rule_key", "service_day",
             F.col("departure_delay").alias("_h_dep"),
             F.col("arrival_delay").alias("_h_arr"),
@@ -684,63 +712,50 @@ class HistoryStore:
     def commit(self, fresh_keyed: DataFrame, vacuum: bool = True) -> None:
         """Upsert: latest state per (rule_key, service_day).
 
-        Rewrites only the buckets that contain fresh keys: untouched buckets'
-        files are never read or rewritten. The new generation data is written
-        FIRST (mode("overwrite"): a crashed earlier attempt may have left an
-        orphan at the same gen-<seq+1> name, which must not block the retry);
-        writing manifest-<seq+1>.json LAST is the atomic commit point, so a
-        crash anywhere beforehand leaves the previous store live.
+        Writes one generation holding only the fresh states — or, once
+        ``MAX_GENERATIONS`` are live, the compacted whole store — then the
+        manifest naming it (the commit point), then vacuums what the new
+        manifest no longer references. One write job either way; the
+        delta's row count is observed on that write, and an empty delta
+        deletes the written directory and commits nothing.
         """
+        from pyspark.sql import Observation
+
         from gtfsrt2lc_spark.functions import hadoop_fs as hfs
 
         m = self._manifest()
-        new_states = (
-            fresh_keyed.select(
-                "rule_key", "service_day", "departure_delay", "arrival_delay", "type"
-            )
-            .dropDuplicates(["rule_key", "service_day"])
-            .withColumn("bucket", self._bucket(F.col("rule_key")))
-        )
-        affected = sorted(
-            r["bucket"] for r in new_states.select("bucket").distinct().collect()
-        )  # <= n_buckets rows — bounded driver collect
-        if not affected:
-            return
-        old = self._read(m, buckets=affected)
-        merged = new_states.unionByName(
-            old.join(
-                new_states.select("rule_key", "service_day"),
-                ["rule_key", "service_day"],
-                "left_anti",
-            )
-        )
         seq = int(m["seq"]) + 1
         gen = f"gen-{seq:06d}"
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{self.path}/data/{gen}"
+        obs = Observation()
+        delta = (
+            fresh_keyed.select(*self._COLS)
+            .dropDuplicates(["rule_key", "service_day"])
+            .observe(obs, F.count(F.lit(1)).alias("rows"))
         )
-
-        moved = set(affected)
-        gens = {
-            g: [b for b in bs if b not in moved] for g, bs in m["gens"].items()
-        }
-        gens = {g: bs for g, bs in gens.items() if bs}
-        gens[gen] = affected
+        live = list(m["generations"])
+        if len(live) >= MAX_GENERATIONS:
+            delta = self._latest([self._generation(g) for g in live] + [delta])
+            live = []
+        delta.write.mode("overwrite").parquet(f"{self.path}/data/{gen}")
+        if not obs.get["rows"]:
+            hfs.delete(self.spark, f"{self.path}/data/{gen}")
+            return
+        live.append(gen)
         # COMMIT POINT: a fresh-named manifest appears atomically; readers
         # resolve the highest sequence, so no mutable pointer file exists
         hfs.write_text_atomic(
             self.spark,
             f"{self.path}/manifest-{seq:06d}.json",
-            json.dumps({"n_buckets": self.n_buckets, "seq": seq, "gens": gens}),
+            json.dumps({"seq": seq, "generations": live}),
         )
         if vacuum:
-            self._vacuum(gens, seq)
+            self._vacuum(live, seq)
 
-    def _vacuum(self, live_gens: dict, live_seq: int) -> None:
-        """Drop generation dirs the live manifest no longer references,
-        manifests below the live sequence, and any legacy pointer file.
-        Safe because readers resolve the highest manifest and the
-        sequential poll loop has no concurrent reader mid-plan."""
+    def _vacuum(self, live_gens: list[str], live_seq: int) -> None:
+        """Drop generation dirs the live manifest no longer references and
+        manifests below the live sequence. Safe because readers resolve the
+        highest manifest and the sequential poll loop has no concurrent
+        reader mid-plan."""
         from gtfsrt2lc_spark.functions import hadoop_fs as hfs
 
         for gen in hfs.list_dirs(self.spark, f"{self.path}/data"):
@@ -750,5 +765,3 @@ class HistoryStore:
         for name in hfs.list_files(self.spark, self.path, prefix="manifest-"):
             if name != live_name:
                 hfs.delete(self.spark, f"{self.path}/{name}")
-        if hfs.exists(self.spark, f"{self.path}/_CURRENT"):  # legacy pointer
-            hfs.delete(self.spark, f"{self.path}/_CURRENT")

@@ -18,6 +18,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """16g, or a quarter of physical memory if that is less. The JVM grows
+    its heap lazily up to the cap, so a 16g default on a 16 GB host lets one
+    long test session reach the kernel's OOM killer; a quarter leaves room
+    for the Python workers and the rest of the host."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
+        return "16g"
+    return f"{max(1024, min(16 * 1024, phys // 4 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "gtfsrt2lc_spark",
     master: str | None = None,
@@ -28,7 +40,8 @@ def get_spark(
     """Build (or fetch) the session. Env overrides:
 
     SPARK_GRAFT_CPUS   -> local[N] parallelism (default local[*])
-    SPARK_GRAFT_DRIVER_MEM -> driver memory (default 16g)
+    SPARK_GRAFT_DRIVER_MEM -> driver memory (default 16g, capped at a
+                              quarter of physical memory)
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -37,7 +50,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else 32
     if driver_memory is None:
-        driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
 
     builder = (
         SparkSession.builder.master(master)

@@ -149,3 +149,41 @@ def test_cli_error_paths(staged, spark, tmp_path):
              "-o", str(tmp_path / "e2")],
             spark=spark,
         )
+
+
+def test_cli_history_polls_release_their_cache(staged, spark, tmp_path):
+    """Each --history poll persists its fresh connections for the output
+    write and the commit, then unpersists them: N polls on one long-lived
+    session leave the persisted-RDD count where it started."""
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    hist = str(tmp_path / "history")
+    for i in range(3):
+        _run(staged, spark, tmp_path / f"p{i}", "-f", "json", "--history", hist)
+        assert persistent().size() == before
+
+
+def test_cli_crash_in_output_write_keeps_history(staged, spark, tmp_path, monkeypatch):
+    """The output is written before the history commit: a crash in the
+    output write (after filter_new) commits nothing, so the re-poll
+    re-emits the full set, and the crashed poll's cache is still released."""
+    import gtfsrt2lc_spark.cli as cli
+
+    full = _run(staged, spark, tmp_path / "plain", "-f", "json")
+    hist = str(tmp_path / "history")
+    real = cli._write_json
+
+    def crash(conns, out):
+        real(conns, out)
+        raise RuntimeError("injected crash in the output write")
+
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    with monkeypatch.context() as m:
+        m.setattr(cli, "_write_json", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            _run(staged, spark, tmp_path / "crashed", "-f", "json", "--history", hist)
+    assert persistent().size() == before
+    again = _run(staged, spark, tmp_path / "again", "-f", "json", "--history", hist)
+    assert sorted(again) == sorted(full)
+    assert _run(staged, spark, tmp_path / "zero", "-f", "json", "--history", hist) == []

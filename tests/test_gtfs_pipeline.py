@@ -155,13 +155,29 @@ def _data_files(root):
     }
 
 
-def test_history_commit_is_bucket_granular(spark, tmp_path):
-    """A commit with disjoint keys never touches existing files: new state
-    lands in a brand-new generation dir holding ONLY the affected buckets,
-    and every pre-existing parquet file stays byte-identical (the O(changed
-    buckets) rewrite contract, vs round-1's O(total history))."""
+def _manifest_files(root):
+    import pathlib
+
+    return sorted(p.name for p in pathlib.Path(root).glob("manifest-*"))
+
+
+def _gen_dirs(root):
+    import pathlib
+
+    return sorted(p.name for p in (pathlib.Path(root) / "data").iterdir())
+
+
+def _delays(store):
+    return {r["rule_key"]: r["departure_delay"] for r in store.state().collect()}
+
+
+def test_history_commit_writes_only_the_delta(spark, tmp_path):
+    """A commit never touches existing files: the new state lands in a
+    brand-new generation dir holding ONLY the committed delta, and every
+    pre-existing parquet file stays byte-identical (the O(change) write
+    contract, vs round-1's O(total history) rewrite)."""
     root = str(tmp_path / "hist")
-    store = HistoryStore(spark, root, n_buckets=8)
+    store = HistoryStore(spark, root)
     store.commit(_states(spark, [f"a{i}" for i in range(20)]))
     before = _data_files(root)
     assert before
@@ -172,61 +188,153 @@ def test_history_commit_is_bucket_granular(spark, tmp_path):
         assert path in after, f"pre-existing file removed: {path}"
         assert after[path] == blob, f"pre-existing file rewritten: {path}"
 
-    # the new generation contains exactly the buckets the b-keys hash to
-    m = store._manifest()
-    gen2 = f"gen-{m['seq']:06d}"
-    b_buckets = {
-        r["bucket"]
-        for r in _states(spark, [f"b{i}" for i in range(5)])
-        .select(store._bucket(F.col("rule_key")).alias("bucket"))
-        .distinct()
-        .collect()
+    # the new generation contains exactly the delta's rows
+    gens = store._manifest()["generations"]
+    assert gens == ["gen-000001", "gen-000002"]
+    delta = spark.read.parquet(f"{root}/data/gen-000002")
+    assert {(r["rule_key"], r["departure_delay"]) for r in delta.collect()} == {
+        (f"b{i}", 120) for i in range(5)
     }
-    assert set(m["gens"][gen2]) == b_buckets
-    assert store._read().count() == 25
+    assert store.state().count() == 25
 
 
 def test_history_upsert_and_vacuum(spark, tmp_path):
-    """Re-committing a key supersedes its old state; fully-superseded
-    generations are garbage-collected; an orphan generation dir (crash after
-    data write, before pointer flip) is invisible to readers and cleaned by
-    the next commit."""
+    """Re-committing a key supersedes its old state; an orphan generation dir
+    (crash after data write, before the manifest) is invisible to readers
+    and cleaned by the next commit; an orphan squatting on the next
+    generation's name is overwritten by the retry."""
     import pathlib
 
     root = str(tmp_path / "hist")
-    store = HistoryStore(spark, root, n_buckets=4)
+    store = HistoryStore(spark, root)
     store.commit(_states(spark, ["k1", "k2"], dep=10))
     store.commit(_states(spark, ["k1", "k2"], dep=99))  # supersede everything
-    rows = {r["rule_key"]: r["departure_delay"] for r in store._read().collect()}
-    assert rows == {"k1": 99, "k2": 99}
-    gens = [p.name for p in (pathlib.Path(root) / "data").iterdir()]
-    assert gens == ["gen-000002"]  # gen-000001 fully superseded -> vacuumed
+    assert _delays(store) == {"k1": 99, "k2": 99}
 
     # crash simulation A: orphan generation written, manifest never written
     orphan = pathlib.Path(root) / "data" / "gen-999999"
-    _states(spark, ["junk"]).withColumn(
-        "bucket", store._bucket(F.col("rule_key"))
-    ).write.partitionBy("bucket").parquet(str(orphan))
-    assert store._read().count() == 2  # reader ignores the orphan
+    _states(spark, ["junk"]).write.parquet(str(orphan))
+    assert store.state().count() == 2  # reader ignores the orphan
     store.commit(_states(spark, ["k3"], dep=5))
     assert not orphan.exists()  # next commit vacuums it
-    assert store._read().count() == 3
+    assert store.state().count() == 3
 
     # crash simulation B: the orphan squats on the NEXT sequence's gen name
     # (crash mid-commit); the retry must overwrite it, not fail on
     # path-already-exists, and must not surface the orphan's junk rows
     m = store._manifest()
     colliding = pathlib.Path(root) / "data" / f"gen-{int(m['seq']) + 1:06d}"
-    _states(spark, ["junk2"]).withColumn(
-        "bucket", store._bucket(F.col("rule_key"))
-    ).write.partitionBy("bucket").parquet(str(colliding))
+    _states(spark, ["junk2"]).write.parquet(str(colliding))
     store.commit(_states(spark, ["k4"], dep=7))
-    rows = {r["rule_key"] for r in store._read().collect()}
-    assert rows == {"k1", "k2", "k3", "k4"}
+    assert _delays(store) == {"k1": 99, "k2": 99, "k3": 5, "k4": 7}
 
-    # a stale manifest file and a partial .tmp are vacuumed / ignored
-    assert [p.name for p in pathlib.Path(root).glob("manifest-*")] == [
-        f"manifest-{store._manifest()['seq']:06d}.json"
+    # stale manifests are vacuumed; data dirs are exactly the live ones
+    assert _manifest_files(root) == [f"manifest-{store._manifest()['seq']:06d}.json"]
+    assert _gen_dirs(root) == store._manifest()["generations"]
+
+
+def test_history_empty_commit_writes_nothing(spark, tmp_path):
+    """An empty delta commits nothing: no generation dir, no manifest."""
+    root = str(tmp_path / "hist")
+    store = HistoryStore(spark, root)
+    store.commit(_states(spark, []))
+    assert _manifest_files(root) == []
+    store.commit(_states(spark, ["k1"]))
+    store.commit(_states(spark, []))
+    assert _manifest_files(root) == ["manifest-000001.json"]
+    assert _gen_dirs(root) == ["gen-000001"]
+
+
+def test_history_generations_stay_bounded(spark, tmp_path):
+    """More commits than the generation cap, with overlapping keys: the live
+    generation count never exceeds the cap, the state always equals a plain
+    dict replay of the commits, and superseded generations and stale
+    manifests are vacuumed."""
+    from gtfsrt2lc_spark.plans.gtfs import MAX_GENERATIONS
+
+    root = str(tmp_path / "hist")
+    store = HistoryStore(spark, root)
+    replay: dict[str, int] = {}
+    compacted = False
+    for i in range(2 * MAX_GENERATIONS + 3):
+        keys = [f"k{j}" for j in range(i, i + 4)]  # 3 keys overlap the last commit
+        store.commit(_states(spark, keys, dep=i))
+        replay.update({k: i for k in keys})
+        live = store._manifest()["generations"]
+        assert 1 <= len(live) <= MAX_GENERATIONS
+        compacted |= i > 0 and len(live) == 1
+        assert _delays(store) == replay
+        assert _gen_dirs(root) == live
+        assert _manifest_files(root) == [f"manifest-{i + 1:06d}.json"]
+    assert compacted
+
+
+def test_history_crash_before_manifest(spark, pipeline, tmp_path, monkeypatch):
+    """A crash after the delta write and before the manifest: the orphan is
+    invisible to filter_new, the retry overwrites it and lands the same
+    state as an uncrashed store, and no orphan survives the retry."""
+    from gtfsrt2lc_spark.functions import hadoop_fs
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash before the manifest write")
+
+    gap = pipeline.connections(decode_feed_df(G.spark_feed(spark, G.gap_feed())))
+    cancel = pipeline.connections(
+        decode_feed_df(G.spark_feed(spark, G.cancellation_feed()))
+    )
+    clean = HistoryStore(spark, str(tmp_path / "clean"))
+    store = HistoryStore(spark, str(tmp_path / "hist"))
+    for s in (clean, store):
+        s.commit(s.filter_new(gap))
+    n_fresh = clean.filter_new(cancel).count()
+    assert n_fresh > 0
+    clean.commit(clean.filter_new(cancel))
+
+    with monkeypatch.context() as m:
+        m.setattr(hadoop_fs, "write_text_atomic", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            store.commit(store.filter_new(cancel))
+    assert _gen_dirs(store.path) == ["gen-000001", "gen-000002"]  # the orphan
+    assert store._manifest()["generations"] == ["gen-000001"]
+    assert store.filter_new(cancel).count() == n_fresh
+
+    store.commit(store.filter_new(cancel))  # the retry
+    assert store.filter_new(cancel).count() == 0
+    assert set(store.state().collect()) == set(clean.state().collect())
+    assert _gen_dirs(store.path) == store._manifest()["generations"]
+
+
+def test_history_crash_during_compaction(spark, tmp_path, monkeypatch):
+    """The same crash point during a compaction: the pre-compaction store
+    stays live, the retry compacts to the same state, and the superseded
+    generations are vacuumed."""
+    from gtfsrt2lc_spark.functions import hadoop_fs
+    from gtfsrt2lc_spark.plans.gtfs import MAX_GENERATIONS
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash before the manifest write")
+
+    root = str(tmp_path / "hist")
+    store = HistoryStore(spark, root)
+    replay: dict[str, int] = {}
+    for i in range(MAX_GENERATIONS):
+        store.commit(_states(spark, [f"k{i}", "shared"], dep=i))
+        replay.update({f"k{i}": i, "shared": i})
+    live = store._manifest()["generations"]
+    assert len(live) == MAX_GENERATIONS  # the next commit compacts
+
+    with monkeypatch.context() as m:
+        m.setattr(hadoop_fs, "write_text_atomic", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            store.commit(_states(spark, ["shared", "new"], dep=100))
+    assert store._manifest()["generations"] == live
+    assert _delays(store) == replay  # the compacted orphan is invisible
+
+    store.commit(_states(spark, ["shared", "new"], dep=100))
+    replay.update({"shared": 100, "new": 100})
+    assert _delays(store) == replay
+    assert _gen_dirs(root) == store._manifest()["generations"] == [
+        f"gen-{MAX_GENERATIONS + 1:06d}"
     ]
 
 
@@ -237,13 +345,13 @@ def test_history_commit_is_crash_recoverable(spark, tmp_path):
     import pathlib
 
     root = str(tmp_path / "hist")
-    store = HistoryStore(spark, root, n_buckets=4)
+    store = HistoryStore(spark, root)
     store.commit(_states(spark, ["k1"], dep=10))
     store.commit(_states(spark, ["k1"], dep=99), vacuum=False)  # crash before vacuum
-    fresh = HistoryStore(spark, root, n_buckets=4)
-    assert {r["departure_delay"] for r in fresh._read().collect()} == {99}
+    fresh = HistoryStore(spark, root)
+    assert {r["departure_delay"] for r in fresh.state().collect()} == {99}
     (pathlib.Path(root) / "manifest-999999.json.tmp").write_text("{parti")
-    assert {r["departure_delay"] for r in fresh._read().collect()} == {99}
+    assert {r["departure_delay"] for r in fresh.state().collect()} == {99}
 
 
 def test_history_manifest_sequence_parses_numerically(spark, tmp_path):
@@ -255,26 +363,38 @@ def test_history_manifest_sequence_parses_numerically(spark, tmp_path):
     root.mkdir()
     for seq in (999999, 1000000):
         (root / f"manifest-{seq:06d}.json").write_text(
-            _json.dumps({"n_buckets": 4, "seq": seq, "gens": {}})
+            _json.dumps({"seq": seq, "generations": []})
         )
-    store = HistoryStore(spark, str(root), n_buckets=4)
+    store = HistoryStore(spark, str(root))
     assert store._manifest()["seq"] == 1000000
 
 
-def test_history_corruption_surfaces(spark, tmp_path):
-    """A manifest referencing missing generation data raises instead of
-    silently resetting differential history (which would re-emit every
-    connection)."""
+def test_history_corruption_surfaces(spark, pipeline, tmp_path):
+    """A manifest referencing missing generation data, or one in the retired
+    bucketed layout, raises instead of silently resetting differential
+    history (which would re-emit every connection)."""
     import json as _json
 
     root = str(tmp_path / "hist")
-    store = HistoryStore(spark, root, n_buckets=4)
+    store = HistoryStore(spark, root)
     store.commit(_states(spark, ["k1"]))
-    (tmp_path / "hist" / "manifest-999999.json").write_text(
-        _json.dumps({"n_buckets": 4, "seq": 999999, "gens": {"gen-999999": [0]}})
-    )
-    with pytest.raises(Exception):
-        store._read().collect()
+    conns = pipeline.connections(decode_feed_df(G.spark_feed(spark, G.gap_feed())))
+    corrupt = [
+        ({"seq": 999998, "generations": ["gen-999998"]}, Exception, ""),
+        (
+            {"n_buckets": 64, "seq": 999999, "gens": {"gen-999999": [0, 5]}},
+            ValueError,
+            "bucketed layout",
+        ),
+    ]
+    for manifest, exc, match in corrupt:
+        (tmp_path / "hist" / f"manifest-{manifest['seq']}.json").write_text(
+            _json.dumps(manifest)
+        )
+        with pytest.raises(exc, match=match):
+            store.state().collect()
+        with pytest.raises(exc, match=match):
+            store.filter_new(conns).count()
 
 
 def test_quads_shape(spark, pipeline):
