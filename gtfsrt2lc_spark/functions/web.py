@@ -7,7 +7,7 @@ per-host rollups, manifest bucketing) silently treat
 canonicalization those keys should run on, as composable Spark Column
 expressions — regexp/array built-ins only, whole-stage-codegen friendly,
 no Python in the hot path (`BASELINE.json` input_hint), and every rule
-mirrored 1:1 by a DuckDB oracle twin (`__spark_entry__.q_url_canonicalize`).
+checked against a pure-Python ``urllib`` reference in the tests.
 
 Reference provenance: the reference mints IRIs through RFC-6570 templates
 (`/root/reference/lib/Utils.js:9-66`) and never canonicalizes its inputs —

@@ -161,17 +161,3 @@ def connected_components(
     return members.unionByName(roots).groupBy("vertex").agg(
         F.min("component").alias("component")
     )
-
-
-def assign_components(vertices: DataFrame, edges: DataFrame, vertex_col: str = "vertex") -> DataFrame:
-    """Component id for every vertex in ``vertices`` (isolated -> itself)."""
-    cc = connected_components(edges)
-    return (
-        vertices.select(F.col(vertex_col).alias("vertex"))
-        .distinct()
-        .join(cc, "vertex", "left")
-        .select(
-            F.col("vertex"),
-            F.coalesce(F.col("component"), F.col("vertex")).alias("component"),
-        )
-    )

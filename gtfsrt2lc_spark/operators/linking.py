@@ -1,4 +1,4 @@
-"""Entity linking: broadcast-dictionary exact match + MinHash-LSH fuzzy match.
+"""Entity linking: dictionary resolution for the exact match + MinHash-LSH fuzzy match.
 
 Reference analog: trip deduction (`lib/Gtfsrt2LC.js:323-394`) — candidate
 generation by a blocking key (route_id ≙ LSH band bucket), then scoring
@@ -31,22 +31,6 @@ def resolve_dictionary(surfaces: DataFrame) -> DataFrame:
         surfaces.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def link_exact(
-    mentions: DataFrame, dictionary: DataFrame, surface_col: str = "surface"
-) -> DataFrame:
-    """Broadcast equi-join mentions to the pre-resolved dictionary.
-
-    Output: mentions + (record_id, prior); unmatched rows keep null record_id
-    (caller routes them to the fuzzy pass).
-    """
-    dic = resolve_dictionary(dictionary)
-    return mentions.join(
-        F.broadcast(dic.withColumnRenamed("surface", surface_col)),
-        on=surface_col,
-        how="left",
     )
 
 

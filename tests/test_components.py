@@ -4,9 +4,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
-from gtfsrt2lc_spark.operators.components import assign_components, connected_components
+from gtfsrt2lc_spark.operators.components import connected_components
 
 
 def _expected_components(edges):
@@ -70,10 +68,3 @@ def test_partitioning_invariance(spark):
     one = {tuple(r) for r in connected_components(df.coalesce(1), small_graph_edges=0).collect()}
     many = {tuple(r) for r in connected_components(df.repartition(13), small_graph_edges=0).collect()}
     assert one == many
-
-
-def test_assign_components_isolated_vertices(spark):
-    verts = spark.createDataFrame([("a",), ("b",), ("c",), ("z",)], "vertex string")
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    got = {r["vertex"]: r["component"] for r in assign_components(verts, edges).collect()}
-    assert got == {"a": "a", "b": "a", "c": "c", "z": "z"}

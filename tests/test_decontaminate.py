@@ -1,6 +1,6 @@
 """Hashed-gram-key decontamination: equivalence with the string-gram path.
 
-The fast path (`q_decontaminate_hashed` / `word_ngram_hashes`) replaces
+The fast path (`word_ngram_hashes`) replaces
 concatenated gram strings with xxhash64 keys over the n token columns; the
 contract is that (doc_id, n_hits) is IDENTICAL to the string path at any n,
 because countDistinct over injective-up-to-2^-64 keys equals countDistinct
@@ -23,6 +23,17 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _word_ngrams(toks, n: int):
+    """String-gram reference: array<string> of space-joined word n-grams
+    (empty when < n tokens)."""
+    width = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(toks, j + 1, width) for j in range(n)])
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(zipped, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)])),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def test_word_ngram_hashes_shape(spark):
@@ -72,15 +83,13 @@ def test_hashed_gram_multiset_matches_strings(spark, docs, n):
     of the string-gram multiset under an injective map — i.e. per-doc gram
     count, distinct count, and cross-doc equality structure all match the
     string representation (what decontaminate / gopher rely on)."""
-    import __spark_entry__ as e
-
     rows = [(i, " ".join(ws)) for i, ws in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     toks = tokens(F.col("text"))
     both = df.select(
         "doc_id",
         word_ngram_hashes(toks, n).alias("hk"),
-        e._word_ngrams(toks, n).alias("gs"),
+        _word_ngrams(toks, n).alias("gs"),
     ).collect()
     mapping = {}
     for r in both:
@@ -95,44 +104,9 @@ def test_hashed_gram_multiset_matches_strings(spark, docs, n):
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not staged")
-def test_decontaminate_hashed_matches_string_path(spark):
-    import __spark_entry__ as e
-
-    got = _rows(e.q_decontaminate_hashed(spark, SF_DIR))
-    want = _rows(e.q_decontaminate(spark, SF_DIR))
-    assert got == want and len(want) > 0
-
-
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not staged")
-@pytest.mark.parametrize("n", [2, 3])
-def test_topgram_frac_matches_string_grouping(spark, n):
-    """_topgram_frac (hashed gram keys) == the same aggregate over gram
-    strings — the equivalence the gopher_repetition oracle relies on."""
-    import __spark_entry__ as e
-
-    d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    got = _rows(e._topgram_frac(d, n))
-
-    ex = d.select(
-        "doc_id", F.explode(e._word_ngrams(tokens(F.col("text")), n)).alias("g")
-    )
-    cnt = ex.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
-    want = _rows(
-        cnt.groupBy("doc_id").agg(
-            F.round(
-                F.max("c").cast("double") / F.sum("c").cast("double"), 6
-            ).alias(f"top{n}gram_frac")
-        )
-    )
-    assert got == want and len(want) > 0
-
-
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata not staged")
 @pytest.mark.parametrize("n", [8, 13])
 def test_hashed_equivalence_at_production_n(spark, n):
     """The production window sizes (8, 13) give identical results too."""
-    import __spark_entry__ as e
-
     d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
 
     def plan(gram_col):
@@ -147,5 +121,5 @@ def test_hashed_equivalence_at_production_n(spark, n):
 
     toks = tokens(F.col("text"))
     got = _rows(plan(word_ngram_hashes(toks, n)))
-    want = _rows(plan(e._word_ngrams(toks, n)))
+    want = _rows(plan(_word_ngrams(toks, n)))
     assert got == want

@@ -110,33 +110,6 @@ def test_mentions_single_regex_multi_sentence_line(spark, corpus_dfs):
     }
 
 
-def test_tp_repartition_guard(spark, monkeypatch):
-    """_tp widens a below-parallelism scan (leaving row content alone) when
-    the input is big enough, and keeps the raw scan below _TP_MIN_BYTES —
-    the two-sided guard: partition count vs parallelism, bytes vs the
-    fixed exchange cost."""
-    import __spark_entry__ as e
-
-    sf_dir = "/root/testdata/sf0.001"
-    base = e._t(spark, sf_dir, "documents")
-    dp = spark.sparkContext.defaultParallelism
-    assert base.rdd.getNumPartitions() < dp
-
-    # sf0.001 documents is ~64 KB — far below the 3 MiB floor: no exchange.
-    assert e._scan_bytes(sf_dir, "documents") < e._TP_MIN_BYTES
-    tiny = e._tp(spark, sf_dir, "documents")
-    assert tiny.rdd.getNumPartitions() == base.rdd.getNumPartitions()
-
-    # Force the size gate open: the partition-count guard then widens, and
-    # the exchange is round-robin (content-preserving).
-    monkeypatch.setattr(e, "_TP_MIN_BYTES", 0)
-    wide = e._tp(spark, sf_dir, "documents")
-    assert wide.rdd.getNumPartitions() == dp
-    assert sorted(r["doc_id"] for r in wide.select("doc_id").collect()) == sorted(
-        r["doc_id"] for r in base.select("doc_id").collect()
-    )
-
-
 def test_connected_components_raw_collect_parity(spark):
     """The small path collects RAW edges (r7: no symmetrize/distinct
     exchange); duplicates, reversed duplicates and self-loops must not

@@ -1,109 +1,9 @@
-"""Structured Streaming: windowed aggregation + stateful dedup match their
-batch equivalents (ref periodic-poll mode, lib/catchCancelled.js:12-32)."""
+"""Structured Streaming: foreachBatch micro-batch KG construction matches
+the batch pipeline (ref periodic-poll mode, lib/catchCancelled.js:12-32)."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
-
-from gtfsrt2lc_spark.streaming.events import (
-    dedup_stream,
-    run_to_memory,
-    windowed_event_counts,
-)
-
-
-@pytest.fixture(scope="module")
-def events_dir(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("events_stream"))
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # watermarks need session-TZ timestamps, not NTZ
-    ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    ev.coalesce(2).write.mode("overwrite").parquet(out)
-    return out
-
-
-def test_windowed_counts_match_batch(spark, events_dir):
-    schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    agg = windowed_event_counts(stream)
-    run_to_memory(agg, "win_counts", output_mode="complete")
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], r["v"])
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("v"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "v")
-    )
-    want = {(r["ws"], r["event_type"]): (r["n"], r["v"]) for r in batch.collect()}
-    assert got == want
-    assert len(got) > 0
-
-
-def test_streaming_dedup(spark, events_dir, tmp_path):
-    # duplicate the input -> streaming dedup must emit each key once
-    dup_dir = str(tmp_path / "dup")
-    ev = spark.read.parquet(events_dir)
-    ev.union(ev).coalesce(2).write.mode("overwrite").parquet(dup_dir)
-
-    schema = ev.schema
-    stream = spark.readStream.schema(schema).parquet(dup_dir)
-    dd = dedup_stream(stream, ["event_id"])
-    run_to_memory(dd.groupBy().count(), "dedup_count", output_mode="complete")
-    n = spark.sql("SELECT * FROM dedup_count").collect()[0]["count"]
-    assert n == ev.count()
-
-
-def test_differential_stream_history_semantics(spark, tmp_path):
-    """applyInPandasWithState differential dedup = the reference history
-    store (lib/Gtfsrt2LC.js:698-750): emit on change, suppress unchanged,
-    re-emit when the value changes back — across micro-batches."""
-    import datetime as dt
-
-    from gtfsrt2lc_spark.streaming.events import differential_stream
-
-    d = str(tmp_path / "diff")
-    schema = "key string, delay long, ts timestamp"
-    t0 = dt.datetime(2024, 1, 15, 8, 0, 0)
-
-    def mk(rows, name):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/{name}")
-
-    # batch 1: k1 appears (delay 60), k2 appears (0)
-    mk([("k1", 60, t0), ("k2", 0, t0)], "b1")
-    # batch 2: k1 unchanged (suppress), k2 changes to 120 (emit),
-    #          k1 later changes back to 0 (emit) then repeats 0 (suppress)
-    mk([("k1", 60, t0 + dt.timedelta(minutes=1)),
-        ("k2", 120, t0 + dt.timedelta(minutes=1)),
-        ("k1", 0, t0 + dt.timedelta(minutes=2)),
-        ("k1", 0, t0 + dt.timedelta(minutes=3))], "b2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/b*")
-    )
-    diff = differential_stream(stream, ["key"], ["delay"], ts_col="ts")
-    q = (
-        diff.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("diff_hist")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(
-        (r["key"], r["delay"]) for r in spark.sql("SELECT * FROM diff_hist").collect()
-    )
-    assert got == [("k1", 0), ("k1", 60), ("k2", 0), ("k2", 120)]
 
 
 def test_streaming_kg_pipeline_matches_batch(spark, corpus_dfs, tmp_path):
