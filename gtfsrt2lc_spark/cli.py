@@ -32,17 +32,23 @@ from __future__ import annotations
 
 import argparse
 import atexit
+import hashlib
 import json
 import os
 import shutil
 import sys
 import tempfile
+import threading
 import time
 import zipfile
 from datetime import datetime, timezone
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from gtfsrt2lc_spark.plans.gtfs import GtfsIndexes
 
 STATIC_TABLES = ["stops", "routes", "trips", "stop_times", "calendar"]
 
@@ -56,22 +62,8 @@ def _staging_dir(prefix: str) -> str:
     return path
 
 
-def _read_static(
-    spark: SparkSession, path: str, headers: dict[str, str] | None = None
-) -> dict[str, DataFrame]:
-    """URL or directory of GTFS .txt files, or a .zip (extracted driver-side —
-    the reference stages zips the same way, lib/GtfsIndex.js:20-72; URL
-    downloads are always zips, lib/GtfsIndex.js:50-72)."""
-    from gtfsrt2lc_spark.sources.http_fetch import fetch_to_file, is_url
-
-    if is_url(path):
-        staged = os.path.join(_staging_dir("gtfs_dl_"), "gtfs.zip")
-        path = fetch_to_file(path, staged, headers)
-    if path.endswith(".zip"):
-        tmp = _staging_dir("gtfs_static_")
-        with zipfile.ZipFile(path) as z:
-            z.extractall(tmp)
-        path = tmp
+def _read_static(spark: SparkSession, path: str) -> dict[str, DataFrame]:
+    """Directory of GTFS .txt files -> one DataFrame per table."""
     out: dict[str, DataFrame] = {}
     for name in STATIC_TABLES + ["calendar_dates"]:
         f = os.path.join(path, f"{name}.txt")
@@ -80,6 +72,112 @@ def _read_static(
         elif name in STATIC_TABLES:
             raise FileNotFoundError(f"static GTFS table missing: {f}")
     return out
+
+
+def _static_signature(path: str) -> tuple:
+    """What identifies a local static bundle without reading it: the stat
+    of a .zip, or (name, size, mtime_ns) per table file of a directory."""
+    if path.endswith(".zip"):
+        st = os.stat(path)
+        return ("zip", os.path.realpath(path), st.st_size, st.st_mtime_ns)
+    files = []
+    for name in STATIC_TABLES + ["calendar_dates"]:
+        try:
+            st = os.stat(os.path.join(path, f"{name}.txt"))
+        except FileNotFoundError:
+            continue  # a missing required table raises in _read_static
+        files.append((name, st.st_size, st.st_mtime_ns))
+    return ("dir", os.path.realpath(path), tuple(files))
+
+
+def _sha256(path: str) -> str:
+    h = hashlib.sha256()
+    with open(path, "rb") as f:
+        for chunk in iter(lambda: f.read(1 << 20), b""):
+            h.update(chunk)
+    return h.hexdigest()
+
+
+class _StaticIndexCache:
+    """One persisted ``GtfsIndexes`` per Spark application, reused by every
+    rt2lc poll whose static bundle is unchanged: the reference builds its
+    indexes once and re-parses each ~30 s poll against them (README.md:58,
+    lib/catchCancelled.js:12-32).
+
+    The key is the application id plus a signature of the static source:
+    ``_static_signature`` for a local dir or zip, SHA-256 of the fetched
+    bytes for a URL (URL downloads are always zips, lib/GtfsIndex.js:50-72).
+    A hit skips the CSV reads, zip extraction and index build. A miss
+    unpersists the entry it replaces BEFORE building, because Spark's cache
+    matches plans by their source paths: a rebuilt frame over an edited
+    file would otherwise be served the old entry's data. An entry of another
+    application belonged to a stopped context (PySpark runs one per
+    process) whose cached blocks died with it, so it is dropped unread."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._key: tuple | None = None
+        self._indexes: GtfsIndexes | None = None
+        self._staged: str | None = None  # the extraction dir the frames read
+
+    def load(
+        self, spark: SparkSession, path: str, headers: dict[str, str] | None = None
+    ) -> tuple[GtfsIndexes, bool]:
+        """(indexes, reused) for the static GTFS at ``path``: a URL, a
+        directory of .txt files or a .zip (extracted to a local dir, as the
+        reference stages zips, lib/GtfsIndex.js:20-72)."""
+        from gtfsrt2lc_spark.sources.http_fetch import fetch_to_file, is_url
+
+        with self._lock:
+            download = None
+            try:
+                if is_url(path):
+                    download = _staging_dir("gtfs_dl_")
+                    path = fetch_to_file(path, os.path.join(download, "gtfs.zip"), headers)
+                    sig = ("url", _sha256(path))
+                else:
+                    sig = _static_signature(path)
+                key = (spark.sparkContext.applicationId, sig)
+                if key == self._key:
+                    return self._indexes, True
+                if self._key is not None and self._key[0] != key[0]:
+                    self._indexes = None  # its context stopped, and its blocks with it
+                self.release()
+                return self._build(spark, path, key), False
+            finally:
+                if download is not None:
+                    shutil.rmtree(download, ignore_errors=True)
+
+    def _build(self, spark: SparkSession, path: str, key: tuple) -> GtfsIndexes:
+        from gtfsrt2lc_spark.plans.gtfs import GtfsIndexes
+
+        staged = None
+        if path.endswith(".zip"):
+            staged = _staging_dir("gtfs_static_")
+            with zipfile.ZipFile(path) as z:
+                z.extractall(staged)
+        static = _read_static(spark, staged or path)
+        indexes = GtfsIndexes(
+            stops=static["stops"],
+            routes=static["routes"],
+            trips=static["trips"],
+            stop_times=static["stop_times"],
+            calendar=static["calendar"],
+            calendar_dates=static.get("calendar_dates"),
+        ).persist()
+        self._key, self._indexes, self._staged = key, indexes, staged
+        return indexes
+
+    def release(self) -> None:
+        """Unpersist the cached indexes and delete their extraction dir."""
+        if self._indexes is not None:
+            self._indexes.unpersist()
+        if self._staged is not None:
+            shutil.rmtree(self._staged, ignore_errors=True)
+        self._key, self._indexes, self._staged = None, None, None
+
+
+_STATIC_INDEXES = _StaticIndexCache()
 
 
 def _read_feed(
@@ -158,7 +256,6 @@ def _write_csv(conns: DataFrame, out: str) -> None:
 def run_rt2lc(args: argparse.Namespace, spark: SparkSession) -> int:
     from gtfsrt2lc_spark.plans.gtfs import (
         DEFAULT_URIS,
-        GtfsIndexes,
         Gtfsrt2LCPipeline,
         HistoryStore,
     )
@@ -177,31 +274,23 @@ def run_rt2lc(args: argparse.Namespace, spark: SparkSession) -> int:
     headers = _parse_headers(args.headers)
     t0 = time.monotonic()
     updates = decode_feed_df(_read_feed(spark, args.real_time, headers))
-    static = _read_static(spark, args.static, headers)
-    if args.grep:
-        # S6 grep analog: semi-join static facts down to the RT-updated trip
-        # set before index build (lib/GtfsIndex.js:107-118,264-307). Under
-        # --deduce the candidate trips aren't known yet, so trips/stop_times
-        # stay whole (the reference greps by route in that mode).
-        upd = F.broadcast(
-            updates.where(F.col("trip_id").isNotNull())
-            .select("trip_id")
-            .distinct()
+    indexes, reused = _STATIC_INDEXES.load(spark, args.static, headers)
+    if args.grep and not args.deduce:
+        # S6 grep analog: prune the trip-keyed indexes to the RT-updated
+        # trip set (lib/GtfsIndex.js:107-118,264-307). Under --deduce the
+        # candidate trips aren't known yet, so they stay whole (the
+        # reference greps by route in that mode).
+        indexes = indexes.for_trips(
+            F.broadcast(
+                updates.where(F.col("trip_id").isNotNull()).select("trip_id").distinct()
+            )
         )
-        if not args.deduce:
-            for tbl in ("trips", "stop_times"):
-                cols = static[tbl].columns  # semi-join reorders the key col
-                static[tbl] = static[tbl].join(upd, "trip_id", "left_semi").select(*cols)
-    indexes = GtfsIndexes(
-        stops=static["stops"],
-        routes=static["routes"],
-        trips=static["trips"],
-        stop_times=static["stop_times"],
-        calendar=static["calendar"],
-        calendar_dates=static.get("calendar_dates"),
-    )
     t_index = time.monotonic() - t0
-    print(f"GTFS indexing process took {t_index * 1000:.0f} ms", file=sys.stderr)
+    print(
+        f"GTFS indexing process took {t_index * 1000:.0f} ms "
+        f"({'reused' if reused else 'built'})",
+        file=sys.stderr,
+    )
 
     as_of = None
     if args.as_of:

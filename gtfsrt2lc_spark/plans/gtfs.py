@@ -6,7 +6,8 @@ here), re-expressed as DataFrame plans:
   stage                         reference                     here
   ----------------------------- ----------------------------- -------------------------
   protobuf decode (S3)          FeedMessage.decode :61-66     functions/gtfsrt_proto.decode_feed_df (Arrow)
-  dimension indexes (A1-A5)     lib/GtfsIndex.js:75-169       GtfsIndexes (groupBy/sort_array/map_from_entries)
+  dimension indexes (A1-A5)     lib/GtfsIndex.js:75-169       GtfsIndexes (groupBy/sort_array/map_from_entries);
+                                                              persist()ed once per static bundle, reused by every poll
   trip deduction (J5)           lib/Gtfsrt2LC.js:323-394      multi-predicate join + last-match-wins window
   service day / start (F3/F4)   lib/Gtfsrt2LC.js:113-142      Column exprs; findTripStartDate takes explicit as_of
   dim joins (J1-J4, P3)         lib/Gtfsrt2LC.js:98-111       broadcast hash joins, inner (silent drop)
@@ -23,6 +24,7 @@ embarrassingly parallel across update rows.
 
 from __future__ import annotations
 
+import copy
 import json
 from datetime import datetime, timezone
 from functools import reduce
@@ -104,6 +106,38 @@ class GtfsIndexes:
             )
         else:
             self.calendar_dates = None
+
+    def _frames(self) -> list[DataFrame]:
+        frames = [self.stops, self.routes, self.trips, self.calendar,
+                  self.stop_times_by_trip, self.first_stops, self.calendar_dates]
+        return [df for df in frames if df is not None]
+
+    def persist(self) -> GtfsIndexes:
+        """Keep the index frames resident (the reference's in-heap Maps,
+        built once and reused by every poll, README.md:58): queries over
+        them read the cache instead of re-reading and re-aggregating the
+        static tables. Lazy: the first query over a frame fills it. As with
+        any persisted file scan, an edit to the source files is not seen
+        until the indexes are rebuilt."""
+        for df in self._frames():
+            df.persist()
+        return self
+
+    def unpersist(self) -> None:
+        for df in self._frames():
+            df.unpersist()
+
+    def for_trips(self, trip_ids: DataFrame) -> GtfsIndexes:
+        """A view whose trip-keyed frames (trips, first_stops,
+        stop_times_by_trip) are semi-joined down to ``trip_ids`` — the
+        Spark analog of the reference's grep scan (lib/GtfsIndex.js:264-307).
+        The other frames are shared with ``self``."""
+        view = copy.copy(self)
+        for name in ("trips", "first_stops", "stop_times_by_trip"):
+            df = getattr(self, name)
+            # the semi-join moves the key column first
+            setattr(view, name, df.join(trip_ids, "trip_id", "left_semi").select(*df.columns))
+        return view
 
 
 DEFAULT_URIS = {

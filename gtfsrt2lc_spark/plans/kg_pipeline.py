@@ -584,7 +584,8 @@ class KGPipeline:
             via_fs = False
         self._scratch.append((path, via_fs))
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        # the schema just written: no schema-inference job on the re-read
+        return spark.read.schema(df.schema).parquet(path)
 
     def cleanup(self) -> None:
         """Remove scratch stage dirs created by linked().

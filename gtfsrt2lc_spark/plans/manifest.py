@@ -137,7 +137,8 @@ def _run_incremental_body(
             F.bit_xor(F.xxhash64("url", "warc_ts")).alias("input_fingerprint"),
         )
     ).cache()
-    todo_parts = [r["part_id"] for r in part_stats.select("part_id").collect()]
+    docs = part_stats.select("part_id", "n_docs").collect()
+    todo_parts = [r["part_id"] for r in docs]
     if not todo_parts:
         part_stats.unpersist()
         if owns_scratch:
@@ -172,10 +173,8 @@ def _run_incremental_body(
     triples.write.mode("append").partitionBy("part_id").parquet(_triples_path(out_dir))
 
     got = obs.get
-    tri_stats = spark.createDataFrame(
-        [(p, int(got[f"p_{p}"] or 0)) for p in todo_parts],
-        "part_id int, n_triples long",
-    )
+    tri_counts = [(p, int(got[f"p_{p}"] or 0)) for p in todo_parts]
+    tri_stats = spark.createDataFrame(tri_counts, "part_id int, n_triples long")
     wall_ms = int((time.monotonic() - t0) * 1000)
     manifest_rows = (
         part_stats.join(tri_stats, "part_id", "left")
@@ -190,9 +189,6 @@ def _run_incremental_body(
         )
     )
     manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))
-    totals = manifest_rows.agg(
-        F.sum("n_docs").alias("d"), F.sum("n_triples").alias("t")
-    ).collect()[0]
     part_stats.unpersist()
     if hasattr(pipeline, "cleanup"):
         pipeline.cleanup()  # drop stage-checkpoint scratch dirs
@@ -203,7 +199,7 @@ def _run_incremental_body(
         pipeline.scratch_dir = None
     return {
         "parts": len(todo_parts),
-        "n_docs": totals["d"] or 0,
-        "n_triples": totals["t"] or 0,
+        "n_docs": sum(r["n_docs"] for r in docs),
+        "n_triples": sum(n for _, n in tri_counts),
         "wall_ms": wall_ms,
     }

@@ -4,11 +4,13 @@ as a Structured Streaming job over a feed-drop directory.
 
 Shape: ``readStream.format('binaryFile')`` watches a directory where each
 poll lands one protobuf feed file -> ``foreachBatch`` decodes, converts to
-Connections against the once-built ``GtfsIndexes`` (the reference's
-index-reuse pattern, README.md:58), differential-filters against the
-``HistoryStore`` (only new/changed connections emit — `lib/Gtfsrt2LC.js:667-751`),
-and lands each epoch in its own overwrite-mode ``epoch=N`` directory
-(replayed epochs rewrite identical content: exactly-once output).
+Connections against one ``GtfsIndexes`` plan (the reference's index-reuse
+pattern, README.md:58: the plan is built once; its data is computed once
+only if the caller ``GtfsIndexes.persist()``s it), differential-filters
+against the ``HistoryStore`` (only new/changed connections emit —
+`lib/Gtfsrt2LC.js:667-751`), and lands each epoch in its own
+overwrite-mode ``epoch=N`` directory (replayed epochs rewrite identical
+content: exactly-once output).
 """
 
 from __future__ import annotations
@@ -55,10 +57,12 @@ def stream_feeds_to_connections(
 ):
     """Start the poll-mode streaming query; returns the StreamingQuery.
 
-    ``pipeline`` is a prebuilt Gtfsrt2LCPipeline (indexes built ONCE, reused
-    every micro-batch); ``history_store`` a HistoryStore whose state spans
-    epochs, so an unchanged re-polled feed emits 0 connections (the
-    reference's differential semantics, test/gtfsrt2lc.test.js:156).
+    ``pipeline`` is a prebuilt Gtfsrt2LCPipeline whose index plan every
+    micro-batch reuses; persist its indexes (``GtfsIndexes.persist()``) or
+    each micro-batch re-reads and re-aggregates the static tables.
+    ``history_store`` is a HistoryStore whose state spans epochs, so an
+    unchanged re-polled feed emits 0 connections (the reference's
+    differential semantics, test/gtfsrt2lc.test.js:156).
     """
     from gtfsrt2lc_spark.functions.gtfsrt_proto import decode_feed_df
 

@@ -11,6 +11,7 @@ import csv
 import io
 import json
 import os
+import shutil
 
 import pytest
 
@@ -44,19 +45,37 @@ def _lines(out_dir) -> list[str]:
     return lines
 
 
-def _run(staged, spark, out, *extra) -> list[str]:
+def _rt2lc(spark, feed, static, out, *extra) -> list[str]:
     rc = main(
-        [
-            "rt2lc",
-            "-r", str(staged / "feed.pb"),
-            "-s", str(staged / "static"),
-            "-o", str(out),
-            *extra,
-        ],
+        ["rt2lc", "-r", str(feed), "-s", str(static), "-o", str(out), *extra],
         spark=spark,
     )
     assert rc == 0
     return _lines(out)
+
+
+def _run(staged, spark, out, *extra) -> list[str]:
+    return _rt2lc(spark, staged / "feed.pb", staged / "static", out, *extra)
+
+
+def _persistent_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _index_state(capsys) -> str:
+    """'built' or 'reused', from the last poll's indexing line on stderr."""
+    lines = [ln for ln in capsys.readouterr().err.splitlines()
+             if ln.startswith("GTFS indexing process took")]
+    return lines[-1].rsplit("(", 1)[1].rstrip(")")
+
+
+def _zip_static(staged, zpath):
+    import zipfile
+
+    with zipfile.ZipFile(zpath, "w") as z:
+        for f in os.listdir(staged / "static"):
+            z.write(staged / "static" / f, arcname=f)
+    return zpath
 
 
 def test_cli_json_strategies_equivalent(staged, spark, tmp_path):
@@ -111,24 +130,8 @@ def test_cli_rt2json(staged, capsys):
 
 
 def test_cli_static_zip(staged, spark, tmp_path):
-    import zipfile
-
-    zpath = tmp_path / "gtfs.zip"
-    with zipfile.ZipFile(zpath, "w") as z:
-        for f in os.listdir(staged / "static"):
-            z.write(staged / "static" / f, arcname=f)
-    rc = main(
-        [
-            "rt2lc",
-            "-r", str(staged / "feed.pb"),
-            "-s", str(zpath),
-            "-o", str(tmp_path / "zout"),
-            "-f", "json",
-        ],
-        spark=spark,
-    )
-    assert rc == 0
-    assert len(_lines(tmp_path / "zout")) > 0
+    zpath = _zip_static(staged, tmp_path / "gtfs.zip")
+    assert len(_rt2lc(spark, staged / "feed.pb", zpath, tmp_path / "zout", "-f", "json")) > 0
 
 
 def test_cli_error_paths(staged, spark, tmp_path):
@@ -153,14 +156,25 @@ def test_cli_error_paths(staged, spark, tmp_path):
 
 def test_cli_history_polls_release_their_cache(staged, spark, tmp_path):
     """Each --history poll persists its fresh connections for the output
-    write and the commit, then unpersists them: N polls on one long-lived
-    session leave the persisted-RDD count where it started."""
-    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
-    before = persistent().size()
+    write and the commit, then unpersists them; the static indexes stay
+    persisted for the next poll. After one warm-up poll, N polls on one
+    long-lived session leave the persisted-RDD count where it was, and
+    everything the polls left persisted is the index frames."""
+    from gtfsrt2lc_spark.cli import _STATIC_INDEXES
+
+    _STATIC_INDEXES.release()
+    empty = _persistent_ids(spark)
     hist = str(tmp_path / "history")
+    _run(staged, spark, tmp_path / "warm", "-f", "json", "--history", hist)
+    added = _persistent_ids(spark) - empty
+    # every index frame but calendar_dates, which only -d reads
+    assert len(added) == len(_STATIC_INDEXES._indexes._frames()) - 1
+    before = len(_persistent_ids(spark))
     for i in range(3):
         _run(staged, spark, tmp_path / f"p{i}", "-f", "json", "--history", hist)
-        assert persistent().size() == before
+        assert len(_persistent_ids(spark)) == before
+    _STATIC_INDEXES.release()
+    assert _persistent_ids(spark) == empty
 
 
 def test_cli_crash_in_output_write_keeps_history(staged, spark, tmp_path, monkeypatch):
@@ -187,3 +201,87 @@ def test_cli_crash_in_output_write_keeps_history(staged, spark, tmp_path, monkey
     again = _run(staged, spark, tmp_path / "again", "-f", "json", "--history", hist)
     assert sorted(again) == sorted(full)
     assert _run(staged, spark, tmp_path / "zero", "-f", "json", "--history", hist) == []
+
+
+def test_cli_static_edit_rebuilds_indexes(staged, spark, tmp_path, capsys):
+    """An unchanged bundle reuses the persisted indexes; a rewritten
+    stops.txt (new stop_name, new mtime) is rebuilt on the next poll."""
+    static = tmp_path / "static"
+    shutil.copytree(staged / "static", static)
+    feed = staged / "feed.pb"
+    first = _rt2lc(spark, feed, static, tmp_path / "o1", "-f", "json")
+    assert _index_state(capsys) == "built"
+    assert sorted(_rt2lc(spark, feed, static, tmp_path / "o2", "-f", "json")) == sorted(first)
+    assert _index_state(capsys) == "reused"
+
+    stops = static / "stops.txt"
+    mtime = stops.stat().st_mtime_ns
+    stops.write_text(stops.read_text().replace("Station ", "Gare "))
+    os.utime(stops, ns=(mtime + 10**9, mtime + 10**9))
+    edited = _rt2lc(spark, feed, static, tmp_path / "o3", "-f", "json")
+    assert _index_state(capsys) == "built"
+    names = {json.loads(ln)["departureStop"]["stop_name"] for ln in edited}
+    assert names and all(n.startswith("Gare ") for n in names)
+    assert len(edited) == len(first)
+
+
+def test_cli_alternating_bundles_keep_one_persisted(staged, spark, tmp_path, capsys):
+    """Polls alternating between a dir and a zip bundle rebuild on every
+    switch and never hold more than one bundle's index frames."""
+    from gtfsrt2lc_spark.cli import _STATIC_INDEXES
+
+    zpath = _zip_static(staged, tmp_path / "gtfs.zip")
+    _STATIC_INDEXES.release()
+    base = len(_persistent_ids(spark))
+    outs = []
+    for i, static in enumerate([staged / "static", zpath] * 2):
+        outs.append(sorted(_rt2lc(spark, staged / "feed.pb", static, tmp_path / f"o{i}")))
+        assert _index_state(capsys) == "built"
+        frames = len(_STATIC_INDEXES._indexes._frames())
+        assert base < len(_persistent_ids(spark)) <= base + frames
+    _rt2lc(spark, staged / "feed.pb", zpath, tmp_path / "again")
+    assert _index_state(capsys) == "reused"
+    assert all(o == outs[0] for o in outs) and outs[0]
+
+
+def test_cli_strategies_equivalent_on_cache_hit(staged, spark, tmp_path, capsys):
+    """Output over reused indexes equals output over freshly built ones:
+    json, -g and -S LevelStore after a warm poll, and -d."""
+    from gtfsrt2lc_spark.cli import _STATIC_INDEXES
+    from gtfsrt2lc_spark.fixtures.gtfs import deduce_feed
+
+    _STATIC_INDEXES.release()
+    cold = _run(staged, spark, tmp_path / "cold", "-f", "json")
+    assert _index_state(capsys) == "built"
+    test_cli_json_strategies_equivalent(staged, spark, tmp_path)
+    assert "(built)" not in capsys.readouterr().err
+    assert sorted(_lines(tmp_path / "mem")) == sorted(cold)
+
+    feed = tmp_path / "deduce.pb"
+    feed.write_bytes(deduce_feed())
+    _STATIC_INDEXES.release()
+    deduced = _rt2lc(spark, feed, staged / "static", tmp_path / "d1", "-f", "json", "-d")
+    assert _index_state(capsys) == "built"
+    again = _rt2lc(spark, feed, staged / "static", tmp_path / "d2", "-f", "json", "-d")
+    assert _index_state(capsys) == "reused"
+    assert deduced and sorted(again) == sorted(deduced)
+
+
+def test_cli_static_cache_is_per_application(staged, spark, tmp_path, capsys, monkeypatch):
+    """An entry cached under one Spark application is never served to
+    another: after a restart (a new application id) the poll rebuilds."""
+    from pyspark import SparkContext
+
+    from gtfsrt2lc_spark.cli import _STATIC_INDEXES
+
+    expected = _run(staged, spark, tmp_path / "o1")
+    old = _STATIC_INDEXES._indexes
+    with monkeypatch.context() as m:
+        m.setattr(SparkContext, "applicationId", property(lambda sc: "app-after-restart"))
+        capsys.readouterr()
+        assert sorted(_run(staged, spark, tmp_path / "o2")) == sorted(expected)
+        assert _index_state(capsys) == "built"
+        assert _STATIC_INDEXES._indexes is not old
+        _STATIC_INDEXES.release()
+    # a real restart drops the old application's blocks with its context
+    old.unpersist()

@@ -25,6 +25,10 @@ def test_idempotent_rerun(spark, corpus_dfs, pipeline, corpus, tmp_path_factory)
     m1 = run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id="r1")
     assert m1["parts"] == 8
     assert m1["n_triples"] > 0
+    # the returned totals are the ones the manifest recorded
+    totals = read_manifest(spark, out).agg(F.sum("n_docs"), F.sum("n_triples")).first()
+    assert (m1["n_docs"], m1["n_triples"]) == tuple(totals)
+    assert m1["n_docs"] == pages.count()
 
     # full golden parity through the manifest path too
     got = {
