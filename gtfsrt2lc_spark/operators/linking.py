@@ -6,10 +6,12 @@ filters (direction/startTime/calendar ≙ Jaccard threshold), then a
 deterministic winner (last match wins at `:376,380` ≙ highest score, ties by
 record_id).
 
-Scale posture: the dictionary is the build side of a broadcast hash join
-(MemStore analog, `lib/GtfsIndex.js:99-105`); the mention stream never
-shuffles for the exact pass. The fuzzy pass shuffles only *unmatched distinct
-surfaces* (tiny relative to mentions) against LSH band buckets.
+Scale posture: the resolved dictionary joins the *distinct* mention surfaces,
+never the mention stream itself, and carries no strategy hint: AQE broadcasts
+it while it is small (the in-heap MemStore analog, `lib/GtfsIndex.js:99-105`)
+and shuffles it once it is not (the persistent-store analog). The fuzzy pass
+shuffles only *unmatched distinct surfaces* (tiny relative to mentions)
+against LSH band buckets.
 """
 
 from __future__ import annotations
@@ -98,7 +100,7 @@ class FuzzyDictionary:
     pass. Build one of these per KB and pass it to ``link_fuzzy`` via
     ``prepped``; callers may re-point ``bands_df`` / ``shingled`` at a
     staged (parquet) or persisted copy so later batches scan instead of
-    recomputing (KGPipeline does exactly that).
+    recomputing (KGPipeline persists them for the pipeline's lifetime).
 
     Hot-band cap (``max_band_size``): the candidate join is
     ``q_bands ⋈ bands_df`` on the band signature, so one degenerate band

@@ -5,7 +5,7 @@ Stages (SURVEY.md §7.1; reference analogs cited per stage):
   1. latest-wins page dedup            (history/differential analog, lib/Gtfsrt2LC.js:667-751)
   2. Arrow-UDF text extraction         (protobuf decode analog,      lib/Gtfsrt2LC.js:61-66)
   3. sentence split + SVO extraction   (pairwise connection forming, lib/Gtfsrt2LC.js:162-229)
-  4. entity linking: broadcast exact + MinHash-LSH fuzzy
+  4. entity linking: exact dictionary join + MinHash-LSH fuzzy
                                        (trip deduction,              lib/Gtfsrt2LC.js:323-394)
   5. connected-components canonicalization over sameAs edges
                                        (repair/unification pass,     lib/Gtfsrt2LC.js:438-665)
@@ -13,10 +13,13 @@ Stages (SURVEY.md §7.1; reference analogs cited per stage):
   7. triple dedup + provenance         (12-quad explode,             lib/Connections2Triples.js:14-104)
 
 Everything is declarative DataFrame ops except stage 2 (Arrow pandas UDF, the
-sanctioned slow path). Joins against the KB are broadcast; the only wide
-shuffles are the final triple dedup (keyed by (s,p,o)) and the window for
-latest-wins (keyed by url) — both scale linearly with pages and are
-AQE-skew-splittable (hot domains salt naturally through url hashing).
+sanctioned slow path). The KB-derived frames (resolved dictionary, fuzzy
+band and shingle tables, canonical map) are built once per pipeline and
+persisted; joins against them carry no strategy hint, so AQE broadcasts them
+while they are small and shuffles them once they are not. The wide shuffles
+that grow with pages are the final triple dedup (keyed by (s,p,o)) and the
+window for latest-wins (keyed by url) — both AQE-skew-splittable (hot domains
+salt naturally through url hashing).
 """
 
 from __future__ import annotations
@@ -31,19 +34,33 @@ from gtfsrt2lc_spark.functions.text import extract_text_udf
 from gtfsrt2lc_spark.operators.components import connected_components
 from gtfsrt2lc_spark.functions.web import canonicalize_url
 from gtfsrt2lc_spark.operators.dedup import latest_by_key
-from gtfsrt2lc_spark.operators.linking import link_fuzzy
+from gtfsrt2lc_spark.operators.linking import (
+    FuzzyDictionary,
+    link_fuzzy,
+    resolve_dictionary,
+)
 
 # a "mention" is a capitalized token span; predicates are a fixed phrase lexicon
 _MENTION = r"[A-Z][\w.]*(?: [A-Z][\w.]*)*"
+# fuzzy linking: the Jaccard floor of a recovered surface, and the hot-band
+# ceiling of the dictionary-side LSH tables (a skewed 100x KB would otherwise
+# make one band bucket quadratic in the candidate join; see FuzzyDictionary)
+_FUZZY_THRESHOLD = 0.5
+_FUZZY_MAX_BAND_SIZE = 1000
 
 
 class KGPipeline:
-    """Holds the (small, broadcastable) KB sides and composes the plan.
+    """Holds the KB sides and composes the plan.
 
     records:   (record_id, name, entity_type)
     surfaces:  (surface, record_id, prior)
     sameas:    (src, dst) record-equivalence edges
     predicates: phrase -> predicate local name
+
+    The KB-derived frames are built at most once per pipeline and stay
+    persisted for its lifetime; ``cleanup()`` frees only the per-run stage
+    checkpoints, so passes, micro-batches and ``run_incremental`` calls
+    over one pipeline share one KB index.
     """
 
     def __init__(
@@ -52,11 +69,6 @@ class KGPipeline:
         surfaces: DataFrame,
         sameas: DataFrame,
         predicates: dict[str, str],
-        fuzzy: bool = True,
-        fuzzy_threshold: float = 0.5,
-        fuzzy_max_band_size: int | None = 1000,
-        max_local_surfaces: int | None = 1_000_000,
-        max_local_dictionary: int | None = 2_000_000,
         broadcast_dups: bool = True,
         canonical_urls: bool = False,
         scratch_dir: str | None = None,
@@ -65,13 +77,6 @@ class KGPipeline:
         self.surfaces = surfaces
         self.sameas = sameas
         self.predicates = predicates
-        self.fuzzy = fuzzy
-        self.fuzzy_threshold = fuzzy_threshold
-        # hot-band ceiling for the dictionary-side LSH tables: a skewed
-        # 100x KB (millions of near-identical surfaces sharing a MinHash
-        # band) would otherwise make one band bucket quadratic in the
-        # candidate join (operators/linking.FuzzyDictionary docstring)
-        self.fuzzy_max_band_size = fuzzy_max_band_size
         # latest-wins dedup escape hatch: a corpus whose RE-CRAWLED key set
         # is itself too large to broadcast (billions of dup urls) sets this
         # False and takes one payload shuffle instead of a possible
@@ -93,27 +98,9 @@ class KGPipeline:
         # ``scratch_dir`` is any Hadoop-FS URI (run_incremental supplies an
         # out_dir-scoped one); the tempfile fallback is for local[*] only.
         self.scratch_dir = scratch_dir
-        # linked() resolves the surface->record mapping driver-side while the
-        # distinct surface set stays under this cap (the fast path: one tiny
-        # LocalRelation broadcast, zero broadcast-subplan recomputation), and
-        # falls back to a fully distributed mapping beyond it — at web scale
-        # the distinct capitalized-span set grows with the corpus and must
-        # never be collected. None = always local (tests/micro-batches).
-        self.max_local_surfaces = max_local_surfaces
-        # The KB dictionary itself (surface -> record) is collected to the
-        # driver and broadcast while it stays under THIS cap — the
-        # reference's in-heap Map posture (lib/GtfsIndex.js:99-105) holds at
-        # reference parity, but a KB 100x larger (tens of millions of
-        # surfaces) must never be collected: beyond the cap linked() routes
-        # to a fully distributed dictionary join and canonical_map() stays
-        # a distributed (staged) relation instead of a broadcast
-        # LocalRelation. None = always local.
-        self.max_local_dictionary = max_local_dictionary
         self._canonical_map: DataFrame | None = None
-        self._canonical_local = True
-        self._dict_local: dict[str, str] | None = None
-        self._dict_over_cap = False
-        self._fuzzy_dict = None
+        self._dictionary: DataFrame | None = None
+        self._fuzzy: FuzzyDictionary | None = None
         self._fact_udf = None
         self._scratch: list[tuple[str, bool]] = []  # (path, via_hadoop_fs)
         self._stage_seq = 0
@@ -292,52 +279,26 @@ class KGPipeline:
         return svo
 
     # ---- stage 4 ---------------------------------------------------------
-    def _resolved_dictionary(self) -> dict[str, str] | None:
-        """surface -> best record_id, collected once while it fits
-        ``max_local_dictionary`` (KB-sized at reference parity — the
-        reference holds exactly this as an in-heap Map,
-        lib/GtfsIndex.js:99-105). Returns None when the dictionary exceeds
-        the cap: callers must stay distributed (a 100x KB would blow the
-        driver heap and any broadcast/plan literal built from it). The
-        over-cap probe is one job (limit cap+1), cached either way."""
-        if self._dict_over_cap:
-            return None
-        if self._dict_local is None:
-            from gtfsrt2lc_spark.operators.linking import resolve_dictionary
+    def _link_index(self) -> tuple[DataFrame, FuzzyDictionary]:
+        """The KB side of linking: the resolved dictionary (surface -> best
+        record) and the fuzzy band and shingle tables, built on first use
+        and persisted for the pipeline's lifetime.
 
-            rd = resolve_dictionary(self.surfaces).select("surface", "record_id")
-            if self.max_local_dictionary is None:
-                rows = rd.collect()
-            else:
-                # one job either way: the head IS the dictionary when it
-                # fits, and the size probe when it doesn't
-                rows = rd.limit(self.max_local_dictionary + 1).collect()
-                if len(rows) > self.max_local_dictionary:
-                    self._dict_over_cap = True
-                    return None
-            self._dict_local = {r["surface"]: r["record_id"] for r in rows}
-        return self._dict_local
-
-    def _fuzzy_dictionary(self):
-        """Dictionary-side LSH tables, built ONCE per pipeline and staged.
-
-        The band and shingle tables are pure functions of the static KB;
-        a streaming loop hitting dirty micro-batches would otherwise
-        recompute the dictionary-side signature aggregation on every batch
-        (the reference builds indexes once and reuses them across polls,
-        README.md:58). Both frames are staged to scratch parquet so every
-        later fuzzy pass — and the two patch joins that consume it in the
-        same batch — scan a file instead of re-running the LSH subplan."""
-        if self._fuzzy_dict is None:
-            from gtfsrt2lc_spark.operators.linking import FuzzyDictionary
-
-            fd = FuzzyDictionary(
-                self.surfaces, max_band_size=self.fuzzy_max_band_size
-            )
-            fd.bands_df = self._stage(fd.bands_df)
-            fd.shingled = self._stage(fd.shingled)
-            self._fuzzy_dict = fd
-        return self._fuzzy_dict
+        All three are pure functions of the static KB, so every later pass,
+        micro-batch and ``run_incremental`` call reads the cache instead of
+        re-running the resolve window and the dictionary-side signature
+        aggregation (the reference builds its indexes once and re-parses
+        every feed against them, README.md:58, lib/GtfsIndex.js:75-169).
+        Persisted, not staged: ``cleanup()`` deletes the per-run scratch."""
+        if self._fuzzy is None:
+            # persisted first: FuzzyDictionary resolves the same surfaces,
+            # and Spark's cache serves that identical subplan from this copy
+            self._dictionary = resolve_dictionary(self.surfaces).persist()
+            fd = FuzzyDictionary(self.surfaces, max_band_size=_FUZZY_MAX_BAND_SIZE)
+            fd.bands_df = fd.bands_df.persist()
+            fd.shingled = fd.shingled.persist()
+            self._fuzzy = fd
+        return self._dictionary, self._fuzzy
 
     def linked(self, mentions: DataFrame) -> DataFrame:
         """Distinct linked facts: one row per (surfaces, phrase[, carry])
@@ -349,212 +310,57 @@ class KGPipeline:
         triples() computes (graph = min url) re-folds exactly over this
         pre-folded frame (min-of-mins).
 
-        Fast path (dictionary under ``max_local_dictionary``): the resolved
-        dictionary is collected once and broadcast as a LocalRelation — the
-        reference's in-heap MemStore posture (lib/GtfsIndex.js:99-105) —
-        and the exact mapping is FUSED into the stage write: mentions
-        left-join the broadcast dictionary for both slots, the resolved ids
-        land in the staged parquet, and downstream consumers re-read the
-        stage with zero further mapping joins. A parquet stage checkpoint
-        is the contention-free materialization: in-memory persist suffers
-        block-lock/unroll contention when broadcast-exchange threads race
-        the main job (measured 4-25x CPU inflation at local[32]), while
-        file scans are lock-free and exactly what a multi-executor cluster
-        would do. See BENCH/BASELINE.md.
-
-        Probe elision: an ``observe`` on the same stage write sums the
-        NULL record slots (a broadcast-join flag, not an ``isin`` literal —
-        an in-plan literal of the whole vocabulary stops compiling long
-        before the dictionary cap), so the fuzzy probe job runs ONLY when
-        the write proves unmatched surfaces exist (dirty corpora).
-        fuzzy=False runs zero probe jobs. When unmatched surfaces exist,
-        the probe collects just the distinct unmatched set (bounded by
-        ``max_local_surfaces``; beyond it the fuzzy pass runs fully
-        distributed — web-scale corpora mint unbounded capitalized spans),
-        and the fuzzy mapping patches the NULL slots via coalesce.
-
-        Dictionary over the cap: the driver never sees it —
-        ``_linked_distributed`` joins mentions to the distributed
-        dictionary relation instead (the 100x-KB path)."""
-        spark = mentions.sparkSession
+        One plan whatever the sizes: the distinct subject and object
+        surfaces inner-join the resolved dictionary (exact matches) and
+        anti-join it (the unmatched set, fuzzy-linked by MinHash-LSH
+        against the persisted band tables); exact and fuzzy matches union
+        into one surface -> record mapping, which the folded facts join
+        once per slot. Nothing is collected and no join carries a strategy
+        hint: AQE and the optimizer's size statistics broadcast a side
+        while it is small and shuffle it once the KB or the unmatched set
+        outgrows a broadcast ("To Partition, or Not to Partition", SIGMOD
+        2021). A clean corpus runs the same plan over an empty unmatched
+        set."""
         # Fold the mention stream BEFORE the dictionary joins and the stage
         # write (guide §2.3 partial aggregation): group on the narrow
         # surface/phrase key (plus any carry columns such as part_id)
         # keeping url = min(url). Map-side partial aggregation collapses
         # the per-mention rows to the KB-bounded distinct-fact set INSIDE
-        # the extraction job, so the dictionary probes touch thousands of
-        # rows instead of one row per mention, the staged parquet is tiny,
-        # and every downstream consumer (probe, patch joins, triples'
-        # re-fold) scans a tiny file. Exact for triples(): its
-        # graph = min(url) re-fold computes min-of-mins == global min, and
-        # record slots are functionally determined by the surfaces (joining
-        # before or after the fold yields the same rows). The fold happens
-        # HERE, before the local/distributed dispatch, so both linking
-        # paths share one copy of this load-bearing rewrite.
+        # the extraction job, so the linking joins touch thousands of rows
+        # instead of one row per mention and the staged parquet is tiny.
+        # Exact for triples(): its graph = min(url) re-fold computes
+        # min-of-mins == global min, and record slots are functionally
+        # determined by the surfaces (joining before or after the fold
+        # yields the same rows). Staged because the fold feeds both the
+        # surface set and the slot joins: the extraction under it runs once.
         fold_keys = [c for c in mentions.columns if c != "url"]
-        folded = mentions.groupBy(*fold_keys).agg(F.min("url").alias("url"))
-        dic_local = self._resolved_dictionary()
-        if dic_local is None:
-            return self._linked_distributed(folded)
-        bdict = F.broadcast(
-            spark.createDataFrame(
-                list(dic_local.items()), "surface string, record_id string"
-            )
+        folded = self._stage(
+            mentions.groupBy(*fold_keys).agg(F.min("url").alias("url"))
         )
-        m = folded.join(
-            bdict.withColumnRenamed("surface", "subj_surface").withColumnRenamed(
-                "record_id", "subj_surface_record"
-            ),
-            "subj_surface",
-            "left",
-        ).join(
-            bdict.withColumnRenamed("surface", "obj_surface").withColumnRenamed(
-                "record_id", "obj_surface_record"
-            ),
-            "obj_surface",
-            "left",
-        )
-        obs = None
-        if self.fuzzy:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            miss = F.col("subj_surface_record").isNull().cast("long") + F.col(
-                "obj_surface_record"
-            ).isNull().cast("long")
-            m = m.observe(obs, F.sum(miss).alias("miss"))
-        staged = self._stage(m)
-        fully_linked = staged.where(
-            F.col("subj_surface_record").isNotNull()
-            & F.col("obj_surface_record").isNotNull()
-        )
-        if not self.fuzzy or not (obs.get["miss"] or 0):
-            return fully_linked
-        # dirty corpus: fuzzy-link the unmatched surfaces and patch the
-        # NULL slots. The unmatched set is re-derived from the staged
-        # parquet (cheap pruned scan), never from the live plan.
-        unmatched_df = (
-            staged.where(F.col("subj_surface_record").isNull())
-            .select(F.col("subj_surface").alias("surface"))
-            .unionByName(
-                staged.where(F.col("obj_surface_record").isNull()).select(
-                    F.col("obj_surface").alias("surface")
-                )
-            )
-            .distinct()
-        )
-        local: list[str] | None = None
-        if self.max_local_surfaces is None:
-            local = [r["surface"] for r in unmatched_df.collect()]
-        else:
-            # one job either way: the head IS the unmatched list when it
-            # fits, and the size probe when it doesn't
-            head = unmatched_df.limit(self.max_local_surfaces + 1).collect()
-            if len(head) <= self.max_local_surfaces:
-                local = [r["surface"] for r in head]
-        if local is not None:
-            fz_rows = []
-            if local:
-                fz_rows = [
-                    (r["surface"], r["record_id"])
-                    for r in link_fuzzy(
-                        spark.createDataFrame(
-                            [(s,) for s in local], "surface string"
-                        ),
-                        None,
-                        jaccard_threshold=self.fuzzy_threshold,
-                        prepped=self._fuzzy_dictionary(),
-                    ).collect()
-                ]
-            if not fz_rows:
-                return fully_linked  # nothing recoverable: unmatched rows drop
-            fz = F.broadcast(
-                spark.createDataFrame(fz_rows, "surface string, record_id string")
-            )
-        else:
-            # unmatched set too large to collect: fuzzy-link it distributed
-            # (banded MinHash-LSH, no all-pairs), staged once so both patch
-            # joins scan parquet instead of recomputing the LSH plan.
-            fz = self._stage(
+        dictionary, fuzzy = self._link_index()
+        dictionary = dictionary.select("surface", "record_id")
+        surfaces = folded.select(
+            F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
+        ).distinct()
+        unmatched = surfaces.join(dictionary, "surface", "left_anti")
+        # staged: both slot joins read it, and an inline mapping would run
+        # the fuzzy pass once per slot
+        mapping = self._stage(
+            surfaces.join(dictionary, "surface").unionByName(
                 link_fuzzy(
-                    unmatched_df,
-                    None,
-                    jaccard_threshold=self.fuzzy_threshold,
-                    prepped=self._fuzzy_dictionary(),
+                    unmatched, None, jaccard_threshold=_FUZZY_THRESHOLD, prepped=fuzzy
                 ).select("surface", "record_id")
             )
-        return (
-            staged.join(
-                fz.withColumnRenamed("surface", "subj_surface").withColumnRenamed(
-                    "record_id", "_fz_subj"
+        )
+        for slot in ("subj_surface", "obj_surface"):
+            folded = folded.join(
+                mapping.select(
+                    F.col("surface").alias(slot),
+                    F.col("record_id").alias(f"{slot}_record"),
                 ),
-                "subj_surface",
-                "left",
+                slot,
             )
-            .join(
-                fz.withColumnRenamed("surface", "obj_surface").withColumnRenamed(
-                    "record_id", "_fz_obj"
-                ),
-                "obj_surface",
-                "left",
-            )
-            .withColumn(
-                "subj_surface_record",
-                F.coalesce("subj_surface_record", "_fz_subj"),
-            )
-            .withColumn(
-                "obj_surface_record", F.coalesce("obj_surface_record", "_fz_obj")
-            )
-            .drop("_fz_subj", "_fz_obj")
-            .where(
-                F.col("subj_surface_record").isNotNull()
-                & F.col("obj_surface_record").isNotNull()
-            )
-        )
-
-    def _linked_distributed(self, mentions: DataFrame) -> DataFrame:
-        """The 100x-KB path: the dictionary exceeds ``max_local_dictionary``
-        so it is NEVER collected or broadcast-hinted — mentions shuffle-join
-        the distributed dictionary relation (AQE still broadcasts it if the
-        optimizer measures it small enough). Probe elision is impossible
-        without a local vocabulary, so fuzzy=True always runs the
-        distributed anti-join + MinHash-LSH pass; exact matches and fuzzy
-        recoveries union into one staged mapping consumed by both joins."""
-        from gtfsrt2lc_spark.operators.linking import resolve_dictionary
-
-        dict_df = resolve_dictionary(self.surfaces).select("surface", "record_id")
-        # ``mentions`` arrives already pre-folded by linked() (one row per
-        # distinct (surfaces, phrase[, part]) with url = min(url))
-        mentions = self._stage(mentions)
-        if self.fuzzy:
-            unmatched_df = (
-                mentions.select(
-                    F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
-                )
-                .distinct()
-                .join(dict_df, "surface", "left_anti")
-            )
-            fz = link_fuzzy(
-                unmatched_df,
-                None,
-                jaccard_threshold=self.fuzzy_threshold,
-                prepped=self._fuzzy_dictionary(),
-            ).select("surface", "record_id")
-            mapping = self._stage(dict_df.unionByName(fz))
-        else:
-            mapping = dict_df
-        m = mentions.join(
-            mapping.withColumnRenamed("surface", "subj_surface").withColumnRenamed(
-                "record_id", "subj_surface_record"
-            ),
-            "subj_surface",
-        )
-        return m.join(
-            mapping.withColumnRenamed("surface", "obj_surface").withColumnRenamed(
-                "record_id", "obj_surface_record"
-            ),
-            "obj_surface",
-        )
+        return folded
 
     def _stage(self, df: DataFrame) -> DataFrame:
         """Materialize an intermediate to a scratch parquet dir and re-read.
@@ -588,7 +394,8 @@ class KGPipeline:
         return spark.read.schema(df.schema).parquet(path)
 
     def cleanup(self) -> None:
-        """Remove scratch stage dirs created by linked().
+        """Remove the per-run stage dirs created by linked(). The persisted
+        KB frames (``_link_index``, ``canonical_map``) outlive every run.
 
         Hadoop-FS scratch paths delete through the FileSystem API (works on
         HDFS/S3A/local alike); tempfile fallbacks through shutil."""
@@ -602,12 +409,6 @@ class KGPipeline:
             else:
                 shutil.rmtree(path, ignore_errors=True)
         self._scratch.clear()
-        if not self._canonical_local:
-            # the staged canonical map's parquet just vanished with the
-            # scratch dirs — recompute on next use instead of dangling
-            self._canonical_map = None
-        # the fuzzy dictionary's staged band/shingle parquet is gone too
-        self._fuzzy_dict = None
 
     # ---- stage 5+6 -------------------------------------------------------
     def canonical_map(self) -> DataFrame:
@@ -615,15 +416,10 @@ class KGPipeline:
 
         Connected components over sameAs edges; component id = min record_id;
         IRI minted from the canonical record's name. Computed once per
-        pipeline instance and cached (the KB is static across micro-batches —
-        the reference's index-reuse pattern, README.md:58).
-
-        Under ``max_local_dictionary`` records the map is collected and
-        served as a LocalRelation (cheap to broadcast repeatedly, no
-        distributed subplan re-runs); beyond the cap it is STAGED to
-        parquet and joined distributed — a 100x KB must never transit the
-        driver (``_canonical_local`` tells triples() whether a broadcast
-        hint is sound)."""
+        pipeline instance, persisted and materialized here, so its cost is
+        KB preparation (the KB is static across micro-batches — the
+        reference's index-reuse pattern, README.md:58). Never collected: a
+        100x KB stays distributed, and triples() joins it unhinted."""
         if self._canonical_map is not None:
             return self._canonical_map
         cc = connected_components(self.sameas)
@@ -643,23 +439,8 @@ class KGPipeline:
             "canonical_record",
             entity_iri(F.col("canonical_name")).alias("iri"),
         )
-        if self.max_local_dictionary is None:
-            collected = out.collect()
-        else:
-            # one job either way: the head IS the map when it fits,
-            # and the size probe when it doesn't
-            collected = out.limit(self.max_local_dictionary + 1).collect()
-            if len(collected) > self.max_local_dictionary:
-                self._canonical_map = self._stage(out)
-                self._canonical_local = False
-                return self._canonical_map
-        rows = [
-            (r["record_id"], r["canonical_record"], r["iri"]) for r in collected
-        ]
-        self._canonical_map = self.records.sparkSession.createDataFrame(
-            rows, "record_id string, canonical_record string, iri string"
-        )
-        self._canonical_local = True
+        self._canonical_map = out.persist()
+        self._canonical_map.count()
         return self._canonical_map
 
     # ---- stage 7 ---------------------------------------------------------
@@ -670,8 +451,6 @@ class KGPipeline:
         manifest) and dedups per (part, s, p, o)."""
         linked = self.linked(self._mentions_fused(self._latest(pages)))
         canon = self.canonical_map()
-        if self._canonical_local:  # over-cap maps join distributed (AQE picks)
-            canon = F.broadcast(canon)
 
         pred_map = F.create_map(
             *[F.lit(x) for kv in self.predicates.items() for x in kv]

@@ -6,7 +6,8 @@ Shape: ``readStream`` over the pages table -> ``foreachBatch`` running the
 full KGPipeline per micro-batch. The KB dimensions (records / surfaces /
 sameas / canonical map) are built once in the KGPipeline and reused across
 micro-batches — the exact analog of the reference building GtfsIndexes once
-and re-parsing feeds against them.
+and re-parsing feeds against them. Each batch frees its own stage checkpoints
+when it ends, so a stream that runs for days holds no growing scratch.
 
 Exactly-once posture: Spark's streaming checkpoint tracks which input files
 each epoch consumed; the batch writer lands every epoch in its own
@@ -40,7 +41,11 @@ def stream_pages_to_triples(
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         target = os.path.join(out_dir, f"epoch={epoch_id}")
-        pipeline.triples(batch_df).write.mode("overwrite").parquet(target)
+        try:
+            pipeline.triples(batch_df).write.mode("overwrite").parquet(target)
+        finally:
+            # per-batch stage checkpoints only: the KB frames stay persisted
+            pipeline.cleanup()
 
     writer = pages_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

@@ -183,14 +183,6 @@ def main() -> None:
                          "payload-leaked-into-an-exchange signature that broke "
                          "round-4 scaling")
     ap.add_argument("--forensics-threshold", type=float, default=0.3)
-    ap.add_argument("--max-local-dictionary", type=int, default=None,
-                    help="forwarded to submit_pipeline.py / KGPipeline: 0 "
-                         "forces the fully distributed dictionary path (the "
-                         "100x-KB posture) through the N->4N protocol")
-    ap.add_argument("--max-local-surfaces", type=int, default=None,
-                    help="forwarded to submit_pipeline.py / KGPipeline: 0 "
-                         "forces the fully distributed fuzzy patch (unmatched "
-                         "surfaces never collected)")
     ap.add_argument("--dirty-pages", type=int, default=0,
                     help="union N deterministic out-of-dictionary pages into "
                          "every leg's input, so the fuzzy MinHash-LSH linking "
@@ -230,12 +222,6 @@ def main() -> None:
     if staged_here:
         results["staging_args"] = {"n_pages": args.n_pages}
     extra_args = []
-    if args.max_local_dictionary is not None:
-        extra_args += ["--max-local-dictionary", str(args.max_local_dictionary)]
-        results["max_local_dictionary"] = args.max_local_dictionary
-    if args.max_local_surfaces is not None:
-        extra_args += ["--max-local-surfaces", str(args.max_local_surfaces)]
-        results["max_local_surfaces"] = args.max_local_surfaces
     if args.dirty_pages > 0:
         extra_args += ["--dirty-pages", str(args.dirty_pages)]
         results["dirty_pages"] = args.dirty_pages

@@ -27,14 +27,6 @@ def main() -> None:
                     help="latest-wins dedup escape hatch (billion-dup-key "
                          "corpora): winner selection via payload shuffle "
                          "instead of the broadcast dup-stats join")
-    ap.add_argument("--max-local-dictionary", type=int, default=None,
-                    help="KGPipeline dictionary cap; 0 = never collect the "
-                         "dictionary (fully distributed exact+fuzzy mapping, "
-                         "the 100x-KB posture). Default: pipeline default (2M)")
-    ap.add_argument("--max-local-surfaces", type=int, default=None,
-                    help="KGPipeline unmatched-surface collect cap; 0 = the "
-                         "unmatched set is never collected (fully distributed "
-                         "fuzzy patch). Default: pipeline default (1M)")
     ap.add_argument("--dirty-pages", type=int, default=0,
                     help="union N deterministic out-of-dictionary (typo'd) "
                          "pages into the corpus before the timed run, so the "
@@ -177,16 +169,10 @@ def main() -> None:
     else:
         n_docs = pages.select("url").distinct().count()  # input materialization, untimed
 
-    pipe_kwargs = {}
-    if args.max_local_dictionary is not None:
-        pipe_kwargs["max_local_dictionary"] = args.max_local_dictionary
-    if args.max_local_surfaces is not None:
-        pipe_kwargs["max_local_surfaces"] = args.max_local_surfaces
     pipe = KGPipeline(records, surfaces, sameas,
                       {ph: loc for ph, (loc, _, _) in PREDICATES.items()},
                       broadcast_dups=not args.no_broadcast_dups,
-                      canonical_urls=args.canonical_urls,
-                      **pipe_kwargs)
+                      canonical_urls=args.canonical_urls)
     pipe.canonical_map()  # KB prep amortized across runs, untimed
     if args.warmup:
         pipe.triples(pages.where(F.pmod(F.xxhash64("url"), F.lit(100)) == 0)).count()

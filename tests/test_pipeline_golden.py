@@ -51,18 +51,19 @@ def test_triples_well_formed(result_triples):
 def test_strategy_equivalence(pipeline, corpus_dfs, spark, result_triples):
     """Broadcast-join plan vs forced shuffle plan give identical triples —
     the analog of the reference's MemStore/grep/LevelStore equivalence
-    (`test/gtfsrt2lc.test.js:394-485`)."""
+    (`test/gtfsrt2lc.test.js:394-485`). No linking join carries a hint, so
+    with broadcasts off the dictionary joins, the fuzzy pass over the dirty
+    corpus's unmatched surfaces, the surface mapping and the canonical map
+    all take the shuffle plan."""
     pages = corpus_dfs[0]
+    dirty, extra = _dirty_pages(spark, pages)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        shuffled = {
-            (r["subj"], r["pred"], r["obj"])
-            for r in pipeline.triples(pages.repartition(7)).collect()
-        }
+        for inp, want in ((pages, result_triples), (dirty, result_triples | extra)):
+            assert _triple_set(pipeline, inp.repartition(7)) == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert shuffled == result_triples
 
 
 def test_latest_wins_recrawl(pipeline, corpus_dfs, corpus, spark):
@@ -123,9 +124,9 @@ def test_fuzzy_link_band_join_shuffles_no_shingles(spark, corpus_dfs):
 def _dirty_pages(spark, pages):
     """Clean corpus + pages whose fact sentences carry OUT-OF-DICTIONARY
     (typo'd) surfaces — one in the subject slot, one in the object slot —
-    so linked()'s miss counter is provably non-zero and the fuzzy branch
-    under test actually executes (a clean corpus takes the miss==0 elision
-    fast path and never reaches it)."""
+    so linked()'s unmatched surface set is provably non-empty and the fuzzy
+    pass has something to recover (over a clean corpus it runs on an empty
+    set)."""
     from datetime import datetime
 
     from gtfsrt2lc_spark.fixtures.pages import _render_page
@@ -170,47 +171,14 @@ def _triple_set(pipe, pages):
 
 
 def test_fuzzy_patch_recovers_dirty_corpus(spark, corpus_dfs, result_triples):
-    """Out-of-dictionary surfaces force miss>0: the probe-elision fast path
-    must NOT fire, the fuzzy patch must recover exactly the typo'd facts,
-    and everything else must match the clean-corpus golden set."""
+    """Out-of-dictionary surfaces reach the fuzzy pass: it must recover
+    exactly the typo'd facts, and everything else must match the
+    clean-corpus golden set."""
     pages, records, surfaces, sameas = corpus_dfs
     preds = {phrase: local for phrase, (local, _, _) in PREDICATES.items()}
     dirty, extra = _dirty_pages(spark, pages)
     got = _triple_set(KGPipeline(records, surfaces, sameas, preds), dirty)
     assert got == result_triples | extra
-
-
-def test_distributed_fuzzy_mapping_equivalence(spark, corpus_dfs, result_triples):
-    """max_local_surfaces=0 + a dirty corpus forces the fully DISTRIBUTED
-    fuzzy mapping (the web-scale branch where the unmatched surface set must
-    never be collected); the triple set must be identical to the driver-side
-    fast path — the engine's MemStore/LevelStore-style duality. The dirty
-    pages guarantee miss>0, so the branch under test genuinely runs (with a
-    clean corpus the miss==0 elision would short-circuit it)."""
-    pages, records, surfaces, sameas = corpus_dfs
-    preds = {phrase: local for phrase, (local, _, _) in PREDICATES.items()}
-    dirty, extra = _dirty_pages(spark, pages)
-    pipe = KGPipeline(records, surfaces, sameas, preds, max_local_surfaces=0)
-    got = _triple_set(pipe, dirty)
-    assert got == result_triples | extra
-
-
-def test_distributed_dictionary_equivalence(spark, corpus_dfs, result_triples):
-    """max_local_dictionary=0 forces the 100x-KB path: the dictionary is
-    never collected (no broadcast LocalRelation, no driver dict), the
-    canonical map stays a staged distributed relation, and the exact+fuzzy
-    mapping joins run distributed — triples must still be identical."""
-    pages, records, surfaces, sameas = corpus_dfs
-    preds = {phrase: local for phrase, (local, _, _) in PREDICATES.items()}
-    dirty, extra = _dirty_pages(spark, pages)
-    pipe = KGPipeline(records, surfaces, sameas, preds, max_local_dictionary=0)
-    assert pipe._resolved_dictionary() is None  # over-cap probe engaged
-    got = _triple_set(pipe, dirty)
-    assert not pipe._canonical_local
-    assert got == result_triples | extra
-    # clean corpus through the same path (fuzzy finds nothing to recover)
-    pipe2 = KGPipeline(records, surfaces, sameas, preds, max_local_dictionary=0)
-    assert _triple_set(pipe2, pages) == result_triples
 
 
 def test_broadcast_dups_escape_hatch(spark, corpus_dfs, result_triples):
@@ -248,27 +216,24 @@ def test_link_fuzzy_prepped_equivalence(spark, corpus_dfs, corpus):
 
 
 def test_fuzzy_dictionary_reused_across_batches(spark, corpus_dfs, result_triples):
-    """Two dirty micro-batches through ONE pipeline build the dictionary-side
-    LSH tables exactly once (the reference's index-reuse pattern): the second
-    batch adds only its own stage checkpoint, results stay golden, and
-    cleanup() invalidates the cache with the staged parquet."""
+    """Two dirty batches through ONE pipeline build the KB frames once (the
+    reference's index-reuse pattern): cleanup() between them frees only the
+    first batch's stage checkpoint, so the second batch builds no KB frame
+    — the persisted-RDD count stays put and the frames are the same
+    objects — and both results stay golden."""
     pages, records, surfaces, sameas = corpus_dfs
     preds = {phrase: local for phrase, (local, _, _) in PREDICATES.items()}
     dirty, extra = _dirty_pages(spark, pages)
     pipe = KGPipeline(records, surfaces, sameas, preds)
-    try:
-        got1 = {
-            (r["subj"], r["pred"], r["obj"]) for r in pipe.triples(dirty).collect()
-        }
-        fd = pipe._fuzzy_dict
-        assert fd is not None  # dirty batch engaged the fuzzy pass
-        n_stages = len(pipe._scratch)
-        got2 = {
-            (r["subj"], r["pred"], r["obj"]) for r in pipe.triples(dirty).collect()
-        }
-        assert pipe._fuzzy_dict is fd  # built once, reused
-        assert len(pipe._scratch) == n_stages + 1  # only batch 2's own stage
-        assert got1 == got2 == result_triples | extra
-    finally:
-        pipe.cleanup()
-    assert pipe._fuzzy_dict is None  # staged tables gone -> cache reset
+
+    def kb_frames():
+        fd = pipe._fuzzy
+        return (pipe._dictionary, fd, fd.bands_df, fd.shingled, pipe._canonical_map)
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    got1 = _triple_set(pipe, dirty)
+    frames, n_persisted = kb_frames(), len(persisted())
+    got2 = _triple_set(pipe, dirty)
+    assert all(a is b for a, b in zip(kb_frames(), frames))
+    assert len(persisted()) == n_persisted
+    assert got1 == got2 == result_triples | extra

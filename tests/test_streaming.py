@@ -45,15 +45,21 @@ def test_streaming_kg_pipeline_matches_batch(spark, corpus_dfs, tmp_path):
         pipe.cleanup()
 
 
-def test_streaming_dirty_batches_reuse_fuzzy_dictionary(spark, corpus_dfs, tmp_path):
+def test_streaming_dirty_batches_reuse_fuzzy_dictionary(
+    spark, corpus_dfs, tmp_path, monkeypatch
+):
     """Two dirty micro-batches (each with out-of-dictionary typo'd surfaces)
-    stream through ONE pipeline: the dictionary-side LSH tables are staged
-    exactly once across the whole stream (2 dict stages + 1 mention stage
-    per batch — a per-batch rebuild would add 2 more), and the streamed
+    stream through ONE pipeline: the dictionary-side LSH tables are built
+    exactly once across the whole stream, every batch frees its stage
+    checkpoint when it ends (no stage dirs are left), and the streamed
     triple set equals the batch pipeline over the same dirty corpus."""
+    import glob
+    import os
+    import tempfile
     from datetime import datetime
 
     from gtfsrt2lc_spark.fixtures.pages import PREDICATES, _render_page
+    from gtfsrt2lc_spark.plans import kg_pipeline
     from gtfsrt2lc_spark.plans.kg_pipeline import KGPipeline
     from gtfsrt2lc_spark.streaming.pages import (
         read_stream_triples,
@@ -98,6 +104,17 @@ def test_streaming_dirty_batches_reuse_fuzzy_dictionary(spark, corpus_dfs, tmp_p
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
+    builds = []
+    build = kg_pipeline.FuzzyDictionary
+    monkeypatch.setattr(
+        kg_pipeline, "FuzzyDictionary",
+        lambda *a, **kw: builds.append(1) or build(*a, **kw),
+    )
+
+    def stages():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "kgstage_*")))
+
+    before = stages()
     pipe = KGPipeline(records, surfaces, sameas, preds)
     try:
         q = stream_pages_to_triples(
@@ -111,8 +128,7 @@ def test_streaming_dirty_batches_reuse_fuzzy_dictionary(spark, corpus_dfs, tmp_p
             .select("subj", "pred", "obj").collect()
         }
         assert got == want and len(got) > 0
-        assert pipe._fuzzy_dict is not None  # both batches were dirty
-        # 2 batches x 1 mention stage + 2 one-time dictionary stages
-        assert len(pipe._scratch) == 4
+        assert len(builds) == 1
+        assert pipe._scratch == [] and stages() == before
     finally:
         pipe.cleanup()
