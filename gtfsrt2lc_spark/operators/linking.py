@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gtfsrt2lc_spark.functions.hashing import minhash_perms
+from gtfsrt2lc_spark.functions.hashing import MOD, minhash_perms
 
 
 def resolve_dictionary(surfaces: DataFrame) -> DataFrame:
@@ -59,34 +59,56 @@ def _shingle_hashes(col, n: int = 3):
     )
 
 
-def _prep_bands(
-    df: DataFrame, side: str, perms: list[tuple[int, int]], bands: int
-) -> DataFrame:
-    """(surface_<side>, band) LSH band table for one join side.
+def _lsh_columns(side: str, perms: list[tuple[int, int]], bands: int):
+    """The Columns that take one join side from ``surface_<side>`` to its
+    LSH band keys, in three projections: the shingle-hash array
+    ``sh_<side>``, the MinHash signature ``sig_<side>`` over it, and the
+    exploded ``band`` key over the signature (band index plus that band's
+    ``rows`` signature values).
 
-    Explode shingle hashes -> flat min-aggregates per permutation
-    (SURVEY.md §2.9: posexplode + min per band, no UDAF, no deep HOFs),
-    emitting ONLY (surface, band) — payload-free by design."""
+    Projections, not an explode plus a per-surface min aggregate: a
+    signature is a pure function of one surface's shingle array, so no
+    row leaves its partition. Each projection reads its input column
+    several times, so Catalyst keeps them apart instead of inlining the
+    shingle or signature expression into every use."""
     rows = len(perms) // bands
-    ex = df.select(
-        F.col("surface").alias(f"surface_{side}"),
-        F.explode(_shingle_hashes(F.col("surface"))).alias("h"),
-    )
-    sigs = ex.groupBy(f"surface_{side}").agg(
-        *[
-            F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(2_147_483_647)).alias(f"s{i}")
-            for i, (a, b) in enumerate(perms)
-        ],
-    )
-    bandcols = [
-        F.concat_ws(
-            "_",
-            F.lit(bi),
-            *[F.col(f"s{bi * rows + r}").cast("string") for r in range(rows)],
+    sh = _shingle_hashes(F.col(f"surface_{side}")).alias(f"sh_{side}")
+
+    def perm_min(a: int, b: int):
+        return F.array_min(
+            F.transform(F.col(f"sh_{side}"), lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MOD))
         )
-        for bi in range(bands)
-    ]
-    return sigs.select(f"surface_{side}", F.explode(F.array(*bandcols)).alias("band"))
+
+    sig = F.array(*[perm_min(a, b) for a, b in perms]).alias(f"sig_{side}")
+    s = F.col(f"sig_{side}")
+    band = F.explode(
+        F.array(
+            *[
+                F.concat_ws(
+                    "_", F.lit(bi), *[s[bi * rows + r].cast("string") for r in range(rows)]
+                )
+                for bi in range(bands)
+            ]
+        )
+    ).alias("band")
+    return sh, sig, band
+
+
+def _prep_bands(
+    df: DataFrame, side: str, perms: list[tuple[int, int]], bands: int, cols=None
+) -> DataFrame:
+    """(surface_<side>, band) LSH band table for one join side — the one
+    band-key path of both the dictionary and the query side, so the two
+    always hash identically. Payload-free by design. ``cols`` reuses
+    Columns already built by ``_lsh_columns`` for these parameters."""
+    sh, sig, band = cols or _lsh_columns(side, perms, bands)
+    key = f"surface_{side}"
+    return (
+        df.select(F.col("surface").alias(key))
+        .select(key, sh)
+        .select(key, sig)
+        .select(key, band)
+    )
 
 
 class FuzzyDictionary:
@@ -96,8 +118,8 @@ class FuzzyDictionary:
     dictionary, so a micro-batch loop must not rebuild them per batch —
     the reference builds its indexes once and re-parses every feed against
     them (README.md:58, lib/GtfsIndex.js:75-169), and at a 100x KB the
-    dictionary-side signature aggregation is the dominant cost of a fuzzy
-    pass. Build one of these per KB and pass it to ``link_fuzzy`` via
+    dictionary-side signatures are the dominant cost of a fuzzy pass.
+    Build one of these per KB and pass it to ``link_fuzzy`` via
     ``prepped``; callers may re-point ``bands_df`` / ``shingled`` at a
     staged (parquet) or persisted copy so later batches scan instead of
     recomputing (KGPipeline persists them for the pipeline's lifetime).
@@ -152,6 +174,17 @@ class FuzzyDictionary:
             F.col("record_id"),
             _shingle_hashes(F.col("surface")).alias("sh_d"),
         )
+        # The query-side Columns depend only on the hash parameters, so
+        # they are composed once here instead of once per link_fuzzy call
+        # (hundreds of py4j calls each).
+        self._q_cols = _lsh_columns("q", self._perms, bands)
+        inter = F.size(F.array_intersect("sh_q", "sh_d"))
+        union = F.size("sh_q") + F.size("sh_d") - inter
+        self._score = (inter.cast("double") / union.cast("double")).alias("score")
+        # highest score, then smallest record_id
+        self._winner = F.min(
+            F.struct((-F.col("score")).alias("neg_score"), F.col("record_id"))
+        ).alias("w")
 
 
 def link_fuzzy(
@@ -164,11 +197,12 @@ def link_fuzzy(
     prepped: FuzzyDictionary | None = None,
     max_band_size: int | None = 1000,
 ) -> DataFrame:
-    """Fuzzy-link distinct unmatched surfaces to dictionary entries.
+    """Fuzzy-link unmatched surfaces to dictionary entries.
 
-    surfaces_q: one column ``surface`` (distinct). Returns
-    (surface, record_id, score) for the best match with character-3-gram
-    Jaccard >= threshold.
+    surfaces_q: one column ``surface`` (duplicates allowed). Returns one
+    (surface, record_id, score) row per surface that has a match with
+    character-3-gram Jaccard >= threshold: the highest score, ties to the
+    smallest record_id.
 
     MinHash-LSH candidate generation (band-bucket equi-join) then exact
     Jaccard verification on candidates only. Pass ``prepped`` (a
@@ -183,15 +217,16 @@ def link_fuzzy(
     quadratic-blowup guard — see ``FuzzyDictionary``); it applies when
     this call builds the dictionary tables itself.
 
-    Shuffle discipline: the band join replicates every row x bands, so it
-    runs on NARROW (key, band) frames only; shingle sets are recomputed
-    closed-form from the surface strings and joined back to the deduped
-    candidate pairs (at most one shuffle of each set per side, instead of
-    x bands). Candidates dedup on (surface_q, surface_d) — not on
-    record_id — so when one record owns several bucketed surfaces every
-    (query, dict-surface) pair is scored and the winner window picks the
-    best, deterministically (the old arbitrary-row dropDuplicates could
-    keep a worse-scoring surface's shingles).
+    Shuffle discipline: the query side's shingles, signatures and band
+    keys are projections of each surface, so no row moves before the band
+    join. The band join replicates every row x bands, so it runs on the
+    NARROW (surface_q, band) frame only; the dictionary's shingle sets
+    join back to the candidate pairs afterwards, and the query's are
+    recomputed closed-form from ``surface_q`` there. The one shuffle is the
+    per-surface winner aggregate, ``min(struct(-score, record_id))``: a
+    pair that collides on several bands, or a record that owns several
+    bucketed surfaces, is scored once per candidate row, and the aggregate
+    keeps the highest score, then the smallest record_id.
     """
     if prepped is None:
         if dictionary is None:
@@ -219,27 +254,22 @@ def link_fuzzy(
                 f"FuzzyDictionary (param: (passed, prepped)): {mismatched}; "
                 "rebuild the dictionary with these params or drop them"
             )
-    qd = surfaces_q.select("surface").distinct()
-    q = _prep_bands(qd, "q", prepped._perms, prepped.bands)
-
-    cand = (
-        q.join(prepped.bands_df, "band")
-        .drop("band")
-        .dropDuplicates(["surface_q", "surface_d"])
+    q = _prep_bands(
+        surfaces_q, "q", prepped._perms, prepped.bands, cols=prepped._q_cols
     )
-    qsh = qd.select(
-        F.col("surface").alias("surface_q"),
-        _shingle_hashes(F.col("surface")).alias("sh_q"),
-    )
-    cand = cand.join(qsh, "surface_q").join(prepped.shingled, "surface_d")
-    inter = F.size(F.array_intersect("sh_q", "sh_d"))
-    union = F.size("sh_q") + F.size("sh_d") - inter
-    scored = cand.withColumn(
-        "score", (inter.cast("double") / union.cast("double"))
-    ).where(F.col("score") >= jaccard_threshold)
-    w = Window.partitionBy("surface_q").orderBy(F.col("score").desc(), F.col("record_id"))
+    sh_q = prepped._q_cols[0]
     return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(F.col("surface_q").alias("surface"), "record_id", "score")
+        q.join(prepped.bands_df, "band")
+        .select("surface_q", "surface_d")
+        .join(prepped.shingled, "surface_d")
+        .select("surface_q", "record_id", sh_q, "sh_d")
+        .select("surface_q", "record_id", prepped._score)
+        .where(F.col("score") >= jaccard_threshold)
+        .groupBy("surface_q")
+        .agg(prepped._winner)
+        .select(
+            F.col("surface_q").alias("surface"),
+            F.col("w.record_id").alias("record_id"),
+            (-F.col("w.neg_score")).alias("score"),
+        )
     )

@@ -311,16 +311,16 @@ class KGPipeline:
         pre-folded frame (min-of-mins).
 
         One plan whatever the sizes: the distinct subject and object
-        surfaces inner-join the resolved dictionary (exact matches) and
-        anti-join it (the unmatched set, fuzzy-linked by MinHash-LSH
-        against the persisted band tables); exact and fuzzy matches union
-        into one surface -> record mapping, which the folded facts join
-        once per slot. Nothing is collected and no join carries a strategy
-        hint: AQE and the optimizer's size statistics broadcast a side
-        while it is small and shuffle it once the KB or the unmatched set
-        outgrows a broadcast ("To Partition, or Not to Partition", SIGMOD
-        2021). A clean corpus runs the same plan over an empty unmatched
-        set."""
+        surfaces left-join the resolved dictionary once. Rows that found a
+        record are the exact matches; only the rows that came back null
+        are fuzzy-linked by MinHash-LSH against the persisted band tables.
+        Exact and fuzzy matches union into one surface -> record mapping,
+        which the folded facts join once per slot. Nothing is collected
+        and no join carries a strategy hint: AQE and the optimizer's size
+        statistics broadcast a side while it is small and shuffle it once
+        the KB or the unmatched set outgrows a broadcast ("To Partition, or
+        Not to Partition", SIGMOD 2021). A clean corpus runs the same plan
+        over an empty unmatched set."""
         # Fold the mention stream BEFORE the dictionary joins and the stage
         # write (guide §2.3 partial aggregation): group on the narrow
         # surface/phrase key (plus any carry columns such as part_id)
@@ -338,15 +338,30 @@ class KGPipeline:
             mentions.groupBy(*fold_keys).agg(F.min("url").alias("url"))
         )
         dictionary, fuzzy = self._link_index()
-        dictionary = dictionary.select("surface", "record_id")
-        surfaces = folded.select(
-            F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
-        ).distinct()
-        unmatched = surfaces.join(dictionary, "surface", "left_anti")
+        # Both branches below read this one lookup. The explicit not-null
+        # filters keep their subplans identical: otherwise the optimizer
+        # turns the exact branch into an inner join, infers these filters
+        # for it alone, and the distinct-surface shuffle and the
+        # dictionary broadcast each run twice instead of being reused.
+        lookup = (
+            folded.select(
+                F.explode(F.array("subj_surface", "obj_surface")).alias("surface")
+            )
+            .where(F.col("surface").isNotNull())
+            .distinct()
+            .join(
+                dictionary.select("surface", "record_id").where(
+                    F.col("record_id").isNotNull()
+                ),
+                "surface",
+                "left",
+            )
+        )
+        unmatched = lookup.where(F.col("record_id").isNull()).select("surface")
         # staged: both slot joins read it, and an inline mapping would run
         # the fuzzy pass once per slot
         mapping = self._stage(
-            surfaces.join(dictionary, "surface").unionByName(
+            lookup.where(F.col("record_id").isNotNull()).unionByName(
                 link_fuzzy(
                     unmatched, None, jaccard_threshold=_FUZZY_THRESHOLD, prepped=fuzzy
                 ).select("surface", "record_id")
@@ -448,31 +463,24 @@ class KGPipeline:
         """Deduplicated (subj, pred, obj, graph) — graph = min provenance url.
 
         with_part=True additionally carries ``part_id`` (for the checkpoint
-        manifest) and dedups per (part, s, p, o)."""
+        manifest), dedups per (part, s, p, o) and returns the rows clustered
+        by ``part_id``, so a ``partitionBy("part_id")`` write lands one file
+        per part without an exchange of its own."""
         linked = self.linked(self._mentions_fused(self._latest(pages)))
         canon = self.canonical_map()
 
         pred_map = F.create_map(
             *[F.lit(x) for kv in self.predicates.items() for x in kv]
         )
-        # Aggregate BEFORE minting (guide §2.3): group the mention stream on
-        # the narrow (record, phrase, record) key first — map-side partial
-        # aggregation collapses the per-mention rows to the (KB-bounded)
-        # distinct-fact set before anything is joined or concatenated — then
-        # run the canonical joins, predicate map and IRI concat on that
-        # small frame, and re-aggregate on the minted (s, p, o). Exact:
-        # record -> IRI is functional, sameAs merges are re-folded by the
-        # second min (min of per-record mins == min over the merged group),
-        # and the inner canon joins drop the same unmappable records
-        # whether they run before or after the fold. The earlier shape
-        # hash-probed and IRI-concatenated every mention row (x2 joins +
-        # string concat per row) before deduplicating.
-        pre = ["part_id"] if with_part else []
-        facts = linked.groupBy(
-            *pre, "subj_surface_record", "pred_phrase", "obj_surface_record"
-        ).agg(F.min("url").alias("graph"))
+        # linked() already folded the mentions to one row per (part,
+        # surfaces, phrase), so the canonical joins, predicate map and IRI
+        # concat run on that small frame, and the one aggregate on the
+        # minted (s, p, o) re-folds exactly: record -> IRI is functional,
+        # sameAs merges and surfaces of one record fold by min-of-mins, and
+        # the inner canon joins drop the same unmappable records whatever
+        # the grouping.
         t = (
-            facts.join(
+            linked.join(
                 canon.select(
                     F.col("record_id").alias("subj_surface_record"),
                     F.col("iri").alias("subj"),
@@ -488,5 +496,13 @@ class KGPipeline:
             )
             .withColumn("pred", predicate_iri(pred_map[F.col("pred_phrase")]))
         )
-        keys = ["part_id", "subj", "pred", "obj"] if with_part else ["subj", "pred", "obj"]
-        return t.groupBy(*keys).agg(F.min("graph").alias("graph"))
+        keys = ["subj", "pred", "obj"]
+        if with_part:
+            # One exchange for the aggregate and the partitioned write: hash
+            # clustering on part_id satisfies the (part_id, s, p, o)
+            # grouping, and the write finds its rows already clustered by
+            # part. The aggregate's parallelism is capped at the number of
+            # parts, the same cap the write has.
+            t = t.repartition("part_id")
+            keys = ["part_id"] + keys
+        return t.groupBy(*keys).agg(F.min("url").alias("graph"))

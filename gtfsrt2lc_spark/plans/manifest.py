@@ -11,11 +11,15 @@ partitioned by ``part_id``, and appends one manifest row per finished bucket:
 
   (part_id, n_docs, n_triples, input_fingerprint, run_id, wall_ms, status)
 
-Resume = anti-join pending buckets; a crashed run leaves at most its
+Resume = skip the done buckets; a crashed run leaves at most its
 in-flight buckets unrecorded, which simply re-run next time (idempotent:
 triples are deduped per (part, s, p, o) and readers dedup across parts).
-At 10^12 docs the manifest stays tiny (one row per bucket), the anti-join is
-a broadcast, and bucket counts bound retry granularity.
+At 10^12 docs the manifest stays tiny (one row per bucket): the driver
+collects the done bucket ids and filters the pages with ``isin``, builds
+the new manifest rows itself and appends them as one local relation, and
+bucket counts bound retry granularity. An absent manifest is an empty
+one; a manifest that exists but cannot be read raises, because treating
+it as empty would silently re-run every bucket.
 """
 
 from __future__ import annotations
@@ -26,10 +30,14 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gtfsrt2lc_spark.functions import hadoop_fs
+
 MANIFEST_SCHEMA = (
     "part_id int, n_docs long, n_triples long, input_fingerprint long, "
     "run_id string, wall_ms long, status string"
 )
+# the columns a triple store's parquet holds besides its part_id directories
+TRIPLE_SCHEMA = "subj string, pred string, obj string, graph string"
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -41,16 +49,17 @@ def _triples_path(out_dir: str) -> str:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The manifest rows. An absent manifest is an empty one; any other
+    read failure raises (when the frame is evaluated)."""
     path = _manifest_path(out_dir)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
+    if not hadoop_fs.exists(spark, path):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     """Global triple view: cross-partition dedup at read time."""
-    t = spark.read.parquet(_triples_path(out_dir))
+    t = spark.read.schema(TRIPLE_SCHEMA).parquet(_triples_path(out_dir))
     return t.groupBy("subj", "pred", "obj").agg(F.min("graph").alias("graph"))
 
 
@@ -94,8 +103,6 @@ def run_incremental(
             except Exception:
                 pass
             try:
-                from gtfsrt2lc_spark.functions import hadoop_fs
-
                 hadoop_fs.delete(spark, pipeline.scratch_dir)
             except Exception:
                 pass
@@ -124,26 +131,37 @@ def _run_incremental_body(
     bucketed = pages.withColumn(
         "part_id", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
     )
-    done = read_manifest(spark, out_dir).where(F.col("status") == "done").select("part_id")
-    todo = bucketed.join(F.broadcast(done), "part_id", "left_anti")
+    done = set()
+    if hadoop_fs.exists(spark, _manifest_path(out_dir)):
+        done = {
+            r["part_id"]
+            for r in read_manifest(spark, out_dir)
+            .where(F.col("status") == "done")
+            .select("part_id")
+            .collect()
+        }
+    todo = bucketed.where(~F.col("part_id").isin(sorted(done))) if done else bucketed
 
     # n_docs counts page rows (re-crawl snapshots included) — a plain
     # map-side-combinable count; an exact distinct-url count would add a
-    # full extra shuffle to every run for metrics-only value
+    # full extra shuffle to every run for metrics-only value. At most
+    # n_buckets rows reach the driver, and a store whose every bucket is
+    # done has nothing to scan.
     part_stats = (
-        todo.groupBy("part_id")
+        []
+        if done >= set(range(n_buckets))
+        else todo.groupBy("part_id")
         .agg(
             F.count("*").alias("n_docs"),
             F.bit_xor(F.xxhash64("url", "warc_ts")).alias("input_fingerprint"),
         )
-    ).cache()
-    docs = part_stats.select("part_id", "n_docs").collect()
-    todo_parts = [r["part_id"] for r in docs]
-    if not todo_parts:
-        part_stats.unpersist()
+        .collect()
+    )
+    if not part_stats:
         if owns_scratch:
             pipeline.scratch_dir = None
         return {"parts": 0, "n_docs": 0, "n_triples": 0, "wall_ms": 0}
+    todo_parts = [r["part_id"] for r in part_stats]
 
     # Per-part triple counts observed ON the write (one aggregate expression
     # per in-flight bucket — bounded by n_buckets) instead of re-reading all
@@ -153,53 +171,44 @@ def _run_incremental_body(
     from pyspark.sql import Observation
 
     obs = Observation()
-    # Cluster by part_id before the dynamic-partition write: without it every
-    # reduce task holds rows of ALL in-flight buckets and the write fans out
-    # to shuffle_partitions x n_buckets small files (measured 4-5 s of
-    # file-commit churn that GROWS with core count — anti-scaling); one
-    # narrow shuffle of the already-deduped triples lands one file per
-    # bucket instead, aligned with the manifest's retry granularity.
-    triples = (
-        pipeline.triples(todo, with_part=True)
-        .repartition("part_id")
-        .observe(
-            obs,
-            *[
-                F.sum((F.col("part_id") == p).cast("long")).alias(f"p_{p}")
-                for p in todo_parts
-            ],
-        )
+    # triples(with_part=True) comes clustered by part_id, so the
+    # dynamic-partition write lands one file per bucket, aligned with the
+    # manifest's retry granularity, instead of shuffle_partitions x
+    # n_buckets small files (file-commit churn that grew with core count).
+    triples = pipeline.triples(todo, with_part=True).observe(
+        obs,
+        *[
+            F.sum((F.col("part_id") == p).cast("long")).alias(f"p_{p}")
+            for p in todo_parts
+        ],
     )
     triples.write.mode("append").partitionBy("part_id").parquet(_triples_path(out_dir))
 
     got = obs.get
-    tri_counts = [(p, int(got[f"p_{p}"] or 0)) for p in todo_parts]
-    tri_stats = spark.createDataFrame(tri_counts, "part_id int, n_triples long")
     wall_ms = int((time.monotonic() - t0) * 1000)
-    manifest_rows = (
-        part_stats.join(tri_stats, "part_id", "left")
-        .select(
-            "part_id",
-            "n_docs",
-            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-            "input_fingerprint",
-            F.lit(run_id).alias("run_id"),
-            F.lit(wall_ms).alias("wall_ms"),
-            F.lit("done").alias("status"),
+    manifest_rows = [
+        (
+            r["part_id"],
+            r["n_docs"],
+            int(got[f"p_{r['part_id']}"] or 0),
+            r["input_fingerprint"],
+            run_id,
+            wall_ms,
+            "done",
         )
+        for r in part_stats
+    ]
+    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
+        _manifest_path(out_dir)
     )
-    manifest_rows.write.mode("append").parquet(_manifest_path(out_dir))
-    part_stats.unpersist()
     if hasattr(pipeline, "cleanup"):
         pipeline.cleanup()  # drop stage-checkpoint scratch dirs
     if owns_scratch:
-        from gtfsrt2lc_spark.functions import hadoop_fs
-
         hadoop_fs.delete(spark, pipeline.scratch_dir)
         pipeline.scratch_dir = None
     return {
-        "parts": len(todo_parts),
-        "n_docs": sum(r["n_docs"] for r in docs),
-        "n_triples": sum(n for _, n in tri_counts),
+        "parts": len(manifest_rows),
+        "n_docs": sum(r[1] for r in manifest_rows),
+        "n_triples": sum(r[2] for r in manifest_rows),
         "wall_ms": wall_ms,
     }

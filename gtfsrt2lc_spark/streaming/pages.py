@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gtfsrt2lc_spark.plans.manifest import TRIPLE_SCHEMA
+
 
 def stream_pages_to_triples(
     pages_stream: DataFrame,
@@ -61,7 +63,8 @@ def read_stream_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     """Cross-epoch deduplicated triples: (subj, pred, obj, graph) with
     graph = min provenance url over all epochs that emitted the triple."""
     return (
-        spark.read.option("basePath", out_dir)
+        spark.read.schema(TRIPLE_SCHEMA)
+        .option("basePath", out_dir)
         .parquet(out_dir)
         .groupBy("subj", "pred", "obj")
         .agg(F.min("graph").alias("graph"))

@@ -172,3 +172,61 @@ def test_triple_write_one_file_per_bucket(spark, corpus_dfs, tmp_path_factory):
     for d in part_dirs:
         files = [f for f in os.listdir(os.path.join(tdir, d)) if f.startswith("part-")]
         assert len(files) <= 2, f"{d} has {len(files)} files (write not clustered)"
+
+
+def test_unreadable_manifest_raises(spark, corpus_dfs, pipeline, tmp_path_factory):
+    """A manifest that exists but cannot be read must fail the run, not
+    count as empty (that would silently re-run every bucket), and the
+    failed run writes no triples."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("kg_out_corrupt"))
+    os.makedirs(os.path.join(out, "_manifest"))
+    with open(os.path.join(out, "_manifest", "part-00000-corrupt.parquet"), "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception):
+        run_incremental(spark, corpus_dfs[0], pipeline, out, n_buckets=4, run_id="rc")
+    assert not os.path.exists(os.path.join(out, "triples"))
+
+
+# Spark jobs of one warm run_incremental pass over the fixture corpus into a
+# fresh store: 2 pre-scan, 4 fold stage, 6 mapping stage, 5 triples write,
+# 1 manifest append. A resume over a complete store is 1 (the manifest read).
+PASS_JOB_BUDGET = 18
+RESUME_JOB_BUDGET = 1
+
+
+def test_warm_pass_job_budget(spark, corpus_dfs, pipeline, corpus, tmp_path_factory):
+    """A warm pass (KB frames already built) issues no more Spark jobs than
+    the budget, counted by job group."""
+    pages = corpus_dfs[0]
+    sc = spark.sparkContext
+    run_incremental(
+        spark, pages, pipeline, str(tmp_path_factory.mktemp("kg_warm")), n_buckets=8,
+        run_id="warm",
+    )
+    out = str(tmp_path_factory.mktemp("kg_budget"))
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    m, n_pass = jobs(
+        "budget-pass",
+        lambda: run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id="b1"),
+    )
+    assert m["parts"] == 8
+    assert n_pass <= PASS_JOB_BUDGET, n_pass
+    m2, n_resume = jobs(
+        "budget-resume",
+        lambda: run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id="b2"),
+    )
+    assert m2["parts"] == 0
+    assert n_resume <= RESUME_JOB_BUDGET, n_resume
+    got = {(r["subj"], r["pred"], r["obj"]) for r in read_triples(spark, out).collect()}
+    assert got == corpus.golden_triples

@@ -103,10 +103,17 @@ def test_fuzzy_link_band_join_shuffles_no_shingles(spark, corpus_dfs):
     from gtfsrt2lc_spark.operators.linking import link_fuzzy
 
     queries = spark.createDataFrame([("Ada Lovelacee",)], "surface string")
-    out = link_fuzzy(queries, surfaces)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
+    # broadcasts off: a broadcast band join has no band-keyed Exchange, so
+    # the guard would pass or fail depending on which tests ran before
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        out = link_fuzzy(queries, surfaces)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            out.explain("formatted")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     checked = 0
     for block in buf.getvalue().split("\n\n"):
         lines = block.strip().splitlines()
@@ -119,6 +126,68 @@ def test_fuzzy_link_band_join_shuffles_no_shingles(spark, corpus_dfs):
             cols = re.findall(r"[\[, ]([A-Za-z_][A-Za-z0-9_]*)#", inp)
             assert not any(c.startswith("sh_") for c in cols), cols
     assert checked > 0, "expected a band-keyed Exchange in the plan"
+
+
+def _tie_dictionary(spark, lower_id: str, upper_id: str):
+    """Two surfaces that differ only in case: their lower-cased 3-gram sets
+    are identical, so every query scores them the same."""
+    return spark.createDataFrame(
+        [("Ada Lovelace", lower_id, 1.0), ("ADA LOVELACE", upper_id, 1.0)],
+        "surface string, record_id string, prior double",
+    )
+
+
+def test_fuzzy_winner_tie_goes_to_smaller_record_id(spark):
+    """Two records tie on score: the smaller record_id wins, whichever
+    surface it owns."""
+    from gtfsrt2lc_spark.operators.linking import link_fuzzy
+
+    q = spark.createDataFrame([("Ada Lovelacee",)], "surface string")
+    for lower_id, upper_id in (("rec_a", "rec_b"), ("rec_b", "rec_a")):
+        rows = link_fuzzy(q, _tie_dictionary(spark, lower_id, upper_id)).collect()
+        assert [(r["surface"], r["record_id"]) for r in rows] == [
+            ("Ada Lovelacee", "rec_a")
+        ]
+        assert 0.5 <= rows[0]["score"] < 1.0
+
+
+def test_fuzzy_multi_band_collision_yields_one_row(spark, corpus_dfs):
+    """A query equal to a dictionary surface collides with it on every
+    band, and a duplicated query surface doubles those candidate rows; the
+    result is still one row per query surface."""
+    from gtfsrt2lc_spark.operators.linking import (
+        FuzzyDictionary,
+        _prep_bands,
+        link_fuzzy,
+    )
+
+    _, _, surfaces, _ = corpus_dfs
+    fd = FuzzyDictionary(surfaces)
+    q = spark.createDataFrame([("Grace Hopper",), ("Grace Hopper",)], "surface string")
+    qb = _prep_bands(q, "q", fd._perms, fd.bands)
+    collisions = qb.join(fd.bands_df, "band").where(F.col("surface_d") == "Grace Hopper")
+    assert collisions.count() == 2 * fd.bands
+    rows = link_fuzzy(q, None, prepped=fd).collect()
+    assert len(rows) == 1 and rows[0]["score"] == 1.0
+
+
+def test_fuzzy_dictionary_surface_links_to_itself(spark, corpus_dfs):
+    """Every dictionary surface, queried as it is, links to its own record
+    with score 1.0: the query side and the dictionary side hash
+    identically."""
+    from gtfsrt2lc_spark.operators.linking import link_fuzzy, resolve_dictionary
+
+    _, _, surfaces, _ = corpus_dfs
+    own = {
+        r["surface"]: r["record_id"]
+        for r in resolve_dictionary(surfaces).collect()
+    }
+    q = spark.createDataFrame([(s,) for s in own], "surface string")
+    got = {
+        r["surface"]: (r["record_id"], r["score"])
+        for r in link_fuzzy(q, surfaces).collect()
+    }
+    assert got == {s: (rid, 1.0) for s, rid in own.items()}
 
 
 def _dirty_pages(spark, pages):
