@@ -251,250 +251,3 @@ def test_extract_optimized_equivalence(html):
 def test_extract_optimized_equivalence_unicode(html):
     b = html.encode("utf-8", "surrogatepass")
     assert extract_text_bytes(b) == _extract_reference(b)
-
-
-# ---- PII scrub properties (pure regex kernels, Spark-free) ----------------
-
-_pii_text = st.text(
-    alphabet=st.characters(blacklist_categories=("Cs",)), max_size=120
-)
-
-
-@given(text=_pii_text)
-@settings(max_examples=500, deadline=None)
-def test_pii_redaction_is_complete(text):
-    """After redact_pii no pattern matches remain — including PII the
-    redaction itself might accidentally synthesize at splice points."""
-    import re as _re
-
-    from gtfsrt2lc_spark.functions.scrub import (
-        EMAIL_RE, IPV4_RE, PHONE_RE, _REDACTIONS,
-    )
-
-    clean = text
-    for pattern, token in _REDACTIONS:
-        clean = _re.sub(pattern, token, clean)
-    for pattern in (EMAIL_RE, IPV4_RE, PHONE_RE):
-        assert _re.search(pattern, clean) is None, (text, clean, pattern)
-
-
-@given(text=_pii_text)
-@settings(max_examples=300, deadline=None)
-def test_pii_free_text_is_untouched(text):
-    import re as _re
-
-    from gtfsrt2lc_spark.functions.scrub import _REDACTIONS
-
-    if any(_re.search(p, text) for p, _ in _REDACTIONS):
-        return  # only asserting the no-PII case here
-    clean = text
-    for pattern, token in _REDACTIONS:
-        clean = _re.sub(pattern, token, clean)
-    assert clean == text
-
-
-# ---- BMP decode round-trip (pure numpy kernel) ----------------------------
-
-@given(
-    w=st.integers(1, 9),
-    h=st.integers(1, 6),
-    data=st.data(),
-)
-@settings(max_examples=200, deadline=None)
-def test_bmp_decode_roundtrip(w, h, data):
-    """encode(pixels) -> decode == pixels for arbitrary sizes (exercises
-    bottom-up row order, BGR swap and 4-byte row padding)."""
-    import struct as _struct
-
-    from gtfsrt2lc_spark.functions.multimodal import decode_bmp
-
-    px = [
-        [tuple(data.draw(st.integers(0, 255)) for _ in range(3)) for _ in range(w)]
-        for _ in range(h)
-    ]
-    row_bytes = (w * 3 + 3) & ~3
-    body = b""
-    for row in reversed(px):
-        line = b"".join(bytes((b_, g, r)) for (r, g, b_) in row)
-        body += line + b"\x00" * (row_bytes - len(line))
-    blob = (
-        b"BM" + _struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-        + _struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
-        + body
-    )
-    arr = decode_bmp(blob)
-    assert arr.shape == (h, w, 3)
-    got = [
-        [tuple(int(v) for v in arr[y][x]) for x in range(w)] for y in range(h)
-    ]
-    assert got == px
-
-
-# ---- PNG decode round-trip (all five scanline filters) --------------------
-
-@given(
-    w=st.integers(1, 7),
-    h=st.integers(1, 5),
-    color=st.sampled_from([0, 2, 6]),
-    data=st.data(),
-)
-@settings(max_examples=150, deadline=None)
-def test_png_decode_roundtrip(w, h, color, data):
-    """encode(pixels, random per-row filters) -> decode == pixels across
-    gray/RGB/RGBA and arbitrary filter sequences (the sequential sub/avg/
-    paeth recurrences are where off-by-one-pixel bugs live)."""
-    from gtfsrt2lc_spark.functions.multimodal import decode_png
-    from tests.test_multimodal import _png_full
-
-    ch = {0: 1, 2: 3, 6: 4}[color]
-    px = [
-        [
-            tuple(data.draw(st.integers(0, 255)) for _ in range(ch))
-            if ch > 1
-            else data.draw(st.integers(0, 255))
-            for _ in range(w)
-        ]
-        for _ in range(h)
-    ]
-    filters = [data.draw(st.integers(0, 4)) for _ in range(h)]
-    arr = decode_png(_png_full(px, color=color, filters=filters))
-    assert arr.shape == (h, w, 3)
-    for y in range(h):
-        for x in range(w):
-            p = px[y][x]
-            rgb = (p, p, p) if ch == 1 else tuple(p[:3])
-            assert tuple(int(v) for v in arr[y][x]) == rgb, (y, x, filters)
-
-
-# ---- GIF decode round-trip (LZW + palette + interlace) --------------------
-
-@given(
-    w=st.integers(1, 10),
-    h=st.integers(1, 9),
-    ncolors=st.integers(2, 8),
-    interlace=st.booleans(),
-    data=st.data(),
-)
-@settings(max_examples=120, deadline=None)
-def test_gif_decode_roundtrip(w, h, ncolors, interlace, data):
-    """encode(random palette + indices, optional interlace) -> decode ==
-    palette[indices]: exercises the LZW width schedule, clear handling, and
-    the 4-pass deinterlace row mapping."""
-    from gtfsrt2lc_spark.functions.multimodal import decode_gif
-    from tests.test_multimodal import _gif_full
-
-    palette = [
-        tuple(data.draw(st.integers(0, 255)) for _ in range(3))
-        for _ in range(ncolors)
-    ]
-    px = [
-        [data.draw(st.integers(0, ncolors - 1)) for _ in range(w)]
-        for _ in range(h)
-    ]
-    arr = decode_gif(_gif_full(px, palette, interlace=interlace))
-    assert arr.shape == (h, w, 3)
-    for y in range(h):
-        for x in range(w):
-            assert tuple(int(v) for v in arr[y][x]) == palette[px[y][x]], (y, x)
-
-
-# ---------------------------------------------------------------------------
-# shard_shuffle determinism (round-6 verdict item 7): the export shuffle's
-# whole contract is reproducibility — identical (shard, pos) for every key
-# regardless of input partitioning, input row order, or which SparkSession
-# runs the plan (no rand(), no monotonically_increasing_id anywhere).
-# ---------------------------------------------------------------------------
-
-_shuffle_key = st.text(
-    alphabet=st.characters(blacklist_categories=("Cs",)), min_size=0, max_size=24
-)
-
-
-@pytest.mark.usefixtures("spark")
-@given(
-    keys=st.lists(_shuffle_key, min_size=1, max_size=60, unique=True),
-    n_shards=st.integers(1, 9),
-    salt=st.sampled_from(["", "ep0", "epoch-1"]),
-)
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_shard_shuffle_assignment_is_a_pure_function_of_key(
-    spark, keys, n_shards, salt
-):
-    from gtfsrt2lc_spark.operators.scan import shard_shuffle
-
-    def assignment(session, df):
-        return {
-            r["k"]: (r["shard"], r["pos"])
-            for r in shard_shuffle(df, "k", n_shards, salt).collect()
-        }
-
-    rows = [(k,) for k in keys]
-    base_df = spark.createDataFrame(rows, "k string")
-    base = assignment(spark, base_df.repartition(1))
-    # dense per-shard rank over exactly the input keys
-    assert set(base) == set(keys)
-    per_shard: dict = {}
-    for s, p in base.values():
-        assert 0 <= s < n_shards
-        per_shard.setdefault(s, []).append(p)
-    for ps in per_shard.values():
-        assert sorted(ps) == list(range(1, len(ps) + 1))
-    # partitioning-independent: 1 vs 16 partitions, same assignment
-    assert assignment(spark, base_df.repartition(16)) == base
-    # input-order independent: reversed row order, same assignment
-    rev_df = spark.createDataFrame(list(reversed(rows)), "k string")
-    assert assignment(spark, rev_df) == base
-    # session-independent: a fresh SparkSession (separate SQL conf / plan
-    # state over the same cluster) reproduces the assignment bit-for-bit
-    s2 = spark.newSession()
-    assert assignment(s2, s2.createDataFrame(rows, "k string")) == base
-
-
-@pytest.mark.usefixtures("spark")
-@given(
-    keys=st.lists(
-        st.text(  # printable ASCII so ord() == Spark ascii() exactly
-            alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x7E),
-            min_size=0, max_size=24,
-        ),
-        min_size=1, max_size=25, unique=True,
-    ),
-    n_shards=st.integers(1, 9),
-    salt=st.sampled_from(["", "ep0", "epoch-1"]),
-)
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_shard_shuffle_matches_portable_spec(spark, keys, n_shards, salt):
-    """Stronger than session-independence: the (shard, pos) assignment
-    equals a pure-Python evaluation of the documented portable spec —
-    shard = poly_hash(salt||key) % n_shards, pos = rank within shard by
-    (hash, key). Pinning to the spec means ANY engine computing it (the
-    DuckDB oracle twin, a future Flink port, a numpy dataloader) must
-    agree, so determinism can't degrade into 'whatever this JVM did
-    twice'. ASCII-only keys: that is the regime where ord() == ascii()."""
-    from gtfsrt2lc_spark.functions.hashing import MOD
-    from gtfsrt2lc_spark.operators.scan import shard_shuffle
-
-    def py_poly_hash(s: str) -> int:
-        h = 0
-        for ch in s:
-            h = (h * 31 + ord(ch)) % MOD
-        return h
-
-    hashes = {k: py_poly_hash(salt + k) for k in keys}
-    by_shard: dict = {}
-    for k in keys:
-        by_shard.setdefault(hashes[k] % n_shards, []).append(k)
-    expected = {}
-    for s, ks in by_shard.items():
-        ks.sort(key=lambda k: (hashes[k], k))
-        for pos, k in enumerate(ks, start=1):
-            expected[k] = (s, pos)
-
-    df = spark.createDataFrame([(k,) for k in keys], "k string")
-    got = {
-        r["k"]: (r["shard"], r["pos"])
-        for r in shard_shuffle(df, "k", n_shards=n_shards, salt=salt).collect()
-    }
-    assert got == expected
