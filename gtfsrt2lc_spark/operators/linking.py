@@ -16,10 +16,18 @@ against LSH band buckets.
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gtfsrt2lc_spark.functions.hashing import MOD, minhash_perms
+MOD = 2_147_483_647  # 2^31 - 1, prime
+
+
+def minhash_perms(k: int, seed: int = 42) -> list[tuple[int, int]]:
+    """Fixed (a, b) pairs for h_i(x) = (a*x + b) mod (2^31-1)."""
+    rng = random.Random(seed)
+    return [(rng.randrange(1, MOD), rng.randrange(0, MOD)) for _ in range(k)]
 
 
 def resolve_dictionary(surfaces: DataFrame) -> DataFrame:
@@ -49,7 +57,7 @@ def _shingle_hashes(col, n: int = 3):
         h = F.lit(0).cast("long")
         for j, w in enumerate(weights):
             h = h + F.ascii(s.substr(i + j, F.lit(1))).cast("long") * F.lit(w)
-        return h % F.lit(2_147_483_647)
+        return h % F.lit(MOD)
 
     return F.array_distinct(
         F.transform(

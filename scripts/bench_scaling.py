@@ -190,13 +190,6 @@ def main() -> None:
                          "no-op on the clean staged corpus otherwise)")
     ap.add_argument("--canonical-urls", action="store_true",
                     help="forwarded: KGPipeline(canonical_urls=True)")
-    ap.add_argument("--job", choices=["kg", "cut_spans"], default="kg",
-                    help="forwarded to submit_pipeline.py: which timed job "
-                         "runs under the N->4N protocol (kg = full pipeline, "
-                         "cut_spans = exact-substring dedup cut)")
-    ap.add_argument("--no-broadcast-cuts", action="store_true",
-                    help="forwarded: cut_spans takes the doc-keyed payload "
-                         "shuffle instead of broadcasting per-doc cut arrays")
     ap.add_argument("--messy-urls", action="store_true",
                     help="forwarded: restage pages with messy url spellings "
                          "(untimed) so canonical-key dedup does real collapse "
@@ -225,12 +218,6 @@ def main() -> None:
     if args.dirty_pages > 0:
         extra_args += ["--dirty-pages", str(args.dirty_pages)]
         results["dirty_pages"] = args.dirty_pages
-    if args.job != "kg":
-        extra_args += ["--job", args.job]
-        results["job"] = args.job
-    if args.no_broadcast_cuts:
-        extra_args += ["--no-broadcast-cuts"]
-        results["broadcast_cuts"] = False
     if args.canonical_urls:
         extra_args += ["--canonical-urls"]
         results["canonical_urls"] = True

@@ -35,16 +35,6 @@ def main() -> None:
     ap.add_argument("--canonical-urls", action="store_true",
                     help="KGPipeline(canonical_urls=True): canonical-url keys "
                          "for the latest-wins dedup (functions/web.py policy)")
-    ap.add_argument("--job", choices=["kg", "cut_spans"], default="kg",
-                    help="kg (default): the full KG construction pipeline. "
-                         "cut_spans: the exact-substring dedup CUT "
-                         "(operators/dedup.cut_duplicate_spans, k=8) over the "
-                         "corpus text, cleaned text written to --out — the "
-                         "Lee-et-al training-data dedup stage under the same "
-                         "N->4N protocol")
-    ap.add_argument("--no-broadcast-cuts", action="store_true",
-                    help="cut_spans job: take the doc-keyed payload shuffle "
-                         "instead of broadcasting the per-doc cut arrays")
     ap.add_argument("--messy-urls", action="store_true",
                     help="restage pages (untimed) with messy url spellings on "
                          "every even-second warc_ts row (HTTPS://WWW. prefix, "
@@ -93,46 +83,6 @@ def main() -> None:
                 ).otherwise(F.col("url")),
             ).write.parquet(messy_dir)
         pages = spark.read.parquet(messy_dir)
-    if args.job == "cut_spans":
-        # Exact-substring dedup cut as the timed job: hot 8-token windows
-        # keep their globally-first occurrence, every other occurrence is
-        # cut, cleaned text written to parquet. Warmup (untimed) runs the
-        # same plan on a 1% slice for codegen + shuffle-service spin-up,
-        # then a full-corpus count materializes nothing but forces the
-        # scan cache cold path consistently with the kg job's discipline.
-        from gtfsrt2lc_spark.operators.dedup import cut_duplicate_spans
-
-        n_docs = pages.count()  # input materialization, untimed
-        bcast = not args.no_broadcast_cuts
-        if args.warmup:
-            slice_ = pages.where(F.pmod(F.xxhash64("url"), F.lit(100)) == 0)
-            cut_duplicate_spans(
-                slice_, "url", "text", k=8, min_docs=2, broadcast_cuts=bcast
-            ).write.mode("overwrite").parquet(args.out + "_warmup")
-        t0 = time.monotonic()
-        cleaned = cut_duplicate_spans(
-            pages, "url", "text", k=8, min_docs=2, broadcast_cuts=bcast
-        )
-        cleaned.write.mode("overwrite").parquet(args.out)
-        wall = time.monotonic() - t0
-        stats = spark.read.parquet(args.out).agg(
-            F.count("*").alias("docs"),
-            F.sum("n_cut").alias("cut_tokens"),
-            F.sum("n_tokens").alias("tokens"),
-        ).collect()[0]
-        print(json.dumps({
-            "job": "cut_spans",
-            "n_cores": n_cores,
-            "n_docs": n_docs,
-            "out_docs": stats["docs"],
-            "cut_tokens": stats["cut_tokens"],
-            "total_tokens": stats["tokens"],
-            "broadcast_cuts": bcast,
-            "wall_sec": round(wall, 3),
-            "docs_per_sec": round(n_docs / wall, 2),
-        }))
-        return
-
     records = spark.read.parquet(os.path.join(args.corpus, "records"))
     surfaces = spark.read.parquet(os.path.join(args.corpus, "surfaces"))
     sameas = spark.read.parquet(os.path.join(args.corpus, "sameas"))

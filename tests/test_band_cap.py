@@ -6,8 +6,7 @@ collapsing to one MinHash band signature) makes one hot band
 |q_band|x|d_band| — AQE's skew-join can split that across tasks but cannot
 shrink it. The fix counts band frequencies on the STATIC, precomputed
 dictionary side (linking.FuzzyDictionary) and drops buckets above a
-configurable ceiling; dedup's banded self-join paths carry the same
-opt-in discipline (_cap_band_buckets).
+configurable ceiling.
 
 The pathological fixture: surfaces "aaa", "aaaa", ... share the single
 character-3-gram "aaa", hence identical shingle sets, identical MinHash
@@ -107,44 +106,3 @@ def test_link_fuzzy_rejects_mismatched_prepped_params(spark, corpus_dfs):
     # matching explicit params and omitted params both pass
     assert link_fuzzy(q, None, n_hashes=32, bands=16, prepped=fd).count() >= 0
     assert link_fuzzy(q, None, prepped=fd).count() >= 0
-
-
-def test_minhash_neardup_band_cap(spark):
-    """dedup mirror: a boilerplate cluster (identical token sets) stops
-    proposing O(m^2) pairs under the cap; a healthy near-dup pair in the
-    same corpus survives untouched."""
-    from gtfsrt2lc_spark.operators.dedup import neardup_pairs_minhash
-
-    boiler = [(i, "lorem ipsum dolor sit amet consectetur") for i in range(40)]
-    healthy = [
-        (1000, "alpha beta gamma delta epsilon zeta eta theta"),
-        (1001, "alpha beta gamma delta epsilon zeta eta iota"),
-    ]
-    df = spark.createDataFrame(boiler + healthy, "doc_id long, text string")
-    exact = neardup_pairs_minhash(df, "doc_id", "text", jaccard_threshold=0.7)
-    assert exact.where(F.col("doc_a") < 1000).count() == 40 * 39 // 2
-    capped = neardup_pairs_minhash(
-        df, "doc_id", "text", jaccard_threshold=0.7, max_band_size=10
-    )
-    rows = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
-    assert rows == {(1000, 1001)}
-
-
-def test_embedding_neardup_bucket_cap(spark):
-    """dedup mirror for the embedding LSH path: a near-constant vector
-    cluster is capped out; a healthy close pair survives."""
-    from gtfsrt2lc_spark.operators.dedup import neardup_pairs_embedding
-
-    hot = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(30)]
-    pair = [(1000, [0.0, 1.0, 1.0, 0.0]), (1001, [0.0, 1.0, 0.98, 0.01])]
-    df = spark.createDataFrame(hot + pair, "vec_id long, embedding array<double>")
-    exact = neardup_pairs_embedding(
-        df, "vec_id", "embedding", cos_threshold=0.95, method="lsh", dim=4
-    )
-    assert exact.where(F.col("id_a") < 1000).count() == 30 * 29 // 2
-    capped = neardup_pairs_embedding(
-        df, "vec_id", "embedding", cos_threshold=0.95, method="lsh", dim=4,
-        max_bucket_size=8,
-    )
-    rows = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert rows == {(1000, 1001)}
