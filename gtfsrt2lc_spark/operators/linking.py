@@ -22,12 +22,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 MOD = 2_147_483_647  # 2^31 - 1, prime
+# MinHash-LSH parameters: N_HASHES signature values in BANDS bands of
+# N_HASHES // BANDS rows, and the character-3-gram Jaccard floor of a match
+N_HASHES = 16
+BANDS = 8
+SEED = 42
+JACCARD_THRESHOLD = 0.5
 
 
 def minhash_perms(k: int, seed: int = 42) -> list[tuple[int, int]]:
     """Fixed (a, b) pairs for h_i(x) = (a*x + b) mod (2^31-1)."""
     rng = random.Random(seed)
     return [(rng.randrange(1, MOD), rng.randrange(0, MOD)) for _ in range(k)]
+
+
+_PERMS = minhash_perms(N_HASHES, seed=SEED)
 
 
 def resolve_dictionary(surfaces: DataFrame) -> DataFrame:
@@ -67,7 +76,7 @@ def _shingle_hashes(col, n: int = 3):
     )
 
 
-def _lsh_columns(side: str, perms: list[tuple[int, int]], bands: int):
+def _lsh_columns(side: str):
     """The Columns that take one join side from ``surface_<side>`` to its
     LSH band keys, in three projections: the shingle-hash array
     ``sh_<side>``, the MinHash signature ``sig_<side>`` over it, and the
@@ -79,7 +88,7 @@ def _lsh_columns(side: str, perms: list[tuple[int, int]], bands: int):
     row leaves its partition. Each projection reads its input column
     several times, so Catalyst keeps them apart instead of inlining the
     shingle or signature expression into every use."""
-    rows = len(perms) // bands
+    rows = N_HASHES // BANDS
     sh = _shingle_hashes(F.col(f"surface_{side}")).alias(f"sh_{side}")
 
     def perm_min(a: int, b: int):
@@ -87,7 +96,7 @@ def _lsh_columns(side: str, perms: list[tuple[int, int]], bands: int):
             F.transform(F.col(f"sh_{side}"), lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MOD))
         )
 
-    sig = F.array(*[perm_min(a, b) for a, b in perms]).alias(f"sig_{side}")
+    sig = F.array(*[perm_min(a, b) for a, b in _PERMS]).alias(f"sig_{side}")
     s = F.col(f"sig_{side}")
     band = F.explode(
         F.array(
@@ -95,21 +104,19 @@ def _lsh_columns(side: str, perms: list[tuple[int, int]], bands: int):
                 F.concat_ws(
                     "_", F.lit(bi), *[s[bi * rows + r].cast("string") for r in range(rows)]
                 )
-                for bi in range(bands)
+                for bi in range(BANDS)
             ]
         )
     ).alias("band")
     return sh, sig, band
 
 
-def _prep_bands(
-    df: DataFrame, side: str, perms: list[tuple[int, int]], bands: int, cols=None
-) -> DataFrame:
+def _prep_bands(df: DataFrame, side: str, cols=None) -> DataFrame:
     """(surface_<side>, band) LSH band table for one join side — the one
     band-key path of both the dictionary and the query side, so the two
     always hash identically. Payload-free by design. ``cols`` reuses
-    Columns already built by ``_lsh_columns`` for these parameters."""
-    sh, sig, band = cols or _lsh_columns(side, perms, bands)
+    Columns already built by ``_lsh_columns`` for this side."""
+    sh, sig, band = cols or _lsh_columns(side)
     key = f"surface_{side}"
     return (
         df.select(F.col("surface").alias(key))
@@ -151,21 +158,9 @@ class FuzzyDictionary:
     fixtures; never at web scale).
     """
 
-    def __init__(
-        self,
-        dictionary: DataFrame,
-        n_hashes: int = 16,
-        bands: int = 8,
-        seed: int = 42,
-        max_band_size: int | None = 1000,
-    ) -> None:
-        self.n_hashes = n_hashes
-        self.bands = bands
-        self.seed = seed
-        self.max_band_size = max_band_size
-        self._perms = minhash_perms(n_hashes, seed=seed)
+    def __init__(self, dictionary: DataFrame, max_band_size: int | None = 1000) -> None:
         dic = resolve_dictionary(dictionary)
-        bands_df = _prep_bands(dic, "d", self._perms, bands)
+        bands_df = _prep_bands(dic, "d")
         if max_band_size is not None:
             # window count over the NARROW band frame: one keyed shuffle at
             # build time, no collect, no broadcast-size assumption about how
@@ -182,10 +177,9 @@ class FuzzyDictionary:
             F.col("record_id"),
             _shingle_hashes(F.col("surface")).alias("sh_d"),
         )
-        # The query-side Columns depend only on the hash parameters, so
-        # they are composed once here instead of once per link_fuzzy call
-        # (hundreds of py4j calls each).
-        self._q_cols = _lsh_columns("q", self._perms, bands)
+        # The query-side Columns are composed once here instead of once
+        # per link_fuzzy call (hundreds of py4j calls each).
+        self._q_cols = _lsh_columns("q")
         inter = F.size(F.array_intersect("sh_q", "sh_d"))
         union = F.size("sh_q") + F.size("sh_d") - inter
         self._score = (inter.cast("double") / union.cast("double")).alias("score")
@@ -197,33 +191,22 @@ class FuzzyDictionary:
 
 def link_fuzzy(
     surfaces_q: DataFrame,
-    dictionary: DataFrame | None,
-    n_hashes: int | None = None,
-    bands: int | None = None,
-    jaccard_threshold: float = 0.5,
-    seed: int | None = None,
+    dictionary: DataFrame | None = None,
     prepped: FuzzyDictionary | None = None,
-    max_band_size: int | None = 1000,
 ) -> DataFrame:
     """Fuzzy-link unmatched surfaces to dictionary entries.
 
     surfaces_q: one column ``surface`` (duplicates allowed). Returns one
     (surface, record_id, score) row per surface that has a match with
-    character-3-gram Jaccard >= threshold: the highest score, ties to the
-    smallest record_id.
+    character-3-gram Jaccard >= ``JACCARD_THRESHOLD``: the highest score,
+    ties to the smallest record_id.
 
     MinHash-LSH candidate generation (band-bucket equi-join) then exact
     Jaccard verification on candidates only. Pass ``prepped`` (a
     ``FuzzyDictionary``) to reuse the dictionary-side band/shingle tables
-    across calls — its n_hashes/bands/seed govern the query side too, so
-    both sides always hash identically; ``dictionary`` is ignored then and
-    may be None. Explicitly passing n_hashes/bands/seed/max_band_size
-    alongside a mismatched ``prepped`` raises ValueError (a silently
-    ignored mismatch would link with the wrong hash parameters).
-
-    ``max_band_size`` caps dictionary-side band buckets (the hot-band
-    quadratic-blowup guard — see ``FuzzyDictionary``); it applies when
-    this call builds the dictionary tables itself.
+    across calls; ``dictionary`` is ignored then and may be None. Without
+    ``prepped`` this call builds the tables from ``dictionary`` with the
+    default hot-band cap.
 
     Shuffle discipline: the query side's shingles, signatures and band
     keys are projections of each surface, so no row moves before the band
@@ -239,32 +222,8 @@ def link_fuzzy(
     if prepped is None:
         if dictionary is None:
             raise ValueError("link_fuzzy needs either dictionary or prepped")
-        prepped = FuzzyDictionary(
-            dictionary,
-            n_hashes=16 if n_hashes is None else n_hashes,
-            bands=8 if bands is None else bands,
-            seed=42 if seed is None else seed,
-            max_band_size=max_band_size,
-        )
-    else:
-        mismatched = {
-            name: (want, got)
-            for name, want, got in (
-                ("n_hashes", n_hashes, prepped.n_hashes),
-                ("bands", bands, prepped.bands),
-                ("seed", seed, prepped.seed),
-            )
-            if want is not None and want != got
-        }
-        if mismatched:
-            raise ValueError(
-                "link_fuzzy: explicit hash params contradict the supplied "
-                f"FuzzyDictionary (param: (passed, prepped)): {mismatched}; "
-                "rebuild the dictionary with these params or drop them"
-            )
-    q = _prep_bands(
-        surfaces_q, "q", prepped._perms, prepped.bands, cols=prepped._q_cols
-    )
+        prepped = FuzzyDictionary(dictionary)
+    q = _prep_bands(surfaces_q, "q", cols=prepped._q_cols)
     sh_q = prepped._q_cols[0]
     return (
         q.join(prepped.bands_df, "band")
@@ -272,7 +231,7 @@ def link_fuzzy(
         .join(prepped.shingled, "surface_d")
         .select("surface_q", "record_id", sh_q, "sh_d")
         .select("surface_q", "record_id", prepped._score)
-        .where(F.col("score") >= jaccard_threshold)
+        .where(F.col("score") >= JACCARD_THRESHOLD)
         .groupBy("surface_q")
         .agg(prepped._winner)
         .select(

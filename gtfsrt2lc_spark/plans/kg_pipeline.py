@@ -42,11 +42,6 @@ from gtfsrt2lc_spark.operators.linking import (
 
 # a "mention" is a capitalized token span; predicates are a fixed phrase lexicon
 _MENTION = r"[A-Z][\w.]*(?: [A-Z][\w.]*)*"
-# fuzzy linking: the Jaccard floor of a recovered surface, and the hot-band
-# ceiling of the dictionary-side LSH tables (a skewed 100x KB would otherwise
-# make one band bucket quadratic in the candidate join; see FuzzyDictionary)
-_FUZZY_THRESHOLD = 0.5
-_FUZZY_MAX_BAND_SIZE = 1000
 
 
 class KGPipeline:
@@ -294,7 +289,7 @@ class KGPipeline:
             # persisted first: FuzzyDictionary resolves the same surfaces,
             # and Spark's cache serves that identical subplan from this copy
             self._dictionary = resolve_dictionary(self.surfaces).persist()
-            fd = FuzzyDictionary(self.surfaces, max_band_size=_FUZZY_MAX_BAND_SIZE)
+            fd = FuzzyDictionary(self.surfaces)
             fd.bands_df = fd.bands_df.persist()
             fd.shingled = fd.shingled.persist()
             self._fuzzy = fd
@@ -362,9 +357,7 @@ class KGPipeline:
         # the fuzzy pass once per slot
         mapping = self._stage(
             lookup.where(F.col("record_id").isNotNull()).unionByName(
-                link_fuzzy(
-                    unmatched, None, jaccard_threshold=_FUZZY_THRESHOLD, prepped=fuzzy
-                ).select("surface", "record_id")
+                link_fuzzy(unmatched, prepped=fuzzy).select("surface", "record_id")
             )
         )
         for slot in ("subj_surface", "obj_surface"):

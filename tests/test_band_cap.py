@@ -58,7 +58,7 @@ def test_hot_band_cap_bounds_candidate_set(spark, hot_dictionary):
     q = spark.createDataFrame([("aaaaaaa",)], "surface string")
 
     def n_candidates(fd):
-        qb = _prep_bands(q, "q", fd._perms, fd.bands)
+        qb = _prep_bands(q, "q")
         return (
             qb.join(fd.bands_df, "band")
             .dropDuplicates(["surface_q", "surface_d"])
@@ -73,7 +73,7 @@ def test_hot_band_cap_preserves_golden_linking(spark, hot_dictionary, corpus_dfs
     """Healthy surfaces keep their own (small) band buckets: linking results
     on the golden typo queries are IDENTICAL with the cap active, even with
     the degenerate surfaces present in the same dictionary."""
-    from gtfsrt2lc_spark.operators.linking import link_fuzzy
+    from gtfsrt2lc_spark.operators.linking import FuzzyDictionary, link_fuzzy
 
     queries = spark.createDataFrame(
         [("Ada Lovelacee",), ("Grace Hoper",), ("Stark Industres",)],
@@ -81,28 +81,15 @@ def test_hot_band_cap_preserves_golden_linking(spark, hot_dictionary, corpus_dfs
     )
     golden = {
         (r["surface"], r["record_id"], r["score"])
-        for r in link_fuzzy(queries, hot_dictionary, max_band_size=None).collect()
+        for r in link_fuzzy(
+            queries, prepped=FuzzyDictionary(hot_dictionary, max_band_size=None)
+        ).collect()
     }
     capped = {
         (r["surface"], r["record_id"], r["score"])
-        for r in link_fuzzy(queries, hot_dictionary, max_band_size=50).collect()
+        for r in link_fuzzy(
+            queries, prepped=FuzzyDictionary(hot_dictionary, max_band_size=50)
+        ).collect()
     }
     assert capped == golden
     assert len(capped) == 3
-
-
-def test_link_fuzzy_rejects_mismatched_prepped_params(spark, corpus_dfs):
-    """Explicit hash params contradicting a supplied FuzzyDictionary raise
-    instead of silently linking with the wrong parameters (ADVICE r5)."""
-    from gtfsrt2lc_spark.operators.linking import FuzzyDictionary, link_fuzzy
-
-    _, _, surfaces, _ = corpus_dfs
-    fd = FuzzyDictionary(surfaces, n_hashes=32, bands=16)
-    q = spark.createDataFrame([("Ada Lovelacee",)], "surface string")
-    with pytest.raises(ValueError, match="contradict"):
-        link_fuzzy(q, None, n_hashes=16, prepped=fd)
-    with pytest.raises(ValueError, match="seed"):
-        link_fuzzy(q, None, seed=7, prepped=fd)
-    # matching explicit params and omitted params both pass
-    assert link_fuzzy(q, None, n_hashes=32, bands=16, prepped=fd).count() >= 0
-    assert link_fuzzy(q, None, prepped=fd).count() >= 0

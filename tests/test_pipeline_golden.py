@@ -156,6 +156,7 @@ def test_fuzzy_multi_band_collision_yields_one_row(spark, corpus_dfs):
     band, and a duplicated query surface doubles those candidate rows; the
     result is still one row per query surface."""
     from gtfsrt2lc_spark.operators.linking import (
+        BANDS,
         FuzzyDictionary,
         _prep_bands,
         link_fuzzy,
@@ -164,9 +165,9 @@ def test_fuzzy_multi_band_collision_yields_one_row(spark, corpus_dfs):
     _, _, surfaces, _ = corpus_dfs
     fd = FuzzyDictionary(surfaces)
     q = spark.createDataFrame([("Grace Hopper",), ("Grace Hopper",)], "surface string")
-    qb = _prep_bands(q, "q", fd._perms, fd.bands)
+    qb = _prep_bands(q, "q")
     collisions = qb.join(fd.bands_df, "band").where(F.col("surface_d") == "Grace Hopper")
-    assert collisions.count() == 2 * fd.bands
+    assert collisions.count() == 2 * BANDS
     rows = link_fuzzy(q, None, prepped=fd).collect()
     assert len(rows) == 1 and rows[0]["score"] == 1.0
 
