@@ -26,11 +26,16 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gtfsrt2lc_spark.functions import hadoop_fs
+
+if TYPE_CHECKING:
+    from gtfsrt2lc_spark.plans.kg_pipeline import KGPipeline
 
 MANIFEST_SCHEMA = (
     "part_id int, n_docs long, n_triples long, input_fingerprint long, "
@@ -66,7 +71,7 @@ def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
 def run_incremental(
     spark: SparkSession,
     pages: DataFrame,
-    pipeline,
+    pipeline: KGPipeline,
     out_dir: str,
     n_buckets: int = 16,
     run_id: str = "run",
@@ -75,61 +80,20 @@ def run_incremental(
 
     Second invocation over the same pages is a no-op (0 new triples).
 
-    Stage-checkpoint scratch: if the pipeline exposes ``scratch_dir`` and the
-    caller did not set one, this run scopes it under
+    Stage-checkpoint scratch: if the caller did not set the pipeline's
+    ``scratch_dir``, this run scopes it under
     ``<out_dir>/_stage/<run_id>-<uuid>`` — the same (shared) filesystem the
     triples land on, so executor-written stage parquet is readable
-    cluster-wide — and deletes it after the pipeline's own cleanup().
+    cluster-wide — and deletes it after the pipeline's own cleanup(),
+    whether or not the run finished.
     """
-    import uuid
-
     t0 = time.monotonic()
-    owns_scratch = hasattr(pipeline, "scratch_dir") and pipeline.scratch_dir is None
-    if owns_scratch:
-        pipeline.scratch_dir = (
-            f"{out_dir.rstrip('/')}/_stage/{run_id}-{uuid.uuid4().hex[:8]}"
-        )
-        # Exception safety for the owned scratch: a failed run must not leave
-        # pipeline.scratch_dir set (a retry would treat the stale dir as
-        # caller-owned and never delete the failed run's _stage parquet).
-        try:
-            return _run_incremental_body(
-                spark, pages, pipeline, out_dir, n_buckets, run_id, t0, owns_scratch
-            )
-        except BaseException:
-            try:
-                if hasattr(pipeline, "cleanup"):
-                    pipeline.cleanup()
-            except Exception:
-                pass
-            try:
-                hadoop_fs.delete(spark, pipeline.scratch_dir)
-            except Exception:
-                pass
-            pipeline.scratch_dir = None
-            raise
-    return _run_incremental_body(
-        spark, pages, pipeline, out_dir, n_buckets, run_id, t0, owns_scratch
-    )
-
-
-def _run_incremental_body(
-    spark: SparkSession,
-    pages: DataFrame,
-    pipeline,
-    out_dir: str,
-    n_buckets: int,
-    run_id: str,
-    t0: float,
-    owns_scratch: bool,
-) -> dict:
     # Bucket by the pipeline's document-identity key (canonical url when
     # KGPipeline(canonical_urls=True)), NOT the raw spelling: latest-wins
     # dedup runs per bucket, so all spellings of one document must
     # co-locate or a stale snapshot wins its own bucket and leaks.
-    key = pipeline.page_key() if hasattr(pipeline, "page_key") else F.col("url")
     bucketed = pages.withColumn(
-        "part_id", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+        "part_id", F.pmod(F.xxhash64(pipeline.page_key()), F.lit(n_buckets)).cast("int")
     )
     done = set()
     if hadoop_fs.exists(spark, _manifest_path(out_dir)):
@@ -158,54 +122,60 @@ def _run_incremental_body(
         .collect()
     )
     if not part_stats:
-        if owns_scratch:
-            pipeline.scratch_dir = None
         return {"parts": 0, "n_docs": 0, "n_triples": 0, "wall_ms": 0}
     todo_parts = [r["part_id"] for r in part_stats]
-
-    # Per-part triple counts observed ON the write (one aggregate expression
-    # per in-flight bucket — bounded by n_buckets) instead of re-reading all
-    # written triples afterwards: one fewer scan job per run, and no extra
-    # I/O at 100 TB. Metrics-only values, so observe's task-retry caveat is
-    # acceptable here.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    # triples(with_part=True) comes clustered by part_id, so the
-    # dynamic-partition write lands one file per bucket, aligned with the
-    # manifest's retry granularity, instead of shuffle_partitions x
-    # n_buckets small files (file-commit churn that grew with core count).
-    triples = pipeline.triples(todo, with_part=True).observe(
-        obs,
-        *[
-            F.sum((F.col("part_id") == p).cast("long")).alias(f"p_{p}")
-            for p in todo_parts
-        ],
-    )
-    triples.write.mode("append").partitionBy("part_id").parquet(_triples_path(out_dir))
-
-    got = obs.get
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    manifest_rows = [
-        (
-            r["part_id"],
-            r["n_docs"],
-            int(got[f"p_{r['part_id']}"] or 0),
-            r["input_fingerprint"],
-            run_id,
-            wall_ms,
-            "done",
-        )
-        for r in part_stats
-    ]
-    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
-        _manifest_path(out_dir)
-    )
-    if hasattr(pipeline, "cleanup"):
-        pipeline.cleanup()  # drop stage-checkpoint scratch dirs
+    owns_scratch = pipeline.scratch_dir is None
     if owns_scratch:
-        hadoop_fs.delete(spark, pipeline.scratch_dir)
-        pipeline.scratch_dir = None
+        pipeline.scratch_dir = (
+            f"{out_dir.rstrip('/')}/_stage/{run_id}-{uuid.uuid4().hex[:8]}"
+        )
+    try:
+        # Per-part triple counts observed ON the write (one aggregate
+        # expression per in-flight bucket — bounded by n_buckets) instead of
+        # re-reading all written triples afterwards: one fewer scan job per
+        # run, and no extra I/O at 100 TB. Metrics-only values, so observe's
+        # task-retry caveat is acceptable here.
+        obs = Observation()
+        # triples(with_part=True) comes clustered by part_id, so the
+        # dynamic-partition write lands one file per bucket, aligned with
+        # the manifest's retry granularity, instead of shuffle_partitions x
+        # n_buckets small files (file-commit churn that grew with core
+        # count).
+        triples = pipeline.triples(todo, with_part=True).observe(
+            obs,
+            *[
+                F.sum((F.col("part_id") == p).cast("long")).alias(f"p_{p}")
+                for p in todo_parts
+            ],
+        )
+        triples.write.mode("append").partitionBy("part_id").parquet(
+            _triples_path(out_dir)
+        )
+
+        got = obs.get
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        manifest_rows = [
+            (
+                r["part_id"],
+                r["n_docs"],
+                int(got[f"p_{r['part_id']}"] or 0),
+                r["input_fingerprint"],
+                run_id,
+                wall_ms,
+                "done",
+            )
+            for r in part_stats
+        ]
+        spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
+            _manifest_path(out_dir)
+        )
+    finally:
+        pipeline.cleanup()  # drop stage-checkpoint scratch dirs
+        if owns_scratch:
+            # released on failure too: a retry would otherwise take the
+            # stale dir for a caller-owned one and never delete it
+            hadoop_fs.delete(spark, pipeline.scratch_dir)
+            pipeline.scratch_dir = None
     return {
         "parts": len(manifest_rows),
         "n_docs": sum(r[1] for r in manifest_rows),
