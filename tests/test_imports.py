@@ -1,10 +1,14 @@
-"""Every ``gtfsrt2lc_spark`` import in the package and the scripts resolves.
+"""Every ``gtfsrt2lc_spark`` import in the package and the scripts resolves,
+and every package module is reached from an entry point.
 
 Many imports are function-local (the lazy ones in ``cli.py`` and
 ``plans/gtfs.py``), so a stale one would otherwise fail only when its
 function is called. Each import statement is read from the AST and checked
 against the installed package: the module must exist and every imported
-name must be an attribute or a submodule of it.
+name must be an attribute or a submodule of it. The same import statements,
+followed from the CLI, the plans, the streaming and source layers, the
+fixtures, the benchmark and the scripts, must reach every package module,
+so code that nothing runs cannot stay behind.
 """
 
 from __future__ import annotations
@@ -21,6 +25,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "gtfsrt2lc_spark"
 FILES = sorted(
     glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)
+    + glob.glob(os.path.join(REPO, "scripts", "*.py"))
+)
+
+PKG_FILES = [p for p in FILES if p.startswith(os.path.join(REPO, PKG) + os.sep)]
+ROOTS = (
+    [os.path.join(REPO, PKG, f) for f in ("__init__.py", "__main__.py", "cli.py")]
+    + [os.path.join(REPO, PKG, "plans", f"{m}.py") for m in ("kg_pipeline", "manifest", "gtfs")]
+    + [
+        p
+        for d in ("streaming", "sources", "fixtures")
+        for p in glob.glob(os.path.join(REPO, PKG, d, "*.py"))
+    ]
+    + glob.glob(os.path.join(REPO, "perfbench", "*.py"))
     + glob.glob(os.path.join(REPO, "scripts", "*.py"))
 )
 
@@ -69,3 +86,32 @@ def test_package_imports_resolve(path):
         if not _resolves(m, n)
     ]
     assert not dangling, dangling
+
+
+def _module_file(module: str) -> str | None:
+    base = os.path.join(REPO, *module.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.exists(path):
+            return path
+    return None
+
+
+def test_every_package_module_is_reached():
+    seen: set[str] = set()
+    stack = list(ROOTS)
+    while stack:
+        path = stack.pop()
+        if path in seen:
+            continue
+        seen.add(path)
+        for _, module, name in _imports(path):
+            # ``from pkg import sub`` may name a submodule, and importing a
+            # module runs every enclosing package's __init__ first
+            target = f"{module}.{name}" if name and name != "*" else module
+            parts = target.split(".")
+            for i in range(1, len(parts) + 1):
+                found = _module_file(".".join(parts[:i]))
+                if found is not None:
+                    stack.append(found)
+    unreached = sorted(os.path.relpath(p, REPO) for p in PKG_FILES if p not in seen)
+    assert not unreached, unreached
