@@ -7,10 +7,9 @@ seed, and the expected (subj, pred, obj) triple set is derivable at build time
 because every fact sentence is planted.
 
 Planted phenomena (FIXTURES.md §6):
-  * hot-domain key skew (~20% of pages share one domain) — exercises salting
+  * hot-domain key skew (~20% of pages share one domain)
   * duplicate urls (re-crawls; later warc_ts wins) — exercises latest-wins dedup
   * near-duplicate pages (same text, different url) — exercises triple dedup
-    and the MinHash near-dup operator
   * malformed HTML — exercises extraction robustness
   * entity KB split across multiple records joined by sameAs edges —
     exercises connected-components canonicalization
