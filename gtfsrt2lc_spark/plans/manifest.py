@@ -151,24 +151,7 @@ def run_incremental(
         triples.write.mode("append").partitionBy("part_id").parquet(
             _triples_path(out_dir)
         )
-
-        got = obs.get
         wall_ms = int((time.monotonic() - t0) * 1000)
-        manifest_rows = [
-            (
-                r["part_id"],
-                r["n_docs"],
-                int(got[f"p_{r['part_id']}"] or 0),
-                r["input_fingerprint"],
-                run_id,
-                wall_ms,
-                "done",
-            )
-            for r in part_stats
-        ]
-        spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
-            _manifest_path(out_dir)
-        )
     finally:
         pipeline.cleanup()  # drop stage-checkpoint scratch dirs
         if owns_scratch:
@@ -176,6 +159,23 @@ def run_incremental(
             # stale dir for a caller-owned one and never delete it
             hadoop_fs.delete(spark, pipeline.scratch_dir)
             pipeline.scratch_dir = None
+
+    got = obs.get
+    manifest_rows = [
+        (
+            r["part_id"],
+            r["n_docs"],
+            int(got[f"p_{r['part_id']}"] or 0),
+            r["input_fingerprint"],
+            run_id,
+            wall_ms,
+            "done",
+        )
+        for r in part_stats
+    ]
+    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
+        _manifest_path(out_dir)
+    )
     return {
         "parts": len(manifest_rows),
         "n_docs": sum(r[1] for r in manifest_rows),
