@@ -16,25 +16,17 @@ against LSH band buckets.
 
 from __future__ import annotations
 
-import random
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-MOD = 2_147_483_647  # 2^31 - 1, prime
+from gtfsrt2lc_spark.functions.hashing import MOD, minhash_perms
+
 # MinHash-LSH parameters: N_HASHES signature values in BANDS bands of
 # N_HASHES // BANDS rows, and the character-3-gram Jaccard floor of a match
 N_HASHES = 16
 BANDS = 8
 SEED = 42
 JACCARD_THRESHOLD = 0.5
-
-
-def minhash_perms(k: int, seed: int = 42) -> list[tuple[int, int]]:
-    """Fixed (a, b) pairs for h_i(x) = (a*x + b) mod (2^31-1)."""
-    rng = random.Random(seed)
-    return [(rng.randrange(1, MOD), rng.randrange(0, MOD)) for _ in range(k)]
-
 
 _PERMS = minhash_perms(N_HASHES, seed=SEED)
 

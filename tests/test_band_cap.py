@@ -6,7 +6,8 @@ collapsing to one MinHash band signature) makes one hot band
 |q_band|x|d_band| — AQE's skew-join can split that across tasks but cannot
 shrink it. The fix counts band frequencies on the STATIC, precomputed
 dictionary side (linking.FuzzyDictionary) and drops buckets above a
-configurable ceiling.
+configurable ceiling; dedup's banded self-join paths carry the same
+opt-in discipline (_cap_band_buckets).
 
 The pathological fixture: surfaces "aaa", "aaaa", ... share the single
 character-3-gram "aaa", hence identical shingle sets, identical MinHash
@@ -93,3 +94,24 @@ def test_hot_band_cap_preserves_golden_linking(spark, hot_dictionary, corpus_dfs
     }
     assert capped == golden
     assert len(capped) == 3
+
+
+def test_minhash_neardup_band_cap(spark):
+    """dedup mirror: a boilerplate cluster (identical token sets) stops
+    proposing O(m^2) pairs under the cap; a healthy near-dup pair in the
+    same corpus survives untouched."""
+    from gtfsrt2lc_spark.operators.dedup import neardup_pairs_minhash
+
+    boiler = [(i, "lorem ipsum dolor sit amet consectetur") for i in range(40)]
+    healthy = [
+        (1000, "alpha beta gamma delta epsilon zeta eta theta"),
+        (1001, "alpha beta gamma delta epsilon zeta eta iota"),
+    ]
+    df = spark.createDataFrame(boiler + healthy, "doc_id long, text string")
+    exact = neardup_pairs_minhash(df, "doc_id", "text", jaccard_threshold=0.7)
+    assert exact.where(F.col("doc_a") < 1000).count() == 40 * 39 // 2
+    capped = neardup_pairs_minhash(
+        df, "doc_id", "text", jaccard_threshold=0.7, max_band_size=10
+    )
+    rows = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
+    assert rows == {(1000, 1001)}

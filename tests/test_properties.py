@@ -251,3 +251,148 @@ def test_extract_optimized_equivalence(html):
 def test_extract_optimized_equivalence_unicode(html):
     b = html.encode("utf-8", "surrogatepass")
     assert extract_text_bytes(b) == _extract_reference(b)
+
+
+# ---- PII scrub properties (pure regex kernels, Spark-free) ----------------
+
+_pii_text = st.text(
+    alphabet=st.characters(blacklist_categories=("Cs",)), max_size=120
+)
+
+
+@given(text=_pii_text)
+@settings(max_examples=500, deadline=None)
+def test_pii_redaction_is_complete(text):
+    """After redact_pii no pattern matches remain — including PII the
+    redaction itself might accidentally synthesize at splice points."""
+    import re as _re
+
+    from gtfsrt2lc_spark.functions.scrub import (
+        EMAIL_RE, IPV4_RE, PHONE_RE, _REDACTIONS,
+    )
+
+    clean = text
+    for pattern, token in _REDACTIONS:
+        clean = _re.sub(pattern, token, clean)
+    for pattern in (EMAIL_RE, IPV4_RE, PHONE_RE):
+        assert _re.search(pattern, clean) is None, (text, clean, pattern)
+
+
+@given(text=_pii_text)
+@settings(max_examples=300, deadline=None)
+def test_pii_free_text_is_untouched(text):
+    import re as _re
+
+    from gtfsrt2lc_spark.functions.scrub import _REDACTIONS
+
+    if any(_re.search(p, text) for p, _ in _REDACTIONS):
+        return  # only asserting the no-PII case here
+    clean = text
+    for pattern, token in _REDACTIONS:
+        clean = _re.sub(pattern, token, clean)
+    assert clean == text
+
+
+# ---- BMP decode round-trip (pure numpy kernel) ----------------------------
+
+@given(
+    w=st.integers(1, 9),
+    h=st.integers(1, 6),
+    data=st.data(),
+)
+@settings(max_examples=200, deadline=None)
+def test_bmp_decode_roundtrip(w, h, data):
+    """encode(pixels) -> decode == pixels for arbitrary sizes (exercises
+    bottom-up row order, BGR swap and 4-byte row padding)."""
+    import struct as _struct
+
+    from gtfsrt2lc_spark.functions.multimodal import decode_bmp
+
+    px = [
+        [tuple(data.draw(st.integers(0, 255)) for _ in range(3)) for _ in range(w)]
+        for _ in range(h)
+    ]
+    row_bytes = (w * 3 + 3) & ~3
+    body = b""
+    for row in reversed(px):
+        line = b"".join(bytes((b_, g, r)) for (r, g, b_) in row)
+        body += line + b"\x00" * (row_bytes - len(line))
+    blob = (
+        b"BM" + _struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
+        + _struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
+        + body
+    )
+    arr = decode_bmp(blob)
+    assert arr.shape == (h, w, 3)
+    got = [
+        [tuple(int(v) for v in arr[y][x]) for x in range(w)] for y in range(h)
+    ]
+    assert got == px
+
+
+# ---- PNG decode round-trip (all five scanline filters) --------------------
+
+@given(
+    w=st.integers(1, 7),
+    h=st.integers(1, 5),
+    color=st.sampled_from([0, 2, 6]),
+    data=st.data(),
+)
+@settings(max_examples=150, deadline=None)
+def test_png_decode_roundtrip(w, h, color, data):
+    """encode(pixels, random per-row filters) -> decode == pixels across
+    gray/RGB/RGBA and arbitrary filter sequences (the sequential sub/avg/
+    paeth recurrences are where off-by-one-pixel bugs live)."""
+    from gtfsrt2lc_spark.functions.multimodal import decode_png
+    from tests.test_multimodal import _png_full
+
+    ch = {0: 1, 2: 3, 6: 4}[color]
+    px = [
+        [
+            tuple(data.draw(st.integers(0, 255)) for _ in range(ch))
+            if ch > 1
+            else data.draw(st.integers(0, 255))
+            for _ in range(w)
+        ]
+        for _ in range(h)
+    ]
+    filters = [data.draw(st.integers(0, 4)) for _ in range(h)]
+    arr = decode_png(_png_full(px, color=color, filters=filters))
+    assert arr.shape == (h, w, 3)
+    for y in range(h):
+        for x in range(w):
+            p = px[y][x]
+            rgb = (p, p, p) if ch == 1 else tuple(p[:3])
+            assert tuple(int(v) for v in arr[y][x]) == rgb, (y, x, filters)
+
+
+# ---- GIF decode round-trip (LZW + palette + interlace) --------------------
+
+@given(
+    w=st.integers(1, 10),
+    h=st.integers(1, 9),
+    ncolors=st.integers(2, 8),
+    interlace=st.booleans(),
+    data=st.data(),
+)
+@settings(max_examples=120, deadline=None)
+def test_gif_decode_roundtrip(w, h, ncolors, interlace, data):
+    """encode(random palette + indices, optional interlace) -> decode ==
+    palette[indices]: exercises the LZW width schedule, clear handling, and
+    the 4-pass deinterlace row mapping."""
+    from gtfsrt2lc_spark.functions.multimodal import decode_gif
+    from tests.test_multimodal import _gif_full
+
+    palette = [
+        tuple(data.draw(st.integers(0, 255)) for _ in range(3))
+        for _ in range(ncolors)
+    ]
+    px = [
+        [data.draw(st.integers(0, ncolors - 1)) for _ in range(w)]
+        for _ in range(h)
+    ]
+    arr = decode_gif(_gif_full(px, palette, interlace=interlace))
+    assert arr.shape == (h, w, 3)
+    for y in range(h):
+        for x in range(w):
+            assert tuple(int(v) for v in arr[y][x]) == palette[px[y][x]], (y, x)

@@ -30,7 +30,14 @@ def _drain(spark, feed_dir, pipeline, store, out, ckpt):
     q = stream_feeds_to_connections(
         spark, feed_dir, pipeline, store, out, ckpt, available_now=True
     )
-    q.awaitTermination(300)
+    # stop a query that outlives the wait, so no micro-batch keeps running
+    # (and writing) behind the assertions that follow
+    try:
+        drained = q.awaitTermination(300)
+    finally:
+        if q.isActive:
+            q.stop()
+    assert drained, "stream did not drain within 300 s"
 
 
 def test_poll_mode_differential(spark, pipeline, tmp_path):
