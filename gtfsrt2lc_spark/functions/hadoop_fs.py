@@ -12,12 +12,15 @@ S3A it is copy+delete (best available without a committer service).
 ``write_text_atomic`` is all-or-nothing ONLY for paths that do not already
 exist (tmp + rename to a fresh name); overwriting an existing path requires a
 delete first, which opens a crash window where the path is missing. Store
-protocols must therefore commit by writing NEW names (e.g. ``HistoryStore``'s
-``manifest-<seq>.json``, where readers resolve the highest sequence) rather
-than flipping a single mutable pointer file.
+protocols must therefore commit by writing NEW names (``HistoryStore``'s and
+the triple store's ``manifest-<seq>.json``, where readers resolve the highest
+sequence with ``read_live_manifest``) rather than flipping a single mutable
+pointer file.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import SparkSession
 
@@ -98,3 +101,37 @@ def list_files(spark: SparkSession, path: str, prefix: str = "") -> list[str]:
         for st in fs.listStatus(p)
         if st.isFile() and st.getPath().getName().startswith(prefix)
     )
+
+
+def manifest_name(seq: int) -> str:
+    return f"manifest-{seq:06d}.json"
+
+
+def read_live_manifest(spark: SparkSession, path: str) -> tuple[int, dict] | None:
+    """The live manifest of a store at ``path``: the ``manifest-<seq>.json``
+    directly under it with the highest sequence, as ``(seq, parsed JSON)``,
+    or None when there is none.
+
+    The maximum is taken over the PARSED sequence: ``%06d`` stops
+    zero-padding past 999999, so a lexicographic max would pick
+    manifest-999999 over manifest-1000000. A crashed write's partial
+    ``.tmp`` is skipped; a live manifest that is not valid JSON raises."""
+    names = {
+        int(n[len("manifest-"):-len(".json")]): n
+        for n in list_files(spark, path, prefix="manifest-")
+        if n.endswith(".json")
+    }
+    if not names:
+        return None
+    seq = max(names)
+    return seq, json.loads(read_text(spark, f"{path}/{names[seq]}"))
+
+
+def drop_stale_manifests(spark: SparkSession, path: str, live_seq: int) -> None:
+    """Delete every manifest file under ``path`` but the live one. Safe
+    once ``manifest_name(live_seq)`` is written: readers resolve the highest
+    sequence, so the older ones are never read again."""
+    live = manifest_name(live_seq)
+    for name in list_files(spark, path, prefix="manifest-"):
+        if name != live:
+            delete(spark, f"{path}/{name}")

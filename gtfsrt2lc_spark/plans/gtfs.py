@@ -673,21 +673,18 @@ class HistoryStore:
         the next poll)."""
         from gtfsrt2lc_spark.functions import hadoop_fs as hfs
 
-        names = [
-            n
-            for n in hfs.list_files(self.spark, self.path, prefix="manifest-")
-            if n.endswith(".json")  # skip a crashed write's partial .tmp
-        ]
-        if not names:
+        live = hfs.read_live_manifest(self.spark, self.path)
+        if live is None:
             return {"seq": 0, "generations": []}
-        # max by PARSED sequence: %06d stops zero-padding past 999999, so a
-        # lexicographic max would pick manifest-999999 over manifest-1000000
-        live = max(names, key=lambda n: int(n[len("manifest-"):-len(".json")]))
-        m = json.loads(hfs.read_text(self.spark, f"{self.path}/{live}"))
-        if "n_buckets" in m or not isinstance(m.get("generations"), list):
+        seq, m = live
+        if (
+            not isinstance(m, dict)
+            or "n_buckets" in m
+            or not isinstance(m.get("generations"), list)
+        ):
             raise ValueError(
-                f"history store {self.path}: {live} is not a delta-log "
-                "manifest (the retired bucketed layout has 'n_buckets' and "
+                f"history store {self.path}: {hfs.manifest_name(seq)} is not a "
+                "delta-log manifest (the retired bucketed layout has 'n_buckets' and "
                 "per-generation bucket lists). It is not read as empty, "
                 "because that would re-emit every connection; delete the "
                 "store to re-seed it."
@@ -779,7 +776,7 @@ class HistoryStore:
         # resolve the highest sequence, so no mutable pointer file exists
         hfs.write_text_atomic(
             self.spark,
-            f"{self.path}/manifest-{seq:06d}.json",
+            f"{self.path}/{hfs.manifest_name(seq)}",
             json.dumps({"seq": seq, "generations": live}),
         )
         if vacuum:
@@ -795,7 +792,4 @@ class HistoryStore:
         for gen in hfs.list_dirs(self.spark, f"{self.path}/data"):
             if gen not in live_gens:
                 hfs.delete(self.spark, f"{self.path}/data/{gen}")
-        live_name = f"manifest-{live_seq:06d}.json"
-        for name in hfs.list_files(self.spark, self.path, prefix="manifest-"):
-            if name != live_name:
-                hfs.delete(self.spark, f"{self.path}/{name}")
+        hfs.drop_stale_manifests(self.spark, self.path, live_seq)
