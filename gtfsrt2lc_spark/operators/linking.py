@@ -203,29 +203,40 @@ def link_fuzzy(
     Shuffle discipline: the query side's shingles, signatures and band
     keys are projections of each surface, so no row moves before the band
     join. The band join replicates every row x bands, so it runs on the
-    NARROW (surface_q, band) frame only; the dictionary's shingle sets
-    join back to the candidate pairs afterwards, and the query's are
-    recomputed closed-form from ``surface_q`` there. The one shuffle is the
-    per-surface winner aggregate, ``min(struct(-score, record_id))``: a
-    pair that collides on several bands, or a record that owns several
-    bucketed surfaces, is scored once per candidate row, and the aggregate
+    NARROW (surface_q, band) frame only. Both sides' shingle sets join back
+    to the candidate pairs afterwards: the dictionary's from
+    ``FuzzyDictionary.shingled`` on ``surface_d``, the query's from a
+    (surface_q, sh_q) table built once over the query surfaces, on
+    ``surface_q`` — so no shingle set is computed per candidate row. The
+    one shuffle is the per-surface winner aggregate,
+    ``min(struct(-score, record_id))``: a pair that collides on several
+    bands, a duplicated query surface, or a record that owns several
+    bucketed surfaces is scored once per candidate row, and the aggregate
     keeps the highest score, then the smallest record_id.
+
+    The threshold applies to that winner, after the aggregate. This equals
+    filtering the candidates first: if the best candidate clears the
+    threshold it is also the best of those that clear it, and if it does
+    not, none does. Filtering first lets the optimizer push the score into
+    the band-join condition, which evaluates the Jaccard expression there.
     """
     if prepped is None:
         if dictionary is None:
             raise ValueError("link_fuzzy needs either dictionary or prepped")
         prepped = FuzzyDictionary(dictionary)
     q = _prep_bands(surfaces_q, "q", cols=prepped._q_cols)
-    sh_q = prepped._q_cols[0]
+    q_sh = surfaces_q.select(F.col("surface").alias("surface_q")).select(
+        "surface_q", prepped._q_cols[0]
+    )
     return (
         q.join(prepped.bands_df, "band")
         .select("surface_q", "surface_d")
         .join(prepped.shingled, "surface_d")
-        .select("surface_q", "record_id", sh_q, "sh_d")
+        .join(q_sh, "surface_q")
         .select("surface_q", "record_id", prepped._score)
-        .where(F.col("score") >= JACCARD_THRESHOLD)
         .groupBy("surface_q")
         .agg(prepped._winner)
+        .where(F.col("w.neg_score") <= -JACCARD_THRESHOLD)
         .select(
             F.col("surface_q").alias("surface"),
             F.col("w.record_id").alias("record_id"),

@@ -128,6 +128,98 @@ def test_fuzzy_link_band_join_shuffles_no_shingles(spark, corpus_dfs):
     assert checked > 0, "expected a band-keyed Exchange in the plan"
 
 
+def _plan_root(node):
+    """Look through AQE's wrappers to the physical plan node they hold."""
+    while True:
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        elif name.endswith("QueryStage"):
+            node = node.plan()
+        else:
+            return node
+
+
+def test_fuzzy_scorer_builds_query_shingles_once(spark, corpus_dfs):
+    """Plan-shape guard for the scorer: no join condition evaluates the
+    Jaccard expression (``array_intersect``), and a shingle set is only
+    evaluated in a subtree with no join below it — over query or
+    dictionary surface rows, never once per candidate row above the band
+    join."""
+    _, _, surfaces, _ = corpus_dfs
+    from gtfsrt2lc_spark.operators.linking import link_fuzzy
+
+    shingle_set = "array_distinct(transform(sequence("
+    queries = spark.createDataFrame([("Ada Lovelacee",)], "surface string")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for threshold in (old, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            seen = {"joins": 0, "shingle_nodes": 0}
+
+            def visit(node) -> bool:
+                """Checks the subtree; True if it holds a join."""
+                node = _plan_root(node)
+                kids = node.children()
+                below = any([visit(kids.apply(i)) for i in range(kids.size())])
+                es = node.expressions()
+                exprs = [es.apply(i).toString() for i in range(es.size())]
+                is_join = "Join" in node.nodeName()
+                if is_join:
+                    seen["joins"] += 1
+                    assert not any("array_intersect" in e for e in exprs), exprs
+                if any(shingle_set in e for e in exprs):
+                    seen["shingle_nodes"] += 1
+                    assert not below, (node.nodeName(), exprs)
+                return below or is_join
+
+            out = link_fuzzy(queries, surfaces)
+            visit(out._jdf.queryExecution().executedPlan())
+            # band join, dictionary shingles, query shingles; the query's
+            # shingle sets for its bands and for scoring (the dictionary's
+            # may be a cached relation a pipeline persisted)
+            assert seen["joins"] >= 3 and seen["shingle_nodes"] >= 2, seen
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_fuzzy_threshold_applies_to_the_winner(spark):
+    """The Jaccard floor filters the per-surface winner: a query whose
+    only candidate collides on a band but scores below the floor yields no
+    row, a query with candidates on both sides of it links to the best
+    one (ties to the smaller record_id), and a duplicated query surface
+    yields one row."""
+    from gtfsrt2lc_spark.operators.linking import (
+        JACCARD_THRESHOLD,
+        FuzzyDictionary,
+        _prep_bands,
+        link_fuzzy,
+    )
+
+    def grams(s):
+        s = s.lower()
+        return {s[i:i + 3] for i in range(len(s) - 2)}
+
+    query, low = "Ada Lovelacee", "Ada Lomhlace"
+    assert len(grams(query) & grams(low)) / len(grams(query) | grams(low)) < (
+        JACCARD_THRESHOLD
+    )
+    q = spark.createDataFrame([(query,), (query,)], "surface string")
+    schema = "surface string, record_id string, prior double"
+    only_low = FuzzyDictionary(spark.createDataFrame([(low, "rec_0", 1.0)], schema))
+    # the low candidate IS proposed: it shares a band with the query
+    assert _prep_bands(q, "q").join(only_low.bands_df, "band").count() > 0
+    assert link_fuzzy(q, None, prepped=only_low).collect() == []
+
+    mixed = spark.createDataFrame(
+        [(low, "rec_0", 1.0), ("Ada Lovelace", "rec_b", 1.0), ("ADA LOVELACE", "rec_a", 1.0)],
+        schema,
+    )
+    rows = link_fuzzy(q, mixed).collect()
+    assert [(r["surface"], r["record_id"]) for r in rows] == [(query, "rec_a")]
+    assert JACCARD_THRESHOLD <= rows[0]["score"] < 1.0
+
+
 def _tie_dictionary(spark, lower_id: str, upper_id: str):
     """Two surfaces that differ only in case: their lower-cased 3-gram sets
     are identical, so every query scores them the same."""
