@@ -7,23 +7,40 @@ reference's own test: second run yields exactly 0 connections,
 
 Design: pages are bucketed by ``pmod(xxhash64(url), n_buckets)``. One run
 processes only buckets absent from the manifest, appends triples
-partitioned by ``part_id``, and appends one manifest row per finished bucket:
+partitioned by ``part_id``, and records one manifest row per finished
+bucket:
 
   (part_id, n_docs, n_triples, input_fingerprint, run_id, wall_ms, status)
 
-Resume = skip the done buckets; a crashed run leaves at most its
-in-flight buckets unrecorded, which simply re-run next time (idempotent:
-triples are deduped per (part, s, p, o) and readers dedup across parts).
-At 10^12 docs the manifest stays tiny (one row per bucket): the driver
-collects the done bucket ids and filters the pages with ``isin``, builds
-the new manifest rows itself and appends them as one local relation, and
-bucket counts bound retry granularity. An absent manifest is an empty
-one; a manifest that exists but cannot be read raises, because treating
-it as empty would silently re-run every bucket.
+Layout:
+
+.. code-block:: text
+
+    <out_dir>/triples/part_id=<p>/      # parquet, appended per run
+    <out_dir>/_manifest/manifest-<seq>.json
+        # {"seq": N, "parts": [{<one row per done bucket>}, ...]}
+
+The manifest is driver-side JSON holding at most ``n_buckets`` rows, so
+reading and writing it runs no Spark job; a resume over a complete store
+runs none at all. Commit point: the triples are written FIRST, then the
+run writes ``manifest-<seq+1>.json`` (the previous rows plus this run's)
+with ``hadoop_fs.write_text_atomic`` under a name that never pre-exists,
+so the manifest is all-or-nothing. Readers take the highest sequence, as
+``HistoryStore`` does. After the commit the older manifests are vacuumed.
+
+Resume = skip the done buckets; a run that crashed before its manifest
+leaves its buckets unrecorded, and they simply re-run next time
+(idempotent: triples are deduped per (part, s, p, o) and readers dedup
+across parts; the crashed run's parts stay on disk as orphans). An absent
+manifest is an empty one. A manifest that exists but cannot be read, or a
+``_manifest`` in the retired parquet layout, raises ``ValueError``:
+treating it as empty would silently re-run every bucket. There is no
+migration; delete the store to rebuild it.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -41,6 +58,7 @@ MANIFEST_SCHEMA = (
     "part_id int, n_docs long, n_triples long, input_fingerprint long, "
     "run_id string, wall_ms long, status string"
 )
+_MANIFEST_FIELDS = [c.split()[0] for c in MANIFEST_SCHEMA.split(",")]
 # the columns a triple store's parquet holds besides its part_id directories
 TRIPLE_SCHEMA = "subj string, pred string, obj string, graph string"
 
@@ -53,13 +71,58 @@ def _triples_path(out_dir: str) -> str:
     return os.path.join(out_dir, "triples")
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The manifest rows. An absent manifest is an empty one; any other
-    read failure raises (when the frame is evaluated)."""
+def _live_manifest(spark: SparkSession, out_dir: str) -> tuple[int, list[dict]]:
+    """(seq, rows) of the live manifest; (0, []) when the store has none.
+    Raises ``ValueError`` on a manifest that is not one of ours."""
     path = _manifest_path(out_dir)
-    if not hadoop_fs.exists(spark, path):
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+    live = hadoop_fs.read_live_manifest(spark, path)
+    if live is None:
+        # a crashed first commit leaves only manifest-*.tmp (and hidden
+        # checksum files); anything else is the retired parquet layout
+        if any(
+            not n.startswith(("manifest-", "."))
+            for n in hadoop_fs.list_files(spark, path)
+        ):
+            raise ValueError(
+                f"triple store {out_dir}: {path} is in the retired parquet "
+                "manifest layout. It is not read as empty, because that would "
+                "re-run every bucket; delete the store to rebuild it."
+            )
+        return 0, []
+    seq, m = live
+    rows = m.get("parts") if isinstance(m, dict) else None
+    if not isinstance(rows, list) or not all(
+        isinstance(r, dict) and sorted(r) == sorted(_MANIFEST_FIELDS) for r in rows
+    ):
+        raise ValueError(
+            f"triple store {out_dir}: {hadoop_fs.manifest_name(seq)} is not a "
+            "triple-store manifest (a JSON object whose 'parts' lists rows "
+            "with the MANIFEST_SCHEMA fields)"
+        )
+    return seq, rows
+
+
+def _commit_manifest(
+    spark: SparkSession, out_dir: str, seq: int, rows: list[dict]
+) -> None:
+    """Write ``manifest-<seq>.json`` (the commit point), then vacuum the
+    older manifests."""
+    path = _manifest_path(out_dir)
+    hadoop_fs.write_text_atomic(
+        spark,
+        f"{path}/{hadoop_fs.manifest_name(seq)}",
+        json.dumps({"seq": seq, "parts": rows}),
+    )
+    hadoop_fs.drop_stale_manifests(spark, path, seq)
+
+
+def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The live manifest's rows as a local frame. An absent manifest is an
+    empty one; an unreadable or old-layout one raises ``ValueError``."""
+    _, rows = _live_manifest(spark, out_dir)
+    return spark.createDataFrame(
+        [tuple(r[f] for f in _MANIFEST_FIELDS) for r in rows], MANIFEST_SCHEMA
+    )
 
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -95,15 +158,8 @@ def run_incremental(
     bucketed = pages.withColumn(
         "part_id", F.pmod(F.xxhash64(pipeline.page_key()), F.lit(n_buckets)).cast("int")
     )
-    done = set()
-    if hadoop_fs.exists(spark, _manifest_path(out_dir)):
-        done = {
-            r["part_id"]
-            for r in read_manifest(spark, out_dir)
-            .where(F.col("status") == "done")
-            .select("part_id")
-            .collect()
-        }
+    seq, rows = _live_manifest(spark, out_dir)
+    done = {r["part_id"] for r in rows if r["status"] == "done"}
     todo = bucketed.where(~F.col("part_id").isin(sorted(done))) if done else bucketed
 
     # n_docs counts page rows (re-crawl snapshots included) — a plain
@@ -161,24 +217,27 @@ def run_incremental(
             pipeline.scratch_dir = None
 
     got = obs.get
-    manifest_rows = [
-        (
-            r["part_id"],
-            r["n_docs"],
-            int(got[f"p_{r['part_id']}"] or 0),
-            r["input_fingerprint"],
-            run_id,
-            wall_ms,
-            "done",
-        )
+    new_rows = [
+        {
+            "part_id": r["part_id"],
+            "n_docs": r["n_docs"],
+            "n_triples": int(got[f"p_{r['part_id']}"] or 0),
+            "input_fingerprint": r["input_fingerprint"],
+            "run_id": run_id,
+            "wall_ms": wall_ms,
+            "status": "done",
+        }
         for r in part_stats
     ]
-    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
-        _manifest_path(out_dir)
+    _commit_manifest(
+        spark,
+        out_dir,
+        seq + 1,
+        [r for r in rows if r["part_id"] not in todo_parts] + new_rows,
     )
     return {
-        "parts": len(manifest_rows),
-        "n_docs": sum(r[1] for r in manifest_rows),
-        "n_triples": sum(r[2] for r in manifest_rows),
+        "parts": len(new_rows),
+        "n_docs": sum(r["n_docs"] for r in new_rows),
+        "n_triples": sum(r["n_triples"] for r in new_rows),
         "wall_ms": wall_ms,
     }

@@ -182,18 +182,96 @@ def test_unreadable_manifest_raises(spark, corpus_dfs, pipeline, tmp_path_factor
 
     out = str(tmp_path_factory.mktemp("kg_out_corrupt"))
     os.makedirs(os.path.join(out, "_manifest"))
-    with open(os.path.join(out, "_manifest", "part-00000-corrupt.parquet"), "wb") as f:
-        f.write(b"not a parquet file" * 8)
+    with open(os.path.join(out, "_manifest", "manifest-000001.json"), "wb") as f:
+        f.write(b"not a json manifest" * 8)
     with pytest.raises(Exception):
         run_incremental(spark, corpus_dfs[0], pipeline, out, n_buckets=4, run_id="rc")
     assert not os.path.exists(os.path.join(out, "triples"))
 
 
+def test_foreign_manifests_raise(spark, corpus_dfs, pipeline, tmp_path_factory):
+    """Valid JSON that is not a triple-store manifest, and a ``_manifest``
+    in the retired parquet layout, raise ``ValueError`` from both the
+    reader and a run; neither is read as empty or migrated."""
+    import os
+
+    from gtfsrt2lc_spark.plans.manifest import MANIFEST_SCHEMA, _manifest_path
+
+    not_ours = str(tmp_path_factory.mktemp("kg_out_not_ours"))
+    os.makedirs(_manifest_path(not_ours))
+    with open(os.path.join(_manifest_path(not_ours), "manifest-000007.json"), "w") as f:
+        f.write('{"seq": 7, "generations": ["gen-000007"]}')
+    old_layout = str(tmp_path_factory.mktemp("kg_out_old_layout"))
+    spark.createDataFrame(
+        [(p, 1, 1, 0, "old", 0, "done") for p in range(4)], MANIFEST_SCHEMA
+    ).write.parquet(_manifest_path(old_layout))
+
+    for out, match in ((not_ours, "not a triple-store manifest"), (old_layout, "parquet")):
+        with pytest.raises(ValueError, match=match):
+            read_manifest(spark, out)
+        with pytest.raises(ValueError, match=match):
+            run_incremental(spark, corpus_dfs[0], pipeline, out, n_buckets=4, run_id="rf")
+        assert not os.path.exists(os.path.join(out, "triples"))
+
+
+def test_crash_before_manifest_commit(
+    spark, corpus_dfs, pipeline, corpus, tmp_path_factory, monkeypatch
+):
+    """A crash after the triples write and before the manifest (the commit
+    point): nothing is recorded, so the rerun processes every bucket again
+    and the store reads back exactly the golden triples, with each bucket
+    listed once."""
+    from gtfsrt2lc_spark.functions import hadoop_fs
+
+    out = str(tmp_path_factory.mktemp("kg_out_crash"))
+    pages = corpus_dfs[0]
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash before the manifest write")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(hadoop_fs, "write_text_atomic", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id="crashed")
+    assert read_manifest(spark, out).count() == 0
+
+    m = run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id="rerun")
+    assert m["parts"] == 8
+    got = {(r["subj"], r["pred"], r["obj"]) for r in read_triples(spark, out).collect()}
+    assert got == corpus.golden_triples
+    parts = [r["part_id"] for r in read_manifest(spark, out).collect()]
+    assert sorted(parts) == list(range(8))
+
+
+def test_manifest_vacuum_keeps_the_live_one(
+    spark, corpus_dfs, pipeline, corpus, tmp_path_factory
+):
+    """Three committing passes into one store leave exactly one manifest
+    file, the newest, and it lists every bucket once."""
+    import os
+
+    out = str(tmp_path_factory.mktemp("kg_out_vacuum"))
+    pages = corpus_dfs[0]
+    part = F.pmod(F.xxhash64("url"), F.lit(8)).cast("int")
+    for i, upto in enumerate((3, 6, 8)):
+        m = run_incremental(
+            spark, pages.where(part < upto), pipeline, out, n_buckets=8, run_id=f"v{i}"
+        )
+        assert m["parts"] > 0
+    files = [f for f in os.listdir(os.path.join(out, "_manifest")) if f.startswith("manifest-")]
+    assert files == ["manifest-000003.json"]
+    parts = [r["part_id"] for r in read_manifest(spark, out).collect()]
+    assert sorted(parts) == list(range(8))
+    got = {(r["subj"], r["pred"], r["obj"]) for r in read_triples(spark, out).collect()}
+    assert got == corpus.golden_triples
+
+
 # Spark jobs of one warm run_incremental pass over the fixture corpus into a
-# fresh store: 2 pre-scan, 4 fold stage, 6 mapping stage, 5 triples write,
-# 1 manifest append. A resume over a complete store is 1 (the manifest read).
+# fresh store: 2 pre-scan, 4 fold stage, 7 mapping stage, 5 triples write and
+# none for the manifest, which the driver reads and writes as JSON. A resume
+# over a complete store runs no job: its manifest says every bucket is done.
 PASS_JOB_BUDGET = 18
-RESUME_JOB_BUDGET = 1
+RESUME_JOB_BUDGET = 0
 
 
 def test_warm_pass_job_budget(spark, corpus_dfs, pipeline, corpus, tmp_path_factory):

@@ -197,11 +197,13 @@ def test_canonical_bucketing_no_stale_leak(spark, corpus_dfs, tmp_path):
     pipe = _pipe(corpus_dfs, canonical_urls=True)
     out = str(tmp_path / "kg")
     # simulate a crashed first run: buckets 0-7 already recorded done
-    from gtfsrt2lc_spark.plans.manifest import MANIFEST_SCHEMA, _manifest_path
+    from gtfsrt2lc_spark.plans.manifest import _commit_manifest
 
-    spark.createDataFrame(
-        [(p, 0, 0, 0, "crashed", 0, "done") for p in range(8)], MANIFEST_SCHEMA
-    ).write.parquet(_manifest_path(out))
+    _commit_manifest(spark, out, 1, [
+        {"part_id": p, "n_docs": 0, "n_triples": 0, "input_fingerprint": 0,
+         "run_id": "crashed", "wall_ms": 0, "status": "done"}
+        for p in range(8)
+    ])
     run_incremental(spark, dirty, pipe, out, n_buckets=16, run_id="resume")
     got = {
         (r.subj, r.pred, r.obj)
