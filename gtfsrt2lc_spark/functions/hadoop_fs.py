@@ -11,11 +11,13 @@ Atomicity notes: ``rename`` is atomic on HDFS and POSIX local filesystems; on
 S3A it is copy+delete (best available without a committer service).
 ``write_text_atomic`` is all-or-nothing ONLY for paths that do not already
 exist (tmp + rename to a fresh name); overwriting an existing path requires a
-delete first, which opens a crash window where the path is missing. Store
-protocols must therefore commit by writing NEW names (``HistoryStore``'s and
-the triple store's ``manifest-<seq>.json``, where readers resolve the highest
-sequence with ``read_live_manifest``) rather than flipping a single mutable
-pointer file.
+delete first, which opens a crash window where the path is missing. Stores
+therefore commit by writing NEW names rather than flipping a single mutable
+pointer file: ``commit_generations`` is the one commit protocol, shared by
+``HistoryStore`` and the triple store. A store is a log of generation dirs
+plus ``manifest-<seq>.json`` files; readers resolve the highest sequence
+with ``read_live_manifest`` and read only the generations it names, so a
+crashed write's generation is never read and the next commit vacuums it.
 """
 
 from __future__ import annotations
@@ -127,11 +129,20 @@ def read_live_manifest(spark: SparkSession, path: str) -> tuple[int, dict] | Non
     return seq, json.loads(read_text(spark, f"{path}/{names[seq]}"))
 
 
-def drop_stale_manifests(spark: SparkSession, path: str, live_seq: int) -> None:
-    """Delete every manifest file under ``path`` but the live one. Safe
-    once ``manifest_name(live_seq)`` is written: readers resolve the highest
-    sequence, so the older ones are never read again."""
-    live = manifest_name(live_seq)
+def commit_generations(
+    spark: SparkSession, path: str, data: str, seq: int, body: dict
+) -> None:
+    """Commit a generation-log store: write ``{"seq": seq, **body}`` as
+    ``manifest-<seq>.json`` under ``path`` (the commit point), then vacuum
+    every dir under ``data`` that ``body["generations"]`` does not name and
+    every other manifest. Safe while no plan built before the commit runs
+    after it: readers resolve the highest sequence and read only its
+    generations."""
+    live = manifest_name(seq)
+    write_text_atomic(spark, f"{path}/{live}", json.dumps({"seq": seq, **body}))
+    for gen in list_dirs(spark, data):
+        if gen not in body["generations"]:
+            delete(spark, f"{data}/{gen}")
     for name in list_files(spark, path, prefix="manifest-"):
         if name != live:
             delete(spark, f"{path}/{name}")

@@ -25,7 +25,6 @@ embarrassingly parallel across update rows.
 from __future__ import annotations
 
 import copy
-import json
 from datetime import datetime, timezone
 from functools import reduce
 
@@ -610,15 +609,10 @@ class HistoryStore:
 
     Commit point: the generation data is written FIRST (``mode("overwrite")``
     so a crashed attempt's orphan at the same name never blocks the retry),
-    then ``manifest-<seq+1>.json`` LAST. The manifest lands via tmp + rename
-    to a name that never pre-exists, so it is all-or-nothing; readers
-    resolve the highest manifest sequence, which means there is no mutable
-    pointer file and no delete-before-rename crash window. A commit either
-    fully happened or left only orphans that readers ignore and the next
-    commit overwrites or vacuums. An empty delta commits nothing: no
-    generation, no manifest. All path operations go through the Hadoop
-    FileSystem API so the protocol works on HDFS/S3A, not just the local
-    filesystem.
+    then ``hadoop_fs.commit_generations`` writes ``manifest-<seq+1>.json``
+    and vacuums what it no longer names. A commit either fully happened or
+    left only orphans that readers ignore and the next commit overwrites or
+    vacuums. An empty delta commits nothing: no generation, no manifest.
 
     A store in the retired bucketed layout (its manifest has ``n_buckets``
     and per-generation bucket lists) raises ``ValueError``: reading it as
@@ -740,15 +734,15 @@ class HistoryStore:
         )
         return fresh.drop("_h_dep", "_h_arr", "_h_type")
 
-    def commit(self, fresh_keyed: DataFrame, vacuum: bool = True) -> None:
+    def commit(self, fresh_keyed: DataFrame) -> None:
         """Upsert: latest state per (rule_key, service_day).
 
         Writes one generation holding only the fresh states — or, once
-        ``MAX_GENERATIONS`` are live, the compacted whole store — then the
-        manifest naming it (the commit point), then vacuums what the new
-        manifest no longer references. One write job either way; the
-        delta's row count is observed on that write, and an empty delta
-        deletes the written directory and commits nothing.
+        ``MAX_GENERATIONS`` are live, the compacted whole store — then
+        commits the manifest naming it, which vacuums what the new manifest
+        no longer references. One write job either way; the delta's row
+        count is observed on that write, and an empty delta deletes the
+        written directory and commits nothing.
         """
         from pyspark.sql import Observation
 
@@ -771,25 +765,6 @@ class HistoryStore:
         if not obs.get["rows"]:
             hfs.delete(self.spark, f"{self.path}/data/{gen}")
             return
-        live.append(gen)
-        # COMMIT POINT: a fresh-named manifest appears atomically; readers
-        # resolve the highest sequence, so no mutable pointer file exists
-        hfs.write_text_atomic(
-            self.spark,
-            f"{self.path}/{hfs.manifest_name(seq)}",
-            json.dumps({"seq": seq, "generations": live}),
+        hfs.commit_generations(
+            self.spark, self.path, f"{self.path}/data", seq, {"generations": live + [gen]}
         )
-        if vacuum:
-            self._vacuum(live, seq)
-
-    def _vacuum(self, live_gens: list[str], live_seq: int) -> None:
-        """Drop generation dirs the live manifest no longer references and
-        manifests below the live sequence. Safe because readers resolve the
-        highest manifest and the sequential poll loop has no concurrent
-        reader mid-plan."""
-        from gtfsrt2lc_spark.functions import hadoop_fs as hfs
-
-        for gen in hfs.list_dirs(self.spark, f"{self.path}/data"):
-            if gen not in live_gens:
-                hfs.delete(self.spark, f"{self.path}/data/{gen}")
-        hfs.drop_stale_manifests(self.spark, self.path, live_seq)

@@ -6,9 +6,9 @@ reference's own test: second run yields exactly 0 connections,
 `test/gtfsrt2lc.test.js:156`).
 
 Design: pages are bucketed by ``pmod(xxhash64(url), n_buckets)``. One run
-processes only buckets absent from the manifest, appends triples
-partitioned by ``part_id``, and records one manifest row per finished
-bucket:
+processes only buckets absent from the manifest, writes their triples as
+one new generation partitioned by ``part_id``, and records one manifest row
+per finished bucket:
 
   (part_id, n_docs, n_triples, input_fingerprint, run_id, wall_ms, status)
 
@@ -16,31 +16,35 @@ Layout:
 
 .. code-block:: text
 
-    <out_dir>/triples/part_id=<p>/      # parquet, appended per run
+    <out_dir>/triples/gen-<seq>/part_id=<p>/  # parquet, one generation per commit
     <out_dir>/_manifest/manifest-<seq>.json
-        # {"seq": N, "parts": [{<one row per done bucket>}, ...]}
+        # {"seq": N, "generations": [oldest, ..., newest],
+        #  "parts": [{<one row per done bucket>}, ...]}
 
 The manifest is driver-side JSON holding at most ``n_buckets`` rows, so
 reading and writing it runs no Spark job; a resume over a complete store
-runs none at all. Commit point: the triples are written FIRST, then the
-run writes ``manifest-<seq+1>.json`` (the previous rows plus this run's)
-with ``hadoop_fs.write_text_atomic`` under a name that never pre-exists,
-so the manifest is all-or-nothing. Readers take the highest sequence, as
-``HistoryStore`` does. After the commit the older manifests are vacuumed.
+runs none at all. The commit is ``hadoop_fs.commit_generations``, the one
+``HistoryStore`` uses: a run writes its triples FIRST, with
+``mode("overwrite")``, as ``gen-<seq+1>``, then commits
+``manifest-<seq+1>.json`` naming the previous generations plus its own,
+which vacuums every other generation dir and manifest. Readers read only
+the generations the live manifest names, so a store that has never
+committed reads as empty.
 
-Resume = skip the done buckets; a run that crashed before its manifest
-leaves its buckets unrecorded, and they simply re-run next time
-(idempotent: triples are deduped per (part, s, p, o) and readers dedup
-across parts; the crashed run's parts stay on disk as orphans). An absent
-manifest is an empty one. A manifest that exists but cannot be read, or a
-``_manifest`` in the retired parquet layout, raises ``ValueError``:
-treating it as empty would silently re-run every bucket. There is no
-migration; delete the store to rebuild it.
+Resume = skip the done buckets. A run that crashed before its manifest
+leaves its buckets unrecorded and its generation unnamed: readers ignore
+it, and its rerun overwrites it under the same name (a stray one is
+vacuumed at the next commit). Each commit marks at least one new bucket
+done, so a store holds at most ``n_buckets`` generations and needs no
+compaction. An absent manifest is an empty one. An unreadable manifest, or
+a retired layout (a parquet ``_manifest``, or a manifest without
+``generations`` over ``triples/part_id=<p>/``), raises ``ValueError``:
+treating it as empty would re-run every bucket. There is no migration;
+delete the store to rebuild it.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -71,9 +75,11 @@ def _triples_path(out_dir: str) -> str:
     return os.path.join(out_dir, "triples")
 
 
-def _live_manifest(spark: SparkSession, out_dir: str) -> tuple[int, list[dict]]:
-    """(seq, rows) of the live manifest; (0, []) when the store has none.
-    Raises ``ValueError`` on a manifest that is not one of ours."""
+def _live_manifest(
+    spark: SparkSession, out_dir: str
+) -> tuple[int, list[str], list[dict]]:
+    """(seq, generations, rows) of the live manifest; (0, [], []) when the
+    store has none. Raises ``ValueError`` on a manifest that is not ours."""
     path = _manifest_path(out_dir)
     live = hadoop_fs.read_live_manifest(spark, path)
     if live is None:
@@ -88,46 +94,47 @@ def _live_manifest(spark: SparkSession, out_dir: str) -> tuple[int, list[dict]]:
                 "manifest layout. It is not read as empty, because that would "
                 "re-run every bucket; delete the store to rebuild it."
             )
-        return 0, []
+        return 0, [], []
     seq, m = live
+    gens = m.get("generations") if isinstance(m, dict) else None
     rows = m.get("parts") if isinstance(m, dict) else None
-    if not isinstance(rows, list) or not all(
-        isinstance(r, dict) and sorted(r) == sorted(_MANIFEST_FIELDS) for r in rows
+    if not (
+        isinstance(gens, list)
+        and all(isinstance(g, str) for g in gens)
+        and isinstance(rows, list)
+        and all(isinstance(r, dict) and sorted(r) == sorted(_MANIFEST_FIELDS) for r in rows)
     ):
         raise ValueError(
             f"triple store {out_dir}: {hadoop_fs.manifest_name(seq)} is not a "
-            "triple-store manifest (a JSON object whose 'parts' lists rows "
-            "with the MANIFEST_SCHEMA fields)"
+            "triple-store manifest (a JSON object with 'generations' names "
+            "and 'parts' rows of the MANIFEST_SCHEMA fields); delete the "
+            "store to rebuild it"
         )
-    return seq, rows
-
-
-def _commit_manifest(
-    spark: SparkSession, out_dir: str, seq: int, rows: list[dict]
-) -> None:
-    """Write ``manifest-<seq>.json`` (the commit point), then vacuum the
-    older manifests."""
-    path = _manifest_path(out_dir)
-    hadoop_fs.write_text_atomic(
-        spark,
-        f"{path}/{hadoop_fs.manifest_name(seq)}",
-        json.dumps({"seq": seq, "parts": rows}),
-    )
-    hadoop_fs.drop_stale_manifests(spark, path, seq)
+    return seq, gens, rows
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """The live manifest's rows as a local frame. An absent manifest is an
     empty one; an unreadable or old-layout one raises ``ValueError``."""
-    _, rows = _live_manifest(spark, out_dir)
+    _, _, rows = _live_manifest(spark, out_dir)
     return spark.createDataFrame(
         [tuple(r[f] for f in _MANIFEST_FIELDS) for r in rows], MANIFEST_SCHEMA
     )
 
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Global triple view: cross-partition dedup at read time."""
-    t = spark.read.schema(TRIPLE_SCHEMA).parquet(_triples_path(out_dir))
+    """Global triple view over the generations the live manifest names,
+    deduplicated across buckets at read time. A store that has never
+    committed reads as empty; one in a retired layout raises ``ValueError``."""
+    _, gens, _ = _live_manifest(spark, out_dir)
+    # several roots with part_id dirs below each fail partition discovery
+    # ("Conflicting directory structures"), and part_id is not read, so the
+    # files are listed without it; no generation reads as an empty frame
+    t = (
+        spark.read.schema(TRIPLE_SCHEMA)
+        .option("recursiveFileLookup", True)
+        .parquet(*[f"{_triples_path(out_dir)}/{g}" for g in gens])
+    )
     return t.groupBy("subj", "pred", "obj").agg(F.min("graph").alias("graph"))
 
 
@@ -158,7 +165,7 @@ def run_incremental(
     bucketed = pages.withColumn(
         "part_id", F.pmod(F.xxhash64(pipeline.page_key()), F.lit(n_buckets)).cast("int")
     )
-    seq, rows = _live_manifest(spark, out_dir)
+    seq, gens, rows = _live_manifest(spark, out_dir)
     done = {r["part_id"] for r in rows if r["status"] == "done"}
     todo = bucketed.where(~F.col("part_id").isin(sorted(done))) if done else bucketed
 
@@ -204,9 +211,12 @@ def run_incremental(
                 for p in todo_parts
             ],
         )
-        triples.write.mode("append").partitionBy("part_id").parquet(
-            _triples_path(out_dir)
-        )
+        # a crashed run left its generation under this same name; static
+        # overwrite replaces the whole dir, not only the buckets written now
+        gen = f"gen-{seq + 1:06d}"
+        triples.write.mode("overwrite").option(
+            "partitionOverwriteMode", "static"
+        ).partitionBy("part_id").parquet(f"{_triples_path(out_dir)}/{gen}")
         wall_ms = int((time.monotonic() - t0) * 1000)
     finally:
         pipeline.cleanup()  # drop stage-checkpoint scratch dirs
@@ -229,11 +239,15 @@ def run_incremental(
         }
         for r in part_stats
     ]
-    _commit_manifest(
+    hadoop_fs.commit_generations(
         spark,
-        out_dir,
+        _manifest_path(out_dir),
+        _triples_path(out_dir),
         seq + 1,
-        [r for r in rows if r["part_id"] not in todo_parts] + new_rows,
+        {
+            "generations": gens + [gen],
+            "parts": [r for r in rows if r["part_id"] not in todo_parts] + new_rows,
+        },
     )
     return {
         "parts": len(new_rows),

@@ -338,16 +338,27 @@ def test_history_crash_during_compaction(spark, tmp_path, monkeypatch):
     ]
 
 
-def test_history_commit_is_crash_recoverable(spark, tmp_path):
+def test_history_commit_is_crash_recoverable(spark, tmp_path, monkeypatch):
     """The manifest write IS the commit point: a completed manifest that a
     crash left un-vacuumed is simply the live store; a partial .tmp from a
     crashed manifest write is ignored."""
     import pathlib
 
+    from gtfsrt2lc_spark.functions import hadoop_fs
+
+    write_text_atomic = hadoop_fs.write_text_atomic
+
+    def write_then_crash(*a, **k):
+        write_text_atomic(*a, **k)
+        raise RuntimeError("injected crash after the manifest write")
+
     root = str(tmp_path / "hist")
     store = HistoryStore(spark, root)
     store.commit(_states(spark, ["k1"], dep=10))
-    store.commit(_states(spark, ["k1"], dep=99), vacuum=False)  # crash before vacuum
+    with monkeypatch.context() as m:
+        m.setattr(hadoop_fs, "write_text_atomic", write_then_crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            store.commit(_states(spark, ["k1"], dep=99))  # crash before vacuum
     fresh = HistoryStore(spark, root)
     assert {r["departure_delay"] for r in fresh.state().collect()} == {99}
     (pathlib.Path(root) / "manifest-999999.json.tmp").write_text("{parti")

@@ -124,3 +124,36 @@ def test_every_package_module_is_reached():
                     stack.append(found)
     unreached = sorted(os.path.relpath(p, REPO) for p in PKG_FILES if p not in seen)
     assert unreached == UNREACHED, unreached
+
+
+def _references(path: str, name: str) -> list[str]:
+    """The enclosing function of every use of ``name`` in ``path``
+    (``<module>`` outside any function)."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), filename=path)
+    found = []
+
+    def visit(node: ast.AST, scope: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = node.name
+        if (isinstance(node, ast.Name) and node.id == name) or (
+            isinstance(node, ast.Attribute) and node.attr == name
+        ) or (isinstance(node, ast.alias) and name in (node.name, node.asname)):
+            found.append(scope)
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    visit(tree, "<module>")
+    return found
+
+
+def test_one_store_commit_protocol():
+    """Every store commits through ``hadoop_fs.commit_generations``: it is the
+    only user of ``write_text_atomic`` in the package, so a store that
+    writes its own manifest, a second commit protocol, fails here."""
+    users = [
+        f"{os.path.relpath(path, REPO)}:{scope}"
+        for path in PKG_FILES
+        for scope in _references(path, "write_text_atomic")
+    ]
+    assert users == [f"{PKG}/functions/hadoop_fs.py:commit_generations"], users

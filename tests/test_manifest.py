@@ -21,6 +21,8 @@ def pipeline(corpus_dfs):
 def test_idempotent_rerun(spark, corpus_dfs, pipeline, corpus, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("kg_out"))
     pages = corpus_dfs[0]
+    # a store that has never committed reads as empty
+    assert read_triples(spark, out).count() == 0
 
     m1 = run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id="r1")
     assert m1["parts"] == 8
@@ -166,7 +168,7 @@ def test_triple_write_one_file_per_bucket(spark, corpus_dfs, tmp_path_factory):
     pipe = KGPipeline(records, surfaces, sameas, preds)
     run_incremental(spark, pages, pipe, out, n_buckets=8, run_id="rf")
 
-    tdir = os.path.join(out, "triples")
+    tdir = os.path.join(out, "triples", "gen-000001")
     part_dirs = [d for d in os.listdir(tdir) if d.startswith("part_id=")]
     assert part_dirs
     for d in part_dirs:
@@ -190,12 +192,26 @@ def test_unreadable_manifest_raises(spark, corpus_dfs, pipeline, tmp_path_factor
 
 
 def test_foreign_manifests_raise(spark, corpus_dfs, pipeline, tmp_path_factory):
-    """Valid JSON that is not a triple-store manifest, and a ``_manifest``
-    in the retired parquet layout, raise ``ValueError`` from both the
-    reader and a run; neither is read as empty or migrated."""
+    """Valid JSON that is not a triple-store manifest, a ``_manifest`` in
+    the retired parquet layout, and a store in the retired append layout (a
+    manifest with ``parts`` but no ``generations``, over triples appended
+    under ``triples/part_id=<p>/``) raise ``ValueError`` from the readers
+    and a run; none is read as empty or migrated, and the run writes no
+    triples."""
+    import json
     import os
 
-    from gtfsrt2lc_spark.plans.manifest import MANIFEST_SCHEMA, _manifest_path
+    from gtfsrt2lc_spark.plans.manifest import (
+        _MANIFEST_FIELDS,
+        MANIFEST_SCHEMA,
+        _manifest_path,
+        _triples_path,
+    )
+
+    def triple_files(out):
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(_triples_path(out)) for f in fs
+        )
 
     not_ours = str(tmp_path_factory.mktemp("kg_out_not_ours"))
     os.makedirs(_manifest_path(not_ours))
@@ -205,22 +221,42 @@ def test_foreign_manifests_raise(spark, corpus_dfs, pipeline, tmp_path_factory):
     spark.createDataFrame(
         [(p, 1, 1, 0, "old", 0, "done") for p in range(4)], MANIFEST_SCHEMA
     ).write.parquet(_manifest_path(old_layout))
+    appended = str(tmp_path_factory.mktemp("kg_out_appended"))
+    spark.createDataFrame(
+        [(f"s{p}", "p", "o", "g", p) for p in range(4)],
+        "subj string, pred string, obj string, graph string, part_id int",
+    ).write.partitionBy("part_id").parquet(_triples_path(appended))
+    os.makedirs(_manifest_path(appended))
+    with open(os.path.join(_manifest_path(appended), "manifest-000001.json"), "w") as f:
+        row = dict(zip(_MANIFEST_FIELDS, (0, 1, 1, 0, "old", 0, "done")))
+        json.dump({"seq": 1, "parts": [{**row, "part_id": p} for p in range(4)]}, f)
 
-    for out, match in ((not_ours, "not a triple-store manifest"), (old_layout, "parquet")):
+    for out, match in (
+        (not_ours, "not a triple-store manifest"),
+        (old_layout, "parquet"),
+        (appended, "not a triple-store manifest"),
+    ):
+        before = triple_files(out)
         with pytest.raises(ValueError, match=match):
             read_manifest(spark, out)
         with pytest.raises(ValueError, match=match):
+            read_triples(spark, out)
+        with pytest.raises(ValueError, match=match):
             run_incremental(spark, corpus_dfs[0], pipeline, out, n_buckets=4, run_id="rf")
-        assert not os.path.exists(os.path.join(out, "triples"))
+        assert triple_files(out) == before
 
 
 def test_crash_before_manifest_commit(
     spark, corpus_dfs, pipeline, corpus, tmp_path_factory, monkeypatch
 ):
-    """A crash after the triples write and before the manifest (the commit
-    point): nothing is recorded, so the rerun processes every bucket again
-    and the store reads back exactly the golden triples, with each bucket
-    listed once."""
+    """Two crashes after the triples write and before the manifest (the
+    commit point): nothing is recorded and readers see no uncommitted row.
+    The rerun processes every bucket again and overwrites the crashed
+    generation, so the store holds one clean run's files and rows, reads
+    back exactly the golden triples, and lists each bucket once."""
+    import glob
+    import os
+
     from gtfsrt2lc_spark.functions import hadoop_fs
 
     out = str(tmp_path_factory.mktemp("kg_out_crash"))
@@ -231,16 +267,62 @@ def test_crash_before_manifest_commit(
 
     with monkeypatch.context() as mp:
         mp.setattr(hadoop_fs, "write_text_atomic", crash)
-        with pytest.raises(RuntimeError, match="injected crash"):
-            run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id="crashed")
+        for i in range(2):
+            with pytest.raises(RuntimeError, match="injected crash"):
+                run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id=f"crash{i}")
     assert read_manifest(spark, out).count() == 0
+    assert read_triples(spark, out).count() == 0
 
     m = run_incremental(spark, pages, pipeline, out, n_buckets=8, run_id="rerun")
     assert m["parts"] == 8
+    tdir = os.path.join(out, "triples")
+    assert os.listdir(tdir) == ["gen-000001"]
+    files = glob.glob(os.path.join(tdir, "**", "*.parquet"), recursive=True)
+    assert len(files) == 8, files
+    assert spark.read.parquet(os.path.join(tdir, "gen-000001")).count() == m["n_triples"]
     got = {(r["subj"], r["pred"], r["obj"]) for r in read_triples(spark, out).collect()}
     assert got == corpus.golden_triples
     parts = [r["part_id"] for r in read_manifest(spark, out).collect()]
     assert sorted(parts) == list(range(8))
+
+
+def test_rerun_replaces_the_whole_crashed_generation(
+    spark, corpus_dfs, pipeline, tmp_path_factory, monkeypatch
+):
+    """A crashed run over every bucket, then a rerun over fewer buckets: the
+    rerun's generation holds only its own buckets, even in a session whose
+    default partition overwrite is dynamic (which would keep the crashed
+    run's other bucket dirs, and readers would see their rows)."""
+    import os
+
+    from gtfsrt2lc_spark.functions import hadoop_fs
+
+    out = str(tmp_path_factory.mktemp("kg_out_crash_fewer"))
+    pages = corpus_dfs[0]
+    part = F.pmod(F.xxhash64("url"), F.lit(4)).cast("int")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash before the manifest write")
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    previous = spark.conf.get(conf)
+    spark.conf.set(conf, "dynamic")
+    try:
+        with monkeypatch.context() as mp:
+            mp.setattr(hadoop_fs, "write_text_atomic", crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                run_incremental(spark, pages, pipeline, out, n_buckets=4, run_id="crash")
+        m = run_incremental(
+            spark, pages.where(part < 2), pipeline, out, n_buckets=4, run_id="rerun"
+        )
+    finally:
+        spark.conf.set(conf, previous)
+    assert m["parts"] == 2
+    gen = os.path.join(out, "triples", "gen-000001")
+    assert sorted(d for d in os.listdir(gen) if d.startswith("part_id=")) == [
+        "part_id=0", "part_id=1"
+    ]
+    assert spark.read.parquet(gen).count() == m["n_triples"]
 
 
 def test_manifest_vacuum_keeps_the_live_one(

@@ -197,13 +197,16 @@ def test_canonical_bucketing_no_stale_leak(spark, corpus_dfs, tmp_path):
     pipe = _pipe(corpus_dfs, canonical_urls=True)
     out = str(tmp_path / "kg")
     # simulate a crashed first run: buckets 0-7 already recorded done
-    from gtfsrt2lc_spark.plans.manifest import _commit_manifest
+    from gtfsrt2lc_spark.functions.hadoop_fs import commit_generations
 
-    _commit_manifest(spark, out, 1, [
-        {"part_id": p, "n_docs": 0, "n_triples": 0, "input_fingerprint": 0,
-         "run_id": "crashed", "wall_ms": 0, "status": "done"}
-        for p in range(8)
-    ])
+    commit_generations(spark, f"{out}/_manifest", f"{out}/triples", 1, {
+        "generations": [],
+        "parts": [
+            {"part_id": p, "n_docs": 0, "n_triples": 0, "input_fingerprint": 0,
+             "run_id": "crashed", "wall_ms": 0, "status": "done"}
+            for p in range(8)
+        ],
+    })
     run_incremental(spark, dirty, pipe, out, n_buckets=16, run_id="resume")
     got = {
         (r.subj, r.pred, r.obj)
