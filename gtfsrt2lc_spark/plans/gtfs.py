@@ -12,7 +12,8 @@ here), re-expressed as DataFrame plans:
   service day / start (F3/F4)   lib/Gtfsrt2LC.js:113-142      Column exprs; findTripStartDate takes explicit as_of
   dim joins (J1-J4, P3)         lib/Gtfsrt2LC.js:98-111       broadcast hash joins, inner (silent drop)
   repair + pairing (W1-W10,P6)  lib/Gtfsrt2LC.js:438-665      one Arrow mapInPandas pass per update row
-  history dedup (J6/T3)         lib/Gtfsrt2LC.js:667-751      parquet delta log (LSM-style) + left join, latest gen wins
+  history dedup (J6/T3)         lib/Gtfsrt2LC.js:667-751      parquet delta log (LSM-style), latest gen wins; left join,
+                                                              or a lag over polls for a many-feed stream batch
   12-quad explode (S10)         lib/Connections2Triples.js    sources/gtfs_serializers.py
 
 Scale notes: dimensions broadcast (they are the reference's in-heap Maps);
@@ -586,7 +587,9 @@ class HistoryStore:
     (ref :686-696), sub-key = service date, value = (depDelay, arrDelay,
     type). ``filter_new`` keeps the connections whose state differs from
     the stored one; ``commit`` records the new states. Second identical run
-    emits 0 (ref test :156).
+    emits 0 (ref test :156). Both take an optional ``poll`` column that
+    orders several feeds of one batch (the streaming micro-batch); a CLI
+    poll is the one-feed case.
 
     Layout — an append-only log of generations, the Spark-native analog of
     the reference's LevelDB (an LSM store, where a write touches only what
@@ -620,11 +623,12 @@ class HistoryStore:
     store to re-seed it.
     """
 
+    _KEY = ["rule_key", "service_day"]
+    _STATE = ["departure_delay", "arrival_delay", "type"]
     _SCHEMA = (
         "rule_key string, service_day string, departure_delay bigint, "
         "arrival_delay bigint, type string"
     )
-    _COLS = ["rule_key", "service_day", "departure_delay", "arrival_delay", "type"]
 
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
@@ -688,8 +692,19 @@ class HistoryStore:
     def _generation(self, gen: str) -> DataFrame:
         return self.spark.read.schema(self._SCHEMA).parquet(f"{self.path}/data/{gen}")
 
-    @staticmethod
-    def _latest(gens: list[DataFrame]) -> DataFrame:
+    @classmethod
+    def _newest(cls, df: DataFrame, order: str | None = None) -> DataFrame:
+        """One state per key: its row with the highest ``order``; rows that
+        tie on it (duplicates within one poll) resolve to the highest state."""
+        s = F.max(F.struct(*([order] if order else []), *cls._STATE))
+        return (
+            df.groupBy(*cls._KEY)
+            .agg(s.alias("_s"))
+            .select(*cls._KEY, *[F.col(f"_s.{c}") for c in cls._STATE])
+        )
+
+    @classmethod
+    def _latest(cls, gens: list[DataFrame]) -> DataFrame:
         """Latest state per key across generations listed oldest first: a
         key's row in a later generation wins. Each generation holds one row
         per key, so a single generation needs no resolution."""
@@ -699,43 +714,58 @@ class HistoryStore:
             DataFrame.unionByName,
             [g.withColumn("_gen", F.lit(i)) for i, g in enumerate(gens)],
         )
-        state = F.struct("departure_delay", "arrival_delay", "type")
-        return (
-            tagged.groupBy("rule_key", "service_day")
-            .agg(F.max_by(state, "_gen").alias("_s"))
-            .select("rule_key", "service_day", "_s.*")
-        )
+        return cls._newest(tagged, "_gen")
 
     def state(self) -> DataFrame:
         """Current committed state: one row per (rule_key, service_day) with
-        (departure_delay, arrival_delay, type) — the baseline a differential
-        pass compares against (public accessor for the streaming one-pass
-        micro-batch, streaming/gtfs.py)."""
+        (departure_delay, arrival_delay, type) — the baseline ``filter_new``
+        compares against."""
         gens = self._manifest()["generations"]
         if not gens:
             return self.spark.createDataFrame([], self._SCHEMA)
         return self._latest([self._generation(g) for g in gens])
 
-    def filter_new(self, conns: DataFrame) -> DataFrame:
-        """Keep connections that are new or changed vs the store."""
-        keyed = self.rule_key(conns)
-        hist = self.state().select(
-            "rule_key", "service_day",
-            F.col("departure_delay").alias("_h_dep"),
-            F.col("arrival_delay").alias("_h_arr"),
-            F.col("type").alias("_h_type"),
-        )
-        j = keyed.join(hist, ["rule_key", "service_day"], "left")
-        fresh = j.where(
-            F.col("_h_type").isNull()
-            | (F.col("_h_dep") != F.col("departure_delay"))
-            | (F.col("_h_arr") != F.col("arrival_delay"))
-            | (F.col("_h_type") != F.col("type"))
-        )
-        return fresh.drop("_h_dep", "_h_arr", "_h_type")
+    def filter_new(self, conns: DataFrame, poll: str | None = None) -> DataFrame:
+        """Keep connections that are new or changed.
 
-    def commit(self, fresh_keyed: DataFrame) -> None:
-        """Upsert: latest state per (rule_key, service_day).
+        Without ``poll`` each row is compared with its key's stored state.
+        ``poll`` names an int column that orders the feeds of one batch; each
+        row is then compared with its key's state in the nearest earlier poll
+        that holds the key, or with the store when no earlier poll does. So
+        a state that changes and changes back emits both changes, as
+        sequential polls would. A poll's state for a key is the max of its
+        rows' states (rows of one key in one poll normally agree).
+        """
+        keyed = self.rule_key(conns)
+        state = F.struct(*self._STATE)
+        base = self.state().select(*self._KEY, state.alias("_base"))
+        on = self._KEY
+        if poll is not None:
+            prev = F.lag("_s").over(Window.partitionBy(*self._KEY).orderBy(poll))
+            base = (
+                keyed.groupBy(*self._KEY, poll)
+                .agg(F.max(state).alias("_s"))
+                .join(base, self._KEY, "left")
+                .select(*self._KEY, poll, F.coalesce(prev, "_base").alias("_base"))
+            )
+            on = self._KEY + [poll]
+        fresh = keyed.join(base, on, "left").where(
+            F.col("_base.type").isNull()
+            | (F.col("_base.departure_delay") != F.col("departure_delay"))
+            | (F.col("_base.arrival_delay") != F.col("arrival_delay"))
+            | (F.col("_base.type") != F.col("type"))
+        )
+        return fresh.drop("_base")
+
+    def commit(self, fresh_keyed: DataFrame, poll: str | None = None) -> None:
+        """Upsert: one state per (rule_key, service_day), taken from the
+        key's fresh rows in the newest ``poll`` that has any (see
+        ``filter_new``).
+
+        Edge case: when that poll holds rows of the key that disagree, the
+        highest fresh row's state is kept, not necessarily the poll's state
+        that later polls were compared with. When they agree (every fixture
+        and reference feed), the two are the same.
 
         Writes one generation holding only the fresh states — or, once
         ``MAX_GENERATIONS`` are live, the compacted whole store — then
@@ -752,10 +782,8 @@ class HistoryStore:
         seq = int(m["seq"]) + 1
         gen = f"gen-{seq:06d}"
         obs = Observation()
-        delta = (
-            fresh_keyed.select(*self._COLS)
-            .dropDuplicates(["rule_key", "service_day"])
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
+        delta = self._newest(fresh_keyed, poll).observe(
+            obs, F.count(F.lit(1)).alias("rows")
         )
         live = list(m["generations"])
         if len(live) >= MAX_GENERATIONS:

@@ -7,10 +7,11 @@ poll lands one protobuf feed file -> ``foreachBatch`` decodes, converts to
 Connections against one ``GtfsIndexes`` plan (the reference's index-reuse
 pattern, README.md:58: the plan is built once; its data is computed once
 only if the caller ``GtfsIndexes.persist()``s it), differential-filters
-against the ``HistoryStore`` (only new/changed connections emit —
-`lib/Gtfsrt2LC.js:667-751`), and lands each epoch in its own
-overwrite-mode ``epoch=N`` directory (replayed epochs rewrite identical
-content: exactly-once output).
+against the ``HistoryStore`` with the CLI poll's ``filter_new``/``commit``
+(only new/changed connections emit — `lib/Gtfsrt2LC.js:667-751`; the
+batch's files are ordered polls), and lands each poll in its own
+overwrite-mode ``epoch=<batch>-<poll>`` directory (replayed epochs rewrite
+identical content: exactly-once output).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from __future__ import annotations
 import re
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gtfsrt2lc_spark.functions import hadoop_fs
@@ -73,16 +74,13 @@ def stream_feeds_to_connections(
     )
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        # Polls are SEQUENTIAL in the reference loop, but the whole batch is
-        # processed in ONE pass: every file's connection plan is tagged with
-        # its poll order and unioned, and the per-poll differential is a
-        # lag() window over the per-(key, file) state chain, seeded with the
-        # history store's baseline. This preserves state-change ordering
-        # exactly (a connection that changed between polls emits each change
-        # in order) while replacing the old per-file loop's F× jobs — F
-        # decode/convert jobs, F store scans, F store commits, F output
-        # writes — with one decode/convert pass, one store scan, one
-        # dynamic-partition write and one store commit per micro-batch.
+        # The batch's files are the reference loop's sequential polls, in
+        # (modificationTime, path) order. Each file's connection plan is
+        # tagged with its poll index, and the union goes through the CLI
+        # poll's differential with poll="_file_idx": every poll is compared
+        # with the one before it, so a connection that changed between polls
+        # emits each change in order. One decode/convert pass, one store
+        # scan, one output write and one store commit per micro-batch.
         files = sorted(
             (
                 (r["modificationTime"], r["path"])
@@ -91,72 +89,24 @@ def stream_feeds_to_connections(
         )
         if not files:
             return
-        per_file = []
-        for i, (_mt, path) in enumerate(files):
-            # read THIS file directly rather than re-filtering batch_df:
-            # the where(path==...) form re-scans the whole batch source per
-            # file — O(files^2) bytes per micro-batch at high poll fan-in —
-            # while a direct single-path load scans each feed exactly once.
-            # The path is GLOB-ESCAPED (Hadoop's load() treats [, {, * as
-            # pattern metacharacters — a feed named "feed[1].pb" would
-            # otherwise read nothing or the wrong file). The direct load
-            # assumes the drop dir is append-only between source snapshot
-            # and processing; if a retention sweep deleted the file, fall
-            # back to filtering the batch source snapshot, which still holds
-            # the bytes.
-            if hadoop_fs.exists(spark, path):
-                src = (
-                    spark.read.format("binaryFile")
-                    .schema(BINARYFILE_SCHEMA)
-                    .load(_glob_escape(path))
-                    .select(F.col("content").alias("payload"))
-                )
-            else:  # retention sweep beat us to it: use the source snapshot
-                src = batch_df.where(F.col("path") == path).select(
-                    F.col("content").alias("payload")
-                )
-            per_file.append(
-                pipeline.connections(decode_feed_df(src)).withColumn(
-                    "_file_idx", F.lit(i)
-                )
-            )
-        all_conns = reduce(lambda a, b: a.unionByName(b), per_file)
-        keyed = history_store.rule_key(all_conns).persist()
-
-        # Per-(key, service_day, poll) state. Duplicate rows of one key
-        # within one poll normally agree; if a malformed feed contradicts
-        # itself, max(struct) is the deterministic winner (the old
-        # sequential loop committed an arbitrary duplicate).
-        state = F.struct("departure_delay", "arrival_delay", "type")
-        per_state = keyed.groupBy("rule_key", "service_day", "_file_idx").agg(
-            F.max(state).alias("_state")
-        )
-        hist = history_store.state().select(
-            "rule_key",
-            "service_day",
-            F.struct("departure_delay", "arrival_delay", "type").alias("_hist"),
-        )
-        w = Window.partitionBy("rule_key", "service_day").orderBy("_file_idx")
-        chain = (
-            per_state.withColumn("_prev", F.lag("_state").over(w))
-            .join(hist, ["rule_key", "service_day"], "left")
-            .withColumn("_base", F.coalesce("_prev", "_hist"))
-        )
-
-        # Row-level differential vs each poll's baseline — the exact
-        # predicate HistoryStore.filter_new applies against the store
-        # (null-type baseline == no prior state -> fresh).
-        rows = keyed.join(
-            chain.select("rule_key", "service_day", "_file_idx", "_base"),
-            ["rule_key", "service_day", "_file_idx"],
-        )
-        fresh = rows.where(
-            F.col("_base.type").isNull()
-            | (F.col("_base.departure_delay") != F.col("departure_delay"))
-            | (F.col("_base.arrival_delay") != F.col("arrival_delay"))
-            | (F.col("_base.type") != F.col("type"))
+        # Each file is loaded by its own path: re-filtering batch_df would
+        # re-scan the whole batch source per file (O(files^2) bytes). The
+        # path is glob-escaped, since load() reads [, {, * as patterns.
+        conns = reduce(
+            DataFrame.unionByName,
+            [
+                pipeline.connections(
+                    decode_feed_df(
+                        spark.read.format("binaryFile")
+                        .schema(BINARYFILE_SCHEMA)
+                        .load(_glob_escape(path))
+                        .select(F.col("content").alias("payload"))
+                    )
+                ).withColumn("_file_idx", F.lit(i))
+                for i, (_mt, path) in enumerate(files)
+            ],
         ).persist()
-        n_fresh = fresh.count()
+        fresh = history_store.filter_new(conns, poll="_file_idx").persist()
 
         # replay safety: write BEFORE commit; on a replayed epoch whose
         # states were already committed (crash between commit and the
@@ -164,7 +114,7 @@ def stream_feeds_to_connections(
         # write preserves the previously written output. When fresh rows
         # exist, the DYNAMIC partition overwrite touches only the epoch
         # partitions it produces, so prior epochs survive replays.
-        if n_fresh > 0:
+        if fresh.count() > 0:
             (
                 fresh.withColumn(
                     "epoch", F.concat(F.lit(f"{epoch_id}-"), F.col("_file_idx"))
@@ -175,32 +125,9 @@ def stream_feeds_to_connections(
                 .partitionBy("epoch")
                 .parquet(out_dir)
             )
-            # ONE commit per micro-batch: each changed key's final state is
-            # the last poll's state (polls after the last fresh one were by
-            # definition unchanged), so committing the chain tail for keys
-            # with any fresh emission lands the same store contents as the
-            # old per-poll commits — in one generation instead of F.
-            wl = Window.partitionBy("rule_key", "service_day").orderBy(
-                F.col("_file_idx").desc()
-            )
-            last = (
-                chain.withColumn("_rn", F.row_number().over(wl))
-                .where(F.col("_rn") == 1)
-                .join(
-                    fresh.select("rule_key", "service_day").distinct(),
-                    ["rule_key", "service_day"],
-                )
-                .select(
-                    "rule_key",
-                    "service_day",
-                    F.col("_state.departure_delay").alias("departure_delay"),
-                    F.col("_state.arrival_delay").alias("arrival_delay"),
-                    F.col("_state.type").alias("type"),
-                )
-            )
-            history_store.commit(last)
+            history_store.commit(fresh, poll="_file_idx")
         fresh.unpersist()
-        keyed.unpersist()
+        conns.unpersist()
 
     writer = feeds.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

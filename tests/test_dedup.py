@@ -167,22 +167,6 @@ def test_neardup_clusters_keep_one(spark, docs):
     assert 6 not in comp
 
 
-def test_pii_scrub_redacts(spark):
-    from gtfsrt2lc_spark.functions.scrub import pii_counts, redact_pii
-
-    df = spark.createDataFrame(
-        [(1, "mail bob.smith+x@corp.example.org from 192.168.0.1 call +1-555-0199 end")],
-        "id long, text string",
-    )
-    c = pii_counts(F.col("text"))
-    row = df.select(
-        redact_pii(F.col("text")).alias("clean"),
-        c["n_emails"].alias("e"), c["n_ips"].alias("i"), c["n_phones"].alias("p"),
-    ).collect()[0]
-    assert row["clean"] == "mail <EMAIL> from <IP> call <PHONE> end"
-    assert (row["e"], row["i"], row["p"]) == (1, 1, 1)
-
-
 def test_latest_by_key_unique_order_never_shuffles_payload(spark):
     """Plan-shape guard for the latest-wins scale path: with unique_order
     the wide payload column must not appear in any Exchange input — the

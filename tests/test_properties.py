@@ -253,46 +253,6 @@ def test_extract_optimized_equivalence_unicode(html):
     assert extract_text_bytes(b) == _extract_reference(b)
 
 
-# ---- PII scrub properties (pure regex kernels, Spark-free) ----------------
-
-_pii_text = st.text(
-    alphabet=st.characters(blacklist_categories=("Cs",)), max_size=120
-)
-
-
-@given(text=_pii_text)
-@settings(max_examples=500, deadline=None)
-def test_pii_redaction_is_complete(text):
-    """After redact_pii no pattern matches remain — including PII the
-    redaction itself might accidentally synthesize at splice points."""
-    import re as _re
-
-    from gtfsrt2lc_spark.functions.scrub import (
-        EMAIL_RE, IPV4_RE, PHONE_RE, _REDACTIONS,
-    )
-
-    clean = text
-    for pattern, token in _REDACTIONS:
-        clean = _re.sub(pattern, token, clean)
-    for pattern in (EMAIL_RE, IPV4_RE, PHONE_RE):
-        assert _re.search(pattern, clean) is None, (text, clean, pattern)
-
-
-@given(text=_pii_text)
-@settings(max_examples=300, deadline=None)
-def test_pii_free_text_is_untouched(text):
-    import re as _re
-
-    from gtfsrt2lc_spark.functions.scrub import _REDACTIONS
-
-    if any(_re.search(p, text) for p, _ in _REDACTIONS):
-        return  # only asserting the no-PII case here
-    clean = text
-    for pattern, token in _REDACTIONS:
-        clean = _re.sub(pattern, token, clean)
-    assert clean == text
-
-
 # ---- BMP decode round-trip (pure numpy kernel) ----------------------------
 
 @given(

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from gtfsrt2lc_spark.fixtures import gtfs as G
+from gtfsrt2lc_spark.functions.gtfsrt_proto import encode_feed
 from gtfsrt2lc_spark.plans.gtfs import GtfsIndexes, Gtfsrt2LCPipeline, HistoryStore
 from gtfsrt2lc_spark.streaming.gtfs import (
     read_stream_connections,
@@ -102,35 +103,97 @@ def test_many_feeds_one_microbatch(spark, pipeline, tmp_path):
     assert read_stream_connections(spark, out).count() == sum(by_epoch.values())
 
 
+def _t04_feed(arrival_delay: int) -> bytes:
+    """One-trip feed: T04 with an arrival-only update at stop 2."""
+    return encode_feed(G.HEADER_TS, [{"entity_id": "e-t04", "trip_update": {
+        "trip": {"trip_id": "T04", "start_date": G.SERVICE_DAY},
+        "stop_time_updates": [{"stop_sequence": 2, "arrival_delay": arrival_delay}],
+    }}])
+
+
+def _rows_by_poll(spark, pipeline, root, feeds, one_batch: bool) -> dict:
+    """Drain ``feeds`` (in poll order) through a fresh stream and store,
+    either all in one micro-batch or one file per micro-batch; returns the
+    emitted rows keyed by poll index."""
+    feed_dir = root / "feeds"
+    feed_dir.mkdir(parents=True)
+    out, ckpt = str(root / "out"), str(root / "ckpt")
+    store = HistoryStore(spark, str(root / "history"))
+    for i, payload in enumerate(feeds):
+        (feed_dir / f"poll{i:02d}.pb").write_bytes(payload)
+        if not one_batch:
+            _drain(spark, str(feed_dir), pipeline, store, out, ckpt)
+    if one_batch:
+        _drain(spark, str(feed_dir), pipeline, store, out, ckpt)
+    got = {}
+    for r in read_stream_connections(spark, out).collect():
+        d = r.asDict()
+        # one batch: epoch "0-<i>"; one file per batch: epoch "<i>-0"
+        batch, poll = map(int, d.pop("epoch").split("-"))
+        got.setdefault(poll if one_batch else batch, []).append(tuple(sorted(d.items())))
+    return {k: sorted(v) for k, v in got.items()}
+
+
 def test_one_microbatch_matches_sequential(spark, pipeline, tmp_path):
     """The one-pass batched differential must equal draining the same feed
     sequence one file per micro-batch (the reference's sequential poll loop),
     including re-emission when a state changes back."""
-    seq = [G.gap_feed(), G.cancellation_feed(), G.cancellation_feed(), G.gap_feed()]
+    gap, cancel = G.gap_feed(), G.cancellation_feed()
+    t04 = [_t04_feed(ad) for ad in (60, 120, 120, 60)]
+    for name, feeds in (("mixed", [gap, cancel, cancel, gap]), ("t04", t04)):
+        batch = _rows_by_poll(spark, pipeline, tmp_path / name / "batch", feeds, True)
+        seq = _rows_by_poll(spark, pipeline, tmp_path / name / "seq", feeds, False)
+        assert batch == seq, name
+    # 60 -> 120 -> 120 (unchanged) -> 60 (changed back)
+    assert set(batch) == {0, 1, 3}, batch
 
-    def rows_by_poll(mode: str):
-        feed_dir = tmp_path / f"feeds_{mode}"
-        feed_dir.mkdir()
-        out, ckpt = str(tmp_path / f"out_{mode}"), str(tmp_path / f"ckpt_{mode}")
-        store = HistoryStore(spark, str(tmp_path / f"history_{mode}"))
-        if mode == "batch":
-            for i, payload in enumerate(seq):
-                (feed_dir / f"poll{i:02d}.pb").write_bytes(payload)
-            _drain(spark, str(feed_dir), pipeline, store, out, ckpt)
-        else:
-            for i, payload in enumerate(seq):
-                (feed_dir / f"poll{i:02d}.pb").write_bytes(payload)
-                _drain(spark, str(feed_dir), pipeline, store, out, ckpt)
-        got = {}
-        for r in read_stream_connections(spark, out).collect():
-            d = r.asDict()
-            ep = d.pop("epoch")
-            # batch mode: epoch "0-<i>"; sequential: epoch "<i>-0"
-            idx = int(ep.split("-")[1 if mode == "batch" else 0])
-            got.setdefault(idx, []).append(tuple(sorted(d.items())))
-        return {k: sorted(v) for k, v in got.items()}
 
-    assert rows_by_poll("batch") == rows_by_poll("seq")
+def test_cli_poll_matches_stream(spark, pipeline, tmp_path):
+    """``rt2lc --history`` polled once per feed emits, poll by poll, the
+    connections one stream micro-batch over the same feeds emits."""
+    import csv
+    import json
+    from datetime import datetime, timezone
+
+    from gtfsrt2lc_spark.cli import main
+
+    static = tmp_path / "static"
+    static.mkdir()
+    for name, rows in G.static_tables().items():
+        with open(static / f"{name}.txt", "w", newline="") as f:
+            w = csv.DictWriter(f, fieldnames=list(rows[0]))
+            w.writeheader()
+            w.writerows(rows)
+    feeds = [_t04_feed(ad) for ad in (60, 120, 120, 60)]
+
+    def iso_secs(s: str) -> int:
+        t = datetime.strptime(s, "%Y-%m-%dT%H:%M:%S.%fZ")
+        return int(t.replace(tzinfo=timezone.utc).timestamp())
+
+    cli = {}
+    for i, payload in enumerate(feeds):
+        feed, out = tmp_path / f"poll{i}.pb", tmp_path / f"cli{i}"
+        feed.write_bytes(payload)
+        assert main([
+            "rt2lc", "-r", str(feed), "-s", str(static), "-o", str(out), "-f", "json",
+            "-d", "--as-of", AS_OF.isoformat(), "--history", str(tmp_path / "history"),
+        ], spark=spark) == 0
+        recs = [json.loads(ln) for p in sorted(out.glob("part-*"))
+                for ln in p.read_text().splitlines() if ln]
+        if recs:
+            cli[i] = sorted(
+                (r["departureStop"]["stop_id"], r["arrivalStop"]["stop_id"],
+                 iso_secs(r["departureTime"]), iso_secs(r["arrivalTime"]), r["type"])
+                for r in recs
+            )
+
+    cols = ("departure_stop", "arrival_stop", "departure_time", "arrival_time", "type")
+    stream = {
+        i: sorted(tuple(dict(row)[c] for c in cols) for row in rows)
+        for i, rows in _rows_by_poll(spark, pipeline, tmp_path / "stream", feeds, True).items()
+    }
+    assert cli == stream
+    assert set(cli) == {0, 1, 3}
 
 
 def test_glob_metachar_feed_filename(spark, pipeline, tmp_path):
