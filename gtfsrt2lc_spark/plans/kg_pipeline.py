@@ -16,15 +16,18 @@ Everything is declarative DataFrame ops except stage 2 (Arrow pandas UDF, the
 sanctioned slow path). The KB-derived frames (resolved dictionary, fuzzy
 band and shingle tables, canonical map) are built once per pipeline and
 persisted; joins against them carry no strategy hint, so AQE broadcasts them
-while they are small and shuffles them once they are not. The wide shuffles
-that grow with pages are the final triple dedup (keyed by (s,p,o)) and the
-window for latest-wins (keyed by url) — both AQE-skew-splittable (hot domains
-salt naturally through url hashing).
+while they are small and shuffles them once they are not. The wide shuffle
+that grows with pages is the final triple dedup (keyed by (s,p,o)),
+AQE-skew-splittable; latest-wins is a dup-stats join whose stats side (one
+row per re-crawled url) is broadcast, so the html payload never shuffles.
 """
 
 from __future__ import annotations
 
+import atexit
 import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,6 +45,17 @@ from gtfsrt2lc_spark.operators.linking import (
 
 # a "mention" is a capitalized token span; predicates are a fixed phrase lexicon
 _MENTION = r"[A-Z][\w.]*(?: [A-Z][\w.]*)*"
+
+# Live driver-local stage dirs (the tempfile fallback of ``_stage``). A frame
+# returned by ``triples()`` reads them after its pipeline is gone, so they
+# are removed by ``cleanup()`` or, failing that, at interpreter exit.
+_LOCAL_STAGES: set[str] = set()
+
+
+@atexit.register
+def _remove_local_stages() -> None:
+    for path in _LOCAL_STAGES:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 class KGPipeline:
@@ -64,7 +78,6 @@ class KGPipeline:
         surfaces: DataFrame,
         sameas: DataFrame,
         predicates: dict[str, str],
-        broadcast_dups: bool = True,
         canonical_urls: bool = False,
         scratch_dir: str | None = None,
     ) -> None:
@@ -72,11 +85,6 @@ class KGPipeline:
         self.surfaces = surfaces
         self.sameas = sameas
         self.predicates = predicates
-        # latest-wins dedup escape hatch: a corpus whose RE-CRAWLED key set
-        # is itself too large to broadcast (billions of dup urls) sets this
-        # False and takes one payload shuffle instead of a possible
-        # broadcast OOM (operators/dedup.py latest_by_key contract).
-        self.broadcast_dups = broadcast_dups
         # Re-crawl dedup key normalization (functions/web.py policy): a real
         # crawl log stores `HTTP://WWW.x.com:80/a?utm_source=f` and
         # `http://x.com/a` as distinct urls for the same document. When True,
@@ -121,18 +129,14 @@ class KGPipeline:
     def extracted(self, pages: DataFrame) -> DataFrame:
         """Latest snapshot per url, with deterministically extracted text.
 
-        unique_order: (url, warc_ts) pairs are unique in a crawl log, so
-        the latest-wins dedup is a duplicate-keys-only stats join over two
-        pruned columns — the html payload never shuffles (the window form
-        moved every page byte through the exchange, and the earlier
-        all-keys winner semi-join silently degraded to the same payload
-        shuffle once the winner set outgrew the broadcast threshold;
-        measured as the pipeline's largest non-scaling I/O).
+        (url, warc_ts) pairs are unique in a crawl log, so the latest-wins
+        dedup is ``latest_by_key``'s duplicate-keys-only stats join over two
+        pruned columns — the html payload never shuffles.
 
         canonical_urls: url is rewritten to its canonical form (pure JVM
         expressions — stays inside the scan projection) before the dedup,
         so tracking-param/www/port variants of one document compete as one
-        key. Two variants sharing a warc_ts both survive the fast path's
+        key. Two variants sharing a warc_ts both survive latest_by_key's
         tie contract; the terminal (s,p,o) dedup absorbs them."""
         return self._latest(pages).withColumn(
             "extracted_text", extract_text_udf(F.col("html"))
@@ -144,13 +148,7 @@ class KGPipeline:
             pages = pages.withColumn(
                 "url", F.coalesce(canonicalize_url(F.col("url")), F.col("url"))
             )
-        return latest_by_key(
-            pages,
-            "url",
-            "warc_ts",
-            unique_order=True,
-            broadcast_dups=self.broadcast_dups,
-        )
+        return latest_by_key(pages, "url", "warc_ts")
 
     def _fact_lines_udf(self):
         """Arrow UDF: html -> only the extracted-text lines containing some
@@ -392,9 +390,8 @@ class KGPipeline:
             path = f"{self.scratch_dir.rstrip('/')}/stage-{self._stage_seq:04d}"
             via_fs = True
         else:
-            import tempfile
-
             path = tempfile.mkdtemp(prefix="kgstage_")
+            _LOCAL_STAGES.add(path)
             via_fs = False
         self._scratch.append((path, via_fs))
         df.write.mode("overwrite").parquet(path)
@@ -406,9 +403,9 @@ class KGPipeline:
         KB frames (``_link_index``, ``canonical_map``) outlive every run.
 
         Hadoop-FS scratch paths delete through the FileSystem API (works on
-        HDFS/S3A/local alike); tempfile fallbacks through shutil."""
-        import shutil
-
+        HDFS/S3A/local alike); tempfile fallbacks through shutil. A caller
+        that skips this still loses its tempfile fallbacks at interpreter
+        exit; ``scratch_dir`` stages are the caller's to remove."""
         from gtfsrt2lc_spark.functions import hadoop_fs
 
         for path, via_fs in self._scratch:
@@ -416,6 +413,7 @@ class KGPipeline:
                 hadoop_fs.delete(self._spark, path)
             else:
                 shutil.rmtree(path, ignore_errors=True)
+                _LOCAL_STAGES.discard(path)
         self._scratch.clear()
 
     # ---- stage 5+6 -------------------------------------------------------

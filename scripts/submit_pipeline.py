@@ -23,10 +23,6 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--warmup", action="store_true",
                     help="run the plan on a 1%% slice first (codegen + python workers), untimed")
-    ap.add_argument("--no-broadcast-dups", action="store_true",
-                    help="latest-wins dedup escape hatch (billion-dup-key "
-                         "corpora): winner selection via payload shuffle "
-                         "instead of the broadcast dup-stats join")
     ap.add_argument("--dirty-pages", type=int, default=0,
                     help="union N deterministic out-of-dictionary (typo'd) "
                          "pages into the corpus before the timed run, so the "
@@ -121,7 +117,6 @@ def main() -> None:
 
     pipe = KGPipeline(records, surfaces, sameas,
                       {ph: loc for ph, (loc, _, _) in PREDICATES.items()},
-                      broadcast_dups=not args.no_broadcast_dups,
                       canonical_urls=args.canonical_urls)
     pipe.canonical_map()  # KB prep amortized across runs, untimed
     if args.warmup:

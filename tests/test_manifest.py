@@ -120,6 +120,45 @@ def test_explicit_scratch_dir_used_and_cleaned(spark, corpus_dfs, corpus, tmp_pa
     assert os.listdir(scratch) == []
 
 
+_NO_CLEANUP_RUN = """
+import gc
+from gtfsrt2lc_spark import get_spark
+from gtfsrt2lc_spark.fixtures.pages import PREDICATES, build_corpus, corpus_dataframes
+from gtfsrt2lc_spark.plans.kg_pipeline import KGPipeline
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+pages, records, surfaces, sameas = corpus_dataframes(spark, build_corpus(n_pages=20))
+pipe = KGPipeline(records, surfaces, sameas,
+                  {ph: loc for ph, (loc, _, _) in PREDICATES.items()})
+tri = pipe.triples(pages)
+n1 = tri.count()
+del pipe
+gc.collect()
+print("COUNTS", n1, tri.count())
+"""
+
+
+def test_stage_dirs_removed_at_exit_without_cleanup(tmp_path):
+    """A pipeline dropped without cleanup() leaves no kgstage_* dir once
+    its process exits, and the frame it returned still reads its stages
+    after the pipeline object is gone."""
+    import glob
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run([sys.executable, "-c", _NO_CLEANUP_RUN], env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    counts = next(ln for ln in proc.stdout.splitlines() if ln.startswith("COUNTS"))
+    n1, n2 = map(int, counts.split()[1:])
+    assert n1 > 0 and n2 == n1
+    assert glob.glob(os.path.join(str(tmp_path), "kgstage_*")) == []
+
+
 def test_failed_run_releases_scratch_ownership(spark, corpus_dfs, tmp_path_factory):
     """A run that fails mid-pipeline must delete its owned _stage scratch and
     reset pipeline.scratch_dir, so a retry re-acquires a fresh scratch instead

@@ -343,15 +343,6 @@ def test_fuzzy_patch_recovers_dirty_corpus(spark, corpus_dfs, result_triples):
     assert got == result_triples | extra
 
 
-def test_broadcast_dups_escape_hatch(spark, corpus_dfs, result_triples):
-    """broadcast_dups=False (the billion-dup-key fallback) must change the
-    physical join strategy only — identical triples."""
-    pages, records, surfaces, sameas = corpus_dfs
-    preds = {phrase: local for phrase, (local, _, _) in PREDICATES.items()}
-    pipe = KGPipeline(records, surfaces, sameas, preds, broadcast_dups=False)
-    assert _triple_set(pipe, pages) == result_triples
-
-
 def test_link_fuzzy_prepped_equivalence(spark, corpus_dfs, corpus):
     """A precomputed FuzzyDictionary gives byte-identical links to the
     build-inline path, and serves multiple query batches."""

@@ -5,80 +5,6 @@ equivalence arguments in OPTIMIZATION_r07.md stay enforced, not asserted.
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-
-def _py_chunks(text: str, window: int) -> list[str]:
-    """Reference chunker: fixed window-word chunks of split(text, ' ')."""
-    words = text.split(" ")
-    return [
-        " ".join(words[i : i + window]) for i in range(0, len(words), window)
-    ]
-
-
-@pytest.mark.parametrize("window", [1, 3, 10])
-def test_paragraph_chunker_matches_python_reference(spark, window):
-    """The sequence/slice chunk loop (r7 rewrite of the arrays_zip shape)
-    reproduces python's slicing exactly — including empty strings from
-    consecutive spaces, exact-multiple lengths, and partial tails."""
-    from gtfsrt2lc_spark.operators.dedup import paragraph_dedup
-
-    texts = [
-        "",                       # split -> [''] -> one empty chunk
-        "one",
-        "a b c",
-        "a  b",                   # consecutive spaces -> empty token kept
-        " ".join(f"w{i}" for i in range(window * 3)),        # exact multiple
-        " ".join(f"w{i}" for i in range(window * 3 + 1)),    # partial tail
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    out = paragraph_dedup(df, "doc_id", "text", window=window)
-    got = {r["doc"]: r["n_paras"] for r in out.collect()}
-    expected = {i: len(_py_chunks(t, window)) for i, t in enumerate(texts)}
-    assert got == expected
-    # total kept across the corpus == number of DISTINCT chunks (first
-    # occurrence each), per the python reference
-    distinct = len({c for t in texts for c in _py_chunks(t, window)})
-    total_kept = sum(r["n_kept"] for r in out.collect())
-    assert total_kept == distinct
-
-
-def test_simhash32_matches_python_reference(spark):
-    """The single-fold balance-array simhash (r7 tree-shrink) equals an
-    independent bit-by-bit python model on the same token hashes."""
-    from gtfsrt2lc_spark.functions.hashing import poly_hash, simhash32, token_hashes
-
-    texts = ["alpha beta gamma", "alpha alpha", "x", "many words " * 20]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: r["s"]
-        for r in df.select(
-            "doc_id", simhash32(token_hashes(F.col("text"))).alias("s")
-        ).collect()
-    }
-
-    def py_poly(s: str) -> int:
-        h = 0
-        for ch in s:
-            h = (h * 31 + ord(ch)) % 2_147_483_647
-        return h
-
-    def py_simhash(text: str) -> int:
-        hashes = [py_poly(t) for t in text.split() if t]
-        out = 0
-        for b in range(32):
-            bal = sum(1 if (h >> b) & 1 else -1 for h in hashes)
-            if bal > 0:
-                out |= 1 << b
-        return out
-
-    assert got == {i: py_simhash(t) for i, t in enumerate(texts)}
-
 
 def test_mentions_single_regex_multi_sentence_line(spark, corpus_dfs):
     """The one-regexp_replace mention extraction (r7) still finds every
