@@ -1,18 +1,10 @@
-"""Deterministic, JVM-side hashing primitives (no Python on the hot path).
-
-Everything here is built from Spark SQL higher-order functions
-(``transform``/``aggregate``/``sequence``) over plain int64 arithmetic, so:
-  * the whole computation stays inside WholeStageCodegen (no UDF),
-  * an independent engine (DuckDB, for the driver oracle) can reproduce the
-    exact same values with the exact same arithmetic — unlike engine-native
-    ``hash()``/``xxhash64`` whose algorithms differ between engines.
+"""Deterministic hashing primitives built from Spark SQL Column expressions.
 
 Primitives:
-  poly_hash      — 31-polynomial rolling hash of a string mod 2^31-1
-                   (the "document fingerprinting" op)
-  token_hashes   — poly_hash per whitespace token -> array<bigint>
-  minhash_sig    — k-permutation MinHash signature over token hashes
-  simhash32      — 32-bit SimHash over token hashes
+  minhash_perms      — fixed (a, b) pairs of the MinHash permutations
+                       h(x) = (a*x + b) mod (2^31-1) (the fuzzy linker's)
+  tokens             — whitespace tokenization
+  word_ngram_hashes  — one xxhash64 key per word n-gram (decontamination)
 """
 
 from __future__ import annotations
@@ -25,99 +17,15 @@ from pyspark.sql import functions as F
 MOD = 2_147_483_647  # 2^31 - 1, prime
 
 
-def char_codes(col: Column) -> Column:
-    """array<int> of character code points (first-65536 plane ascii())."""
-    return F.transform(
-        F.sequence(F.lit(1), F.length(col)),
-        lambda i: F.ascii(col.substr(i, F.lit(1))),
-    )
-
-
-def poly_hash(col: Column) -> Column:
-    """h = fold(chars, 0, (acc, c) -> (acc*31 + c) mod (2^31-1))  :: bigint"""
-    return F.aggregate(
-        char_codes(col),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(31) + c.cast("long")) % F.lit(MOD),
-    )
-
-
 def tokens(col: Column) -> Column:
     """Whitespace tokenization (empty tokens dropped)."""
     return F.filter(F.split(col, r"\s+"), lambda t: F.length(t) > 0)
-
-
-def token_hashes(col: Column) -> Column:
-    """array<bigint> of per-token polynomial hashes."""
-    return F.transform(tokens(col), poly_hash)
 
 
 def minhash_perms(k: int, seed: int = 42) -> list[tuple[int, int]]:
     """Fixed (a, b) pairs for h_i(x) = (a*x + b) mod (2^31-1)."""
     rng = random.Random(seed)
     return [(rng.randrange(1, MOD), rng.randrange(0, MOD)) for _ in range(k)]
-
-
-def minhash_sig(hashes: Column, perms: list[tuple[int, int]]) -> Column:
-    """MinHash signature: array<bigint> of length k.
-
-    For each permutation i: min over token hashes of (a_i*h + b_i) mod p.
-    Empty token list -> array of p (sentinel), so empty docs never collide
-    with real ones.
-    """
-    def perm_min(a: int, b: int):
-        def step(acc, h):
-            return F.least(acc, (h * F.lit(a) + F.lit(b)) % F.lit(MOD))
-
-        return F.aggregate(hashes, F.lit(MOD).cast("long"), step)
-
-    return F.array(*[perm_min(a, b) for a, b in perms])
-
-
-def simhash32(hashes: Column) -> Column:
-    """32-bit SimHash packed into a bigint.
-
-    bit b set iff sum over tokens of (+1 if bit b of token-hash set else -1)
-    is > 0. Pure int64 arithmetic (bit tests on non-negative hashes),
-    mirrorable in SQL.
-
-    Tree-size discipline: the original form built 32 independent
-    ``aggregate`` folds — one per bit — each embedding its own copy of the
-    (already large) ``hashes`` subtree, so every query referencing a
-    simhash carried a ~32x-replicated expression tree through construction,
-    analysis and optimization: measured ~0.85 s of DRIVER time per query
-    run at local[32], dwarfing the executed stage. This form folds ONCE
-    into a 32-slot balance array (zip_with against a constant power-of-two
-    array) and packs the bits with a second constant-size fold — the
-    ``hashes`` subtree appears exactly once and planning drops to
-    milliseconds. Values are bit-identical: per-bit balances are the same
-    integer sums (h & 2^b != 0 == bit b set, hashes are non-negative), and
-    the final sum adds the same 2^b terms.
-    """
-    pow2 = F.array(*[F.lit(1 << b).cast("long") for b in range(32)])
-    balances = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 32),
-        lambda acc, h: F.zip_with(
-            acc,
-            pow2,
-            lambda a, p: a + F.when(h.bitwiseAND(p) != 0, F.lit(1)).otherwise(F.lit(-1)),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            balances,
-            pow2,
-            lambda bal, p: F.when(bal > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def hamming32(a: Column, b: Column) -> Column:
-    """Hamming distance between two 32-bit simhashes (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def word_ngram_hashes(toks: Column, n: int) -> Column:
@@ -129,27 +37,16 @@ def word_ngram_hashes(toks: Column, n: int) -> Column:
     lookups and one native hash, and every downstream distinct / broadcast
     / join moves 8-byte longs instead of ~80-byte strings. Tokens contain
     no whitespace (see ``tokens``), so distinct grams map to distinct keys
-    up to xxhash64's 2^-64 collision rate.
+    up to xxhash64's 2^-64 collision rate. xxhash64 is Spark-native, so use
+    this only where the hash never reaches the output (decontamination
+    counts distinct grams per doc).
 
-    EXCEPTION to this module's engine-reproducibility rule: xxhash64 is
-    Spark-native and NOT mirrorable in DuckDB — use this only where the
-    hash never reaches the output (e.g. decontamination, which counts
-    distinct grams per doc), so a string-gram oracle still verifies the
-    result exactly.
-
-    Inline-safety (why arrays_zip, not element_at): the original shape —
-    transform(sequence(...), i -> xxhash64(element_at(toks, i), ...,
-    element_at(toks, i+n-1))) — references the OUTER ``toks`` column n
-    times inside the lambda. Catalyst freely substitutes aliases into
-    lambdas (CollapseProject over Generate inputs, predicate pushdown), so
-    when ``toks`` is itself an expression (filter(split(text))) each
-    element_at re-tokenizes the whole document: O(tokens^2 * n) per row,
-    interpreted. A 50k-page corpus scan went from un-finishable (>380 s to
-    COUNT) to seconds by zipping n shifted slices instead — the lambda
-    touches only its own struct variable, so no optimizer rewrite can
-    re-inline the tokenizer into the per-window hot loop; the slices
-    evaluate ``toks`` a fixed n times per ROW, linear regardless of
-    context.
+    Inline-safety (why arrays_zip, not element_at): referencing the outer
+    ``toks`` n times inside the lambda lets Catalyst substitute the
+    tokenizer into each reference, re-tokenizing the whole document per
+    window (O(tokens^2 * n) per row). Zipping n shifted slices keeps the
+    lambda on its own struct variable, so ``toks`` is evaluated a fixed n
+    times per row.
     """
     width = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     zipped = F.arrays_zip(*[F.slice(toks, j + 1, width) for j in range(n)])

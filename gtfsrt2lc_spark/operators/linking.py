@@ -16,10 +16,10 @@ against LSH band buckets.
 
 from __future__ import annotations
 
-import random
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from gtfsrt2lc_spark.functions.hashing import MOD, minhash_perms
 
 # MinHash-LSH parameters: N_HASHES signature values in BANDS bands of
 # N_HASHES // BANDS rows, and the character-3-gram Jaccard floor of a match
@@ -27,11 +27,8 @@ N_HASHES = 16
 BANDS = 8
 SEED = 42
 JACCARD_THRESHOLD = 0.5
-MOD = 2_147_483_647  # 2^31 - 1, prime
 
-# fixed (a, b) pairs for the permutations h_i(x) = (a*x + b) mod MOD
-_rng = random.Random(SEED)
-_PERMS = [(_rng.randrange(1, MOD), _rng.randrange(0, MOD)) for _ in range(N_HASHES)]
+_PERMS = minhash_perms(N_HASHES, seed=SEED)
 
 
 def resolve_dictionary(surfaces: DataFrame) -> DataFrame:
